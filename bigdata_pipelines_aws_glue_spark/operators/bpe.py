@@ -2,28 +2,30 @@
 — learn byte-pair-encoding merges FROM the corpus, the step upstream
 of ``token_count_bpe`` (which applies a fixed tokenizer).
 
-Algorithm (Sennrich et al. 2016, the map-reduce formulation): collapse
-the corpus to its word VOCABULARY with frequencies (one corpus-sized
-shuffle, done once); represent each word as a character sequence plus
-a ``</w>`` terminal; then per merge round (a) count adjacent symbol
-pairs weighted by word frequency — work proportional to the VOCAB, not
-the corpus, (b) take the argmax pair (ties: count desc, pair asc),
-(c) apply the merge greedily left-to-right to every vocab word.
+Algorithm (Sennrich et al. 2016): collapse the corpus to its word
+VOCABULARY with frequencies (one corpus-sized shuffle); represent each
+word as a character sequence plus a ``</w>`` terminal; then per merge
+round (a) count adjacent symbol pairs by position, weighted by word
+frequency, (b) take the argmax pair (ties: count desc, pair asc in
+UTF-8 byte order), (c) apply the merge greedily left-to-right to every
+vocab word.
 
-Scale posture: after the initial word groupBy, every round touches
-only the vocabulary table (~1e6-1e7 rows at web scale — thousands of
-times smaller than the corpus). Pair counting shuffles (a, b, partial
-sum) triples; the per-round driver round-trip fetches only the
-AGGREGATED pair-count table (bounded by the distinct adjacent symbol
-pairs — the classic in-memory state of every BPE trainer, ~alphabet²
-at the start and shrinking), never corpus or vocab rows; the merge
-application is map-only (a JVM-side ``F.aggregate`` fold — no Python
-UDF). Vocab state stays a LAZY fold chain over the one eagerly
-checkpointed base vocabulary (optimization r16, guide §2.4/§5): with
-the base materialized, re-running k tiny array folds per round is
-far cheaper than the k eager-checkpoint blocking jobs the r15 form
-paid — per-round blocking jobs drop 3 -> 1 in the audit query and
-2 -> 1 in the silent trainer.
+Scale posture: Spark does the corpus-sized work — the word count
+before training, and applying the trained vocabulary to the corpus
+(a broadcast join in every consumer). Training touches only the
+vocabulary, so :func:`train_bpe` collects it ONCE (one bounded
+collect, one Spark action) and runs all ``NUM_MERGES`` rounds on the
+driver; per-round Spark jobs would each pay a driver<->JVM round trip
+for a few kilobytes of pair counts. The collect is capped at
+``MAX_VOCAB_WORDS`` distinct words. The trainer's Python heap peaks at
+about 0.75 KB per word while a merge is applied (tracemalloc over
+200,000 random words of 3-12 letters: 0.5 KB for the collected rows
+and symbol lists, plus the merged copy), so about 0.75 GB at the cap.
+A larger vocabulary raises :class:`VocabularyTooLarge` instead of
+spilling: the trainer has no out-of-core form. The trained merges and
+vocabulary re-enter Spark as Arrow-backed ``LocalRelation``s
+(``sources.local``), so no Python worker runs when consumers read
+them.
 
 Cross-engine determinism: all counts are exact integers; the DuckDB
 oracle replays the merge rounds as unrolled CTEs, applying each merge
@@ -39,20 +41,39 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from bigdata_pipelines_aws_glue_spark import registry
 from bigdata_pipelines_aws_glue_spark.operators.dedup import _tokens
+from bigdata_pipelines_aws_glue_spark.sources.local import local_frame
 from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
 
 #: merge rounds to learn. Small because the synthetic corpus has a
-#: ~31-word vocabulary; real runs set hundreds/thousands — the loop
-#: cost is per-round vocab work + one 1-row collect.
+#: ~31-word vocabulary; real runs set hundreds/thousands — each round
+#: is one pass over the driver-held vocabulary.
 NUM_MERGES = 8
 
 #: end-of-word marker (standard BPE — lets merges learn suffixes
 #: without crossing word boundaries).
 EOW = "</w>"
+
+#: most distinct words :func:`train_bpe` brings to the driver (module
+#: doc: about 0.75 KB of driver memory each at peak).
+MAX_VOCAB_WORDS = 1_000_000
+
+_MERGES_SCHEMA = (
+    "merge_rank int, left_sym string, right_sym string, "
+    "pair_count long, corpus_syms_after long"
+)
+_VOCAB_SCHEMA = "word string, freq long, syms array<string>"
+
+
+class VocabularyTooLarge(RuntimeError):
+    """The corpus has more distinct words than ``MAX_VOCAB_WORDS``,
+    the bound on what the BPE trainer holds on the driver."""
+
+
+# JVM-side forms of the symbol split, pair enumeration and merge.
+# The trainer runs on the driver; tests pin it to these folds.
 
 
 def _char_syms(word):
@@ -77,109 +98,115 @@ def _adjacent_pairs(syms):
     )
 
 
-def _merge_fold_cols(syms, a, b):
+def _merge_fold(syms, a: str, b: str):
     """Greedy left-to-right merge of adjacent (a, b) -> ab, as a
-    JVM-side fold, with the pair as COLUMNS (r15: lets the training
-    loop read the argmax from a broadcast 1-row frame instead of a
-    driver collect). ``F.get`` (0-based) returns NULL out of bounds,
-    so the empty-accumulator case falls through under ANSI mode."""
-    merged = F.concat(a, b)
+    JVM-side fold. ``F.get`` (0-based) returns NULL out of bounds, so
+    the empty-accumulator case falls through under ANSI mode."""
+    a, b = F.lit(a), F.lit(b)
     return F.aggregate(
         syms,
         F.array().cast("array<string>"),
         lambda acc, x: F.when(
             (F.get(acc, F.size(acc) - 1) == a) & (x == b),
             F.concat(
-                F.slice(acc, 1, F.size(acc) - 1), F.array(merged)
+                F.slice(acc, 1, F.size(acc) - 1), F.array(F.concat(a, b))
             ),
         ).otherwise(F.concat(acc, F.array(x))),
     )
 
 
-def _merge_fold(syms, a: str, b: str):
-    """:func:`_merge_fold_cols` with a literal pair (the audit
-    query's driver-loop form)."""
-    return _merge_fold_cols(syms, F.lit(a), F.lit(b))
+# The driver trainer.
 
 
-def _pair_counts(vocab: DataFrame) -> DataFrame:
-    """Aggregated (a, b, cnt) adjacent-pair frequencies over the
-    vocab — the bounded pair table both training loops fetch once
-    per round (r16)."""
-    return (
-        vocab.select(
-            "freq", F.explode(_adjacent_pairs(F.col("syms"))).alias("p")
-        )
-        .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .agg(F.sum("freq").alias("cnt"))
-    )
-
-
-def _argmax_pair(pair_rows):
-    """Python-side replica of ``orderBy(cnt desc, a asc, b asc)
-    .first()``: UTF-8 byte comparison == Spark's UTF8String binary
-    string ordering, so the selected merge is identical."""
-    return min(
-        pair_rows,
-        key=lambda r: (-r.cnt, r.a.encode("utf-8"), r.b.encode("utf-8")),
-    )
-
-
-def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Learn ``NUM_MERGES`` BPE merges from ``documents.text``.
-
-    Returns one row per round: the merged pair, its (position-counted)
-    frequency at selection time, and the corpus-wide symbol count
-    after applying it — a strict audit trail of the training run.
-    """
+def _collect_vocab(spark: SparkSession, sf_dir: str) -> list:
+    """``documents.text`` collapsed to its (word, freq) vocabulary on
+    the driver, at most ``MAX_VOCAB_WORDS`` rows. The top-k form is one
+    result job (AQE submits the word count's shuffle map stage as a
+    second) whose per-partition heaps, and the driver's merge of them,
+    hold at most ``MAX_VOCAB_WORDS + 1`` rows each."""
     docs = load_table(spark, sf_dir, "documents")
-    vocab = (
+    rows = (
         docs.select(F.explode(_tokens(F.col("text"))).alias("word"))
         .filter(F.length("word") > 0)
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
-        .select("word", "freq", _char_syms(F.col("word")).alias("syms"))
-        .localCheckpoint(eager=True)
+        .orderBy("word")
+        .limit(MAX_VOCAB_WORDS + 1)
+        .collect()
     )
-    # Optimization r16 (guide §2.4): ONE blocking job per round
-    # instead of three. Each round fetches the whole aggregated
-    # pair-count table (bounded by distinct adjacent symbol pairs —
-    # the in-memory state every BPE trainer keeps) and derives BOTH
-    # the argmax merge and the PREVIOUS round's ``corpus_syms_after``
-    # from it, via the exact integer identity
-    #     sum(freq * size(syms)) = sum(freq * n_pairs) + sum(freq)
-    # (size(syms) = n_pairs + 1 for every word). The merge folds
-    # chain LAZILY over the checkpointed base vocab — re-running k
-    # tiny array folds per round beats k eager-checkpoint jobs.
-    # Per-invocation blocking jobs drop 25 -> 11; same-session probe
-    # returned byte-identical rows for all three shapes tried.
-    total_freq = int(vocab.agg(F.sum("freq")).first()[0])
-    out_rows: list[list] = []
-    for rank in range(1, NUM_MERGES + 1):
-        pair_rows = _pair_counts(vocab).collect()
-        if rank > 1:
-            # pair totals over the (k-1)-times-merged vocab give the
-            # previous round's post-merge corpus symbol count
-            out_rows[-1][4] = sum(r.cnt for r in pair_rows) + total_freq
-        best = _argmax_pair(pair_rows)
-        vocab = vocab.withColumn(
-            "syms", _merge_fold(F.col("syms"), best.a, best.b)
+    if len(rows) > MAX_VOCAB_WORDS:
+        raise VocabularyTooLarge(
+            f"BPE training: the documents in {sf_dir} have more than "
+            f"{MAX_VOCAB_WORDS:,} distinct words (MAX_VOCAB_WORDS); the "
+            "trainer holds the whole vocabulary on the driver"
         )
-        out_rows.append([rank, best.a, best.b, int(best.cnt), 0])
-    out_rows[-1][4] = int(
-        vocab.agg(F.sum(F.col("freq") * F.size(F.col("syms")))).first()[0]
+    return rows
+
+
+def _pair_counts(vocab) -> dict[tuple[str, str], int]:
+    """Adjacent-pair frequencies: each position of each word counts
+    once, weighted by the word's frequency."""
+    counts: dict[tuple[str, str], int] = {}
+    for _, freq, syms in vocab:
+        for pair in zip(syms, syms[1:]):
+            counts[pair] = counts.get(pair, 0) + freq
+    return counts
+
+
+def _argmax_pair(counts: dict[tuple[str, str], int]) -> tuple[str, str]:
+    """Replica of ``orderBy(cnt desc, a asc, b asc).first()``: UTF-8
+    byte comparison == Spark's UTF8String binary string ordering (and
+    DuckDB's), so the selected merge is identical."""
+    return min(
+        counts,
+        key=lambda p: (-counts[p], p[0].encode("utf-8"), p[1].encode("utf-8")),
     )
-    out_rows = [tuple(r) for r in out_rows]
-    schema = T.StructType(
-        [
-            T.StructField("merge_rank", T.IntegerType()),
-            T.StructField("left_sym", T.StringType()),
-            T.StructField("right_sym", T.StringType()),
-            T.StructField("pair_count", T.LongType()),
-            T.StructField("corpus_syms_after", T.LongType()),
-        ]
+
+
+def _merge(syms: list[str], a: str, b: str) -> list[str]:
+    """:func:`_merge_fold` on the driver."""
+    out: list[str] = []
+    for x in syms:
+        if out and out[-1] == a and x == b:
+            out[-1] = a + b
+        else:
+            out.append(x)
+    return out
+
+
+def train_bpe(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """Learn ``NUM_MERGES`` BPE merges from ``documents.text``.
+
+    Returns ``(merges, vocab)``. ``merges`` has one row per round: the
+    merged pair, its (position-counted) frequency at selection time,
+    and the corpus-wide symbol count after applying it — a strict
+    audit trail of the training run. ``vocab`` is the final
+    ``(word, freq, syms)`` vocabulary. Training stops early, like the
+    oracle, if every word has become a single symbol. A query that
+    needs both frames calls this once."""
+    vocab = [
+        (r.word, r.freq, [*r.word, EOW]) for r in _collect_vocab(spark, sf_dir)
+    ]
+    merges = []
+    for rank in range(1, NUM_MERGES + 1):
+        counts = _pair_counts(vocab)
+        if not counts:
+            break
+        a, b = _argmax_pair(counts)
+        vocab = [(w, f, _merge(s, a, b)) for w, f, s in vocab]
+        after = sum(f * len(s) for _, f, s in vocab)
+        merges.append((rank, a, b, counts[(a, b)], after))
+    return (
+        local_frame(spark, merges, _MERGES_SCHEMA),
+        local_frame(spark, vocab, _VOCAB_SCHEMA),
     )
-    return spark.createDataFrame(out_rows, schema)
+
+
+def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The training audit trail (:func:`train_bpe`'s ``merges``)."""
+    return train_bpe(spark, sf_dir)[0]
 
 
 def _bpe_ctes() -> list[str]:
@@ -262,49 +289,13 @@ _BPE_UNIONS = "\nUNION ALL\n".join(
 BPE_ORACLE = "WITH " + ",\n".join(_bpe_ctes()) + "\n" + _BPE_UNIONS
 
 
-def _train_final_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The training loop of :func:`bpe_train_merges` without the
-    per-round corpus-symbol audit collects — returns the FINAL
-    (word, freq, syms) vocabulary after ``NUM_MERGES`` merges."""
-    docs = load_table(spark, sf_dir, "documents")
-    vocab = (
-        docs.select(F.explode(_tokens(F.col("text"))).alias("word"))
-        .filter(F.length("word") > 0)
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .select("word", "freq", _char_syms(F.col("word")).alias("syms"))
-        .localCheckpoint(eager=True)
-    )
-    # r15 measurement note: a broadcast-1-row-argmax variant (merge
-    # pair as columns via crossJoin, one blocking job per round) was
-    # tried and measured SLOWER (2.24 s vs 1.60 s at sf0.1) — the
-    # per-round broadcast exchange costs more than the extra tiny
-    # .first() job it saves. Kept the driver-collect form.
-    # r16 (guide §2.4): the per-round eager vocab checkpoint is gone —
-    # merge folds chain lazily over the checkpointed base, so each
-    # round is ONE blocking job (the pair-table fetch + Python argmax,
-    # replicating the orderBy tie-break byte-exactly) re-running at
-    # most NUM_MERGES tiny array folds over the materialized vocab
-    # rows. One final checkpoint keeps the multiply-scanned result
-    # cheap for consumers. Per-invocation blocking jobs 17 -> 10;
-    # warm-floor probe 1.57 -> 1.46-1.49 s at sf0.1 (the win is
-    # mostly the removed per-round barrier, which matters more as
-    # per-job overhead grows with cluster size).
-    for _ in range(NUM_MERGES):
-        best = _argmax_pair(_pair_counts(vocab).collect())
-        vocab = vocab.withColumn(
-            "syms", _merge_fold(F.col("syms"), best.a, best.b)
-        )
-    return vocab.localCheckpoint(eager=True)
-
-
 def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Close the train->apply loop: ENCODE every document with the
     merges just learned from this corpus (``token_count_bpe`` applies
     a FIXED tokenizer; this applies the trained one). Application is
     a broadcast join of the doc word stream against the final
     (word -> symbols) vocabulary — the 100 TB shape: the vocab is
-    bounded (1e6-1e7 rows at web scale), the corpus never carries
+    bounded (``MAX_VOCAB_WORDS`` rows), the corpus never carries
     symbol arrays, and encoding adds zero extra shuffles beyond the
     word explode's per-doc re-aggregation.
 
@@ -314,7 +305,7 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer ppm — all integers, hash-exact across engines."""
     from bigdata_pipelines_aws_glue_spark.hints import maybe_broadcast
 
-    vocab = _train_final_vocab(spark, sf_dir).select(
+    vocab = train_bpe(spark, sf_dir)[1].select(
         "word", F.size("syms").alias("n_syms"), F.length("word").alias("wlen")
     )
     docs = load_table(spark, sf_dir, "documents")

@@ -41,6 +41,7 @@ from bigdata_pipelines_aws_glue_spark.operators.text import (
     GOPHER_STOPWORDS,
     gopher_flags,
 )
+from bigdata_pipelines_aws_glue_spark.sources.local import local_frame
 from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
 
 GD_ROUNDS = 8
@@ -147,8 +148,8 @@ def quality_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     correctly (integer — immune to float ulps). The loss must fall
     and accuracy rise as the student absorbs the Gopher gate."""
     _, hist = _train(spark, sf_dir)
-    df = spark.createDataFrame(
-        hist, "round int, mean_nll double, n_correct long"
+    df = local_frame(
+        spark, hist, "round int, mean_nll double, n_correct long"
     )
     return df.select(
         "round", stable_round(F.col("mean_nll"), 6).alias("mean_nll"),
@@ -161,7 +162,7 @@ def quality_classifier_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     would broadcast to grade the full corpus map-only."""
     w, _ = _train(spark, sf_dir)
     rows = [(name, w[j]) for j, (name, _s) in enumerate(FEATURES)]
-    df = spark.createDataFrame(rows, "feature string, weight double")
+    df = local_frame(spark, rows, "feature string, weight double")
     return df.select(
         "feature", stable_round(F.col("weight"), 6).alias("weight")
     )

@@ -26,6 +26,7 @@ from bigdata_pipelines_aws_glue_spark.operators.dedup import (
     _shingles,
     _tokens,
 )
+from bigdata_pipelines_aws_glue_spark.sources.local import local_frame
 from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
 
 SEQ_LEN = 512
@@ -593,7 +594,8 @@ def greedy_coverage_select(
         frac = math.floor(cum / total * 1e6 + 0.5) / 1e6
         rows.append((rnd, b["doc_id"], b["gain"], cum, frac))
         selected.append(b["doc_id"])
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "sel_round int, doc_id long, gain long, cum_covered long, "
         "coverage_frac double",
@@ -672,7 +674,8 @@ def greedy_coverage_batched(
         frac = math.floor(cum / total * 1e6 + 0.5) / 1e6
         for rank, b in enumerate(best, 1):
             rows.append((rnd, rank, b["doc_id"], b["gain"], cum, frac))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "sel_round int, pick_rank int, doc_id long, gain long, "
         "cum_covered long, coverage_frac double",

@@ -26,6 +26,7 @@ from bigdata_pipelines_aws_glue_spark.functions.rounding import (
     quantized_sum,
     stable_round,
 )
+from bigdata_pipelines_aws_glue_spark.sources.local import local_frame
 from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
 
 SESSION_GAP = "4 hours"
@@ -597,7 +598,8 @@ def markov_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((rr["from_type"], rr["to_type"]), rr["n"]) for rr in rows
         )
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "from_type string, to_type string, n_transitions long, "
         "p_transition double, stationary_from double",

@@ -61,7 +61,7 @@ from bigdata_pipelines_aws_glue_spark.hints import maybe_broadcast
 from bigdata_pipelines_aws_glue_spark.operators.bpe import (
     NUM_MERGES,
     _bpe_ctes,
-    _train_final_vocab,
+    train_bpe,
 )
 from bigdata_pipelines_aws_glue_spark.operators.dedup import _tokens
 from bigdata_pipelines_aws_glue_spark.operators.markup import (
@@ -73,8 +73,8 @@ from bigdata_pipelines_aws_glue_spark.operators.markup import (
 from bigdata_pipelines_aws_glue_spark.operators.packing import (
     DOCS_PER_SHARD,
     SEQ_BUDGET,
-    _pack_fold,
     _pack_step,
+    _packed,
 )
 from bigdata_pipelines_aws_glue_spark.operators.text import (
     GOPHER_MAX_BULLET_RATIO,
@@ -210,7 +210,7 @@ def _survivor_tokens(
     """(doc_id, tok, n_oov): learned-BPE token counts of the
     quality-surviving docs' CONTENT, with the loud character fallback
     for OOV words (module doc)."""
-    vocab = _train_final_vocab(spark, sf_dir).select(
+    vocab = train_bpe(spark, sf_dir)[1].select(
         "word", F.size("syms").alias("n_syms")
     )
     kept = curated.filter(gopher_keep(F.col("content")))
@@ -230,25 +230,6 @@ def _survivor_tokens(
     )
 
 
-def _funnel_packed(toks: DataFrame) -> DataFrame:
-    """Next-fit packing of the survivors (``packing._pack_fold``
-    verbatim; survivor shards are sparse — gaps where dedup/quality
-    dropped docs — but never exceed DOCS_PER_SHARD entries)."""
-    shards = (
-        toks.select(
-            F.floor(F.col("doc_id") / F.lit(DOCS_PER_SHARD))
-            .cast("long")
-            .alias("shard"),
-            F.struct(F.col("doc_id"), F.col("tok")).alias("s"),
-        )
-        .groupBy("shard")
-        .agg(F.array_sort(F.collect_list("s")).alias("lst"))
-    )
-    return shards.select(
-        "shard", F.explode(_pack_fold(F.col("lst"))).alias("q")
-    )
-
-
 # ------------------------------------------------ attested queries
 
 
@@ -259,7 +240,7 @@ def corpus_funnel_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode. One linear plan, no branching."""
     curated = _host_cap(_dedup_urls(_base_frame(spark, sf_dir)))
     toks = _survivor_tokens(spark, sf_dir, curated)
-    return _funnel_packed(toks).select(
+    return _packed(toks).select(
         "shard",
         F.col("q.seq_idx").alias("seq_idx"),
         F.col("q.n_docs").alias("n_docs"),
@@ -300,7 +281,7 @@ def corpus_funnel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_oov").cast("long").alias("n_oov_words"),
         F.sum("tok").cast("long").alias("n_input_tokens"),
     )
-    e = _funnel_packed(toks).agg(
+    e = _packed(toks).agg(
         F.count(F.lit(1)).cast("long").alias("n_sequences"),
         F.sum("q.n_tokens").cast("long").alias("n_packed_tokens"),
         F.sum("q.n_trunc").cast("long").alias("n_truncated_tokens"),

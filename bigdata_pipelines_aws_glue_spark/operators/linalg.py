@@ -41,6 +41,7 @@ from bigdata_pipelines_aws_glue_spark.functions.rounding import (
     dec_qsum,
     stable_round,
 )
+from bigdata_pipelines_aws_glue_spark.sources.local import local_frame
 from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
 
 #: (column, scale-to-integer factor) — all exact at 2 decimals.
@@ -241,7 +242,8 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     lam = q9sum(cvi * v)
 
     r8 = lambda x: float(np.floor(x * 1e8 + 0.5)) / 1e8  # noqa: E731
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(i), r8(v[i]), r8(lam)) for i in range(d)],
         "dim long, component double, eigenvalue double",
     )

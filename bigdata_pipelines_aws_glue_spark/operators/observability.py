@@ -27,6 +27,7 @@ from bigdata_pipelines_aws_glue_spark.functions.rounding import (
     dec_qsum,
     stable_round,
 )
+from bigdata_pipelines_aws_glue_spark.sources.local import local_frame
 from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
 
 #: q6-style revenue-opportunity predicate (the registry's q6 shape)
@@ -71,7 +72,8 @@ def observed_metrics_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     row = agg.collect()[0]  # the action that materializes the metrics
     m = obs.get
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         [
             (
                 int(m["n_scanned"]),

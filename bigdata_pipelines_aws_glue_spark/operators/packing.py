@@ -45,19 +45,20 @@ doc_ids — the file/partition a real pipeline packs within), and
 shards pack independently in parallel: one ``groupBy(shard)``
 shuffle carrying only (doc_id, token_count) pairs — the corpus text
 never moves — then the greedy fold runs as a single JVM
-``F.aggregate`` expression per shard (the ``warc.py``/``bpe.py``
-fold pattern; no Python workers). Sequences never cross shard
+``F.aggregate`` expression per shard (the ``warc.py`` fold
+pattern; no Python workers). Sequences never cross shard
 boundaries, so the result is deterministic AND embarrassingly
 parallel; the shard list is bounded (<= DOCS_PER_SHARD structs) by
 doc_id arithmetic, not by trust.
 
-Token counts are the LEARNED-BPE stream: ``_train_final_vocab``'s
-merges applied via the bounded vocab broadcast join (the
-``bpe_encode_corpus`` shape). The DuckDB oracle replays BPE training
-through the shared ``_bpe_ctes()`` chain, then unrolls the greedy
-fold ``DOCS_PER_SHARD`` times as chained CTEs (the established
-unrolled-replay pattern) — the hash match proves tokenization AND
-the packing recurrence are engine-exact.
+Token counts are the LEARNED-BPE stream: ``bpe.train_bpe``'s final
+vocabulary, trained once per query call, applied via the bounded
+vocab broadcast join (the ``bpe_encode_corpus`` shape). The DuckDB
+oracle replays BPE training through the shared ``_bpe_ctes()``
+chain, then unrolls the greedy fold ``DOCS_PER_SHARD`` times as
+chained CTEs (the established unrolled-replay pattern) — the hash
+match proves tokenization AND the packing recurrence are
+engine-exact.
 
 Conservation (pinned by pytest, visible in ``packing_stats``):
 ``n_packed_tokens + n_truncated_tokens == n_input_tokens`` — the
@@ -75,7 +76,7 @@ from bigdata_pipelines_aws_glue_spark.hints import maybe_broadcast
 from bigdata_pipelines_aws_glue_spark.operators.bpe import (
     NUM_MERGES,
     _bpe_ctes,
-    _train_final_vocab,
+    train_bpe,
 )
 from bigdata_pipelines_aws_glue_spark.operators.dedup import _tokens
 from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
@@ -101,7 +102,7 @@ def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, tok): learned-BPE token count per document — the
     ``bpe_encode_corpus`` apply step reduced to the one column
     packing needs."""
-    vocab = _train_final_vocab(spark, sf_dir).select(
+    vocab = train_bpe(spark, sf_dir)[1].select(
         "word", F.size("syms").alias("n_syms")
     )
     docs = load_table(spark, sf_dir, "documents")
@@ -157,9 +158,10 @@ def _pack_fold(lst: Column) -> Column:
     return F.aggregate(lst, F.array().cast(_SEQ_TYPE), step)
 
 
-def _packed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(shard, q) exploded sequence structs."""
-    toks = _doc_tokens(spark, sf_dir)
+def _packed(toks: DataFrame) -> DataFrame:
+    """(shard, q) next-fit sequence structs of a (doc_id, tok) table.
+    Shards may be sparse (doc_id gaps) but never exceed
+    DOCS_PER_SHARD entries."""
     shards = (
         toks.select(
             F.floor(F.col("doc_id") / F.lit(DOCS_PER_SHARD))
@@ -182,7 +184,7 @@ def pack_training_sequences(
     sequence index, how many docs it holds, packed token count,
     clipped-token count, integer-ppm fill rate, and the doc_id span
     — the manifest a downstream batch loader consumes."""
-    return _packed(spark, sf_dir).select(
+    return _packed(_doc_tokens(spark, sf_dir)).select(
         "shard",
         F.col("q.seq_idx").alias("seq_idx"),
         F.col("q.n_docs").alias("n_docs"),
@@ -205,7 +207,7 @@ def packing_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``n_packed_tokens + n_truncated_tokens == n_input_tokens``) is
     checkable from the emitted row alone."""
     toks = _doc_tokens(spark, sf_dir)
-    seqs = _packed(spark, sf_dir)
+    seqs = _packed(toks)
     a = toks.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.sum("tok").cast("long").alias("n_input_tokens"),
@@ -286,8 +288,9 @@ def _firstfit_fold(lst: Column) -> Column:
     return F.aggregate(lst, F.array().cast(_SEQ_TYPE), step)
 
 
-def _packed_ff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    toks = _doc_tokens(spark, sf_dir)
+def _packed_ff(toks: DataFrame) -> DataFrame:
+    """(shard, q) first-fit sequence structs of a (doc_id, tok)
+    table."""
     shards = (
         toks.select(
             F.floor(F.col("doc_id") / F.lit(DOCS_PER_SHARD))
@@ -311,7 +314,7 @@ def pack_sequences_firstfit(
     doc ASSIGNED (first-fit doc spans interleave across sequences,
     so [first_doc_id, last_doc_id] is an assignment span, not a
     contiguous range)."""
-    return _packed_ff(spark, sf_dir).select(
+    return _packed_ff(_doc_tokens(spark, sf_dir)).select(
         "shard",
         F.col("q.seq_idx").alias("seq_idx"),
         F.col("q.n_docs").alias("n_docs"),
@@ -328,13 +331,12 @@ def pack_sequences_firstfit(
     )
 
 
-def _packed_ffd(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _packed_ffd(toks: DataFrame) -> DataFrame:
     """First-fit over the shard's docs sorted by tok DESC, doc_id ASC
     — the decreasing visit order is the only difference from
     ``_packed_ff``. The sort key rides inside the collected struct
     (``negtok`` first, so the plain lexicographic ``array_sort``
     realizes (tok desc, doc_id asc)); the fold itself is unchanged."""
-    toks = _doc_tokens(spark, sf_dir)
     shards = (
         toks.select(
             F.floor(F.col("doc_id") / F.lit(DOCS_PER_SHARD))
@@ -368,7 +370,7 @@ def pack_sequences_ffd(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``pack_sequences_firstfit``; ``first_doc_id``/``last_doc_id`` are
     the first/last docs ASSIGNED in the decreasing visit order (an
     assignment span, not a doc_id range)."""
-    return _packed_ffd(spark, sf_dir).select(
+    return _packed_ffd(_doc_tokens(spark, sf_dir)).select(
         "shard",
         F.col("q.seq_idx").alias("seq_idx"),
         F.col("q.n_docs").alias("n_docs"),
@@ -406,9 +408,10 @@ def packing_fill_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("q.n_tokens").cast("long").alias(f"{tag}_packed_tokens"),
         )
 
-    nf = fills(_packed(spark, sf_dir), "nf")
-    ff = fills(_packed_ff(spark, sf_dir), "ff")
-    ffd = fills(_packed_ffd(spark, sf_dir), "ffd")
+    toks = _doc_tokens(spark, sf_dir)
+    nf = fills(_packed(toks), "nf")
+    ff = fills(_packed_ff(toks), "ff")
+    ffd = fills(_packed_ffd(toks), "ffd")
     # chained 1-row x 1-row scalar crossJoins (the packing_stats
     # shape — metadata-sized by construction).
     return nf.crossJoin(ff).crossJoin(ffd).select(

@@ -34,6 +34,7 @@ from bigdata_pipelines_aws_glue_spark.functions.rounding import (
     sql_round,
     stable_round,
 )
+from bigdata_pipelines_aws_glue_spark.sources.local import local_frame
 from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
 
 #: modulus mapping the 60-bit md5 prefix onto [0, M) uniforms
@@ -109,7 +110,7 @@ def deterministic_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     for b in sorted(counts):
         offsets.append((b, acc))
         acc += counts[b]
-    offsets_df = spark.createDataFrame(offsets, "_bucket INT, _offset BIGINT")
+    offsets_df = local_frame(spark, offsets, "_bucket INT, _offset BIGINT")
     # job 2: rank inside each bucket in parallel, add the offset
     w = Window.partitionBy("_bucket").orderBy("shuffle_hash", "doc_id")
     return (

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from bigdata_pipelines_aws_glue_spark import registry
 from bigdata_pipelines_aws_glue_spark.functions.rounding import stable_round
+from bigdata_pipelines_aws_glue_spark.sources.local import local_frame
 from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
 
 #: cell side and search radius in degrees; R <= G is the exactness
@@ -205,7 +206,8 @@ def spatial_point_in_polygon(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_POLYGONS``."""
     cust = _synth_points(load_table(spark, sf_dir, "customer"), "c_custkey")
     edges = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             _polygon_edges(),
             "pid int, y1 double, x1 double, y2 double, x2 double",
         )

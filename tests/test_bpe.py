@@ -12,15 +12,18 @@ from bigdata_pipelines_aws_glue_spark.operators.bpe import (
 )
 
 
+#: (input syms, pair, expected) — overlap runs merge 1st/3rd/...
+MERGE_CASES = [
+    (["a", "a", "a"], ("a", "a"), ["aa", "a"]),
+    (["a", "a", "a", "a"], ("a", "a"), ["aa", "aa"]),
+    (["x", "a", "b", "a", "b"], ("a", "b"), ["x", "ab", "ab"]),
+    (["a", "b", "b"], ("a", "b"), ["ab", "b"]),
+    (["b", "a"], ("a", "b"), ["b", "a"]),
+]
+
+
 def test_merge_fold_greedy_left_to_right(spark):
-    cases = [
-        # (input syms, pair, expected) — overlap runs merge 1st/3rd/...
-        (["a", "a", "a"], ("a", "a"), ["aa", "a"]),
-        (["a", "a", "a", "a"], ("a", "a"), ["aa", "aa"]),
-        (["x", "a", "b", "a", "b"], ("a", "b"), ["x", "ab", "ab"]),
-        (["a", "b", "b"], ("a", "b"), ["ab", "b"]),
-        (["b", "a"], ("a", "b"), ["b", "a"]),
-    ]
+    cases = MERGE_CASES
     df = spark.createDataFrame(
         [(i, syms) for i, (syms, _, _) in enumerate(cases)], "id int, syms array<string>"
     )
@@ -32,6 +35,29 @@ def test_merge_fold_greedy_left_to_right(spark):
             .m
         )
         assert got == want, (syms, (a, b), got, want)
+
+
+def test_driver_merge_matches_fold_cases():
+    from bigdata_pipelines_aws_glue_spark.operators.bpe import _merge
+
+    for syms, (a, b), want in MERGE_CASES:
+        assert _merge(syms, a, b) == want, (syms, (a, b))
+
+
+def test_argmax_pair_tie_break_is_utf8_byte_order():
+    """Equal counts fall to (a, b) ascending in UTF-8 bytes, as in
+    Spark's and DuckDB's string ordering: 'Z' < 'a' < 'é'."""
+    from bigdata_pipelines_aws_glue_spark.operators.bpe import _argmax_pair
+
+    assert _argmax_pair({("é", "x"): 3, ("a", "x"): 3, ("Z", "y"): 2}) == (
+        "a",
+        "x",
+    )
+    assert _argmax_pair({("é", "x"): 3, ("a", "y"): 3, ("a", "x"): 3}) == (
+        "a",
+        "x",
+    )
+    assert _argmax_pair({("Z", "x"): 1, ("a", "x"): 1}) == ("Z", "x")
 
 
 def test_bpe_training_audit_trail(spark, sf_dir):
@@ -116,3 +142,44 @@ def test_encode_totals_match_training_audit(spark, sf_dir):
         assert r["n_bpe_tokens"] <= r["n_char_syms"]  # merges only shrink
         assert r["n_bpe_tokens"] >= r["n_words"]  # at least 1 sym/word
         assert r["compression_ppm"] <= 1000000
+
+
+def test_vocab_bound_raises_named_error(spark, sf_dir, monkeypatch):
+    """Past ``MAX_VOCAB_WORDS`` distinct words the trainer refuses to
+    collect the vocabulary, with a named error that states the bound."""
+    import pytest
+
+    from bigdata_pipelines_aws_glue_spark.operators import bpe
+
+    monkeypatch.setattr(bpe, "MAX_VOCAB_WORDS", 5)
+    with pytest.raises(bpe.VocabularyTooLarge) as err:
+        bpe.train_bpe(spark, sf_dir)
+    assert str(err.value) == (
+        f"BPE training: the documents in {sf_dir} have more than 5 "
+        "distinct words (MAX_VOCAB_WORDS); the trainer holds the whole "
+        "vocabulary on the driver"
+    )
+
+
+def test_training_call_submits_one_job(spark, sf_dir):
+    """One training call is one Spark job: the bounded vocabulary
+    collect. AQE is off while counting because it submits each
+    shuffle's map stage as a job of its own (two jobs here)."""
+    from bigdata_pipelines_aws_glue_spark.operators.bpe import train_bpe
+    from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
+
+    # the first load of a table in a session runs a parquet footer job
+    load_table(spark, sf_dir, "documents")
+    sc = spark.sparkContext
+    group = "bpe-train-one-call"
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup(group, "one BPE training call")
+    try:
+        merges, vocab = train_bpe(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert merges.count() == NUM_MERGES
+    assert vocab.count() > 0

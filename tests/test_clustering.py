@@ -43,8 +43,8 @@ def test_assign_clusters_singletons_and_canonical(spark):
         1: (1, True), 2: (1, False), 3: (1, False),
         7: (7, True), 9: (9, True),
     }
-    kept = [d for d, (_, canon) in out.items() if canon]
-    assert kept == sorted(kept)
+    # collect() order depends on partitioning; compare as a set
+    assert sorted(d for d, (_, canon) in out.items() if canon) == [1, 7, 9]
 
 
 def test_cc_label_columns_only_in_shuffle(spark):

@@ -4,13 +4,16 @@ Spark session needed, so it runs in seconds at sf0.01."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+# tools/ of the checkout this file sits in (conftest adds its root)
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
+)
 
 
 @pytest.fixture(scope="module")

@@ -24,7 +24,8 @@ import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file sits in
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
