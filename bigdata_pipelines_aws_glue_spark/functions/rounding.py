@@ -84,7 +84,3 @@ def quantized_avg(col: Column | str, q: int = 4) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return quantized_sum(c, q) / F.count(F.lit(1))
 
-
-def sql_quantized_avg(expr: str, q: int = 4) -> str:
-    """DuckDB twin of :func:`quantized_avg`."""
-    return f"({sql_quantized_sum(expr, q)} / count(*))"

@@ -1,31 +1,31 @@
-"""Iterative graph analytics on DataFrames: weighted PageRank over
-the customer–supplier trade graph (SURVEY.md §2 adjacency — the
-iterative-algorithm family next to k-means/BPE; method is the public
-Page et al. 1999 formulation).
+"""Iterative graph analytics on DataFrames: the one PageRank kernel
+(:func:`pagerank`) and its DuckDB twin (``PAGERANK_CTES``), weighted
+PageRank over the customer–supplier trade graph (SURVEY.md §2
+adjacency — the iterative-algorithm family next to k-means/BPE; method
+is the public Page et al. 1999 formulation), the part co-occurrence
+triangle census and k-hop reachability.
 
-Graph: an undirected bipartite graph built from the fact tables —
-customer ``o_custkey`` is linked to supplier ``l_suppkey`` with
+Trade graph: an undirected bipartite graph built from the fact tables
+— customer ``o_custkey`` is linked to supplier ``l_suppkey`` with
 weight = number of lineitems traded between them (lineitem ⋈ orders,
 grouped). Undirected means both directions are materialized as
 directed edges, so every node has out-degree ≥ 1 — no dangling-mass
 special case. Supplier node ids are offset by ``SUPPLIER_NODE_BASE``
 to share one id space with customers.
 
-Rank update (damping d, n nodes):
+Rank update (damping d = ``PR_DAMP``, n source nodes):
 ``r'(v) = (1-d)/n + d·Σ_{u→v} r(u)·w(u,v)/W(u)``
 with the incoming sum 1e-9-quantized (long-summed — aggregation-order
 independent, exact in both engines), which is what lets the DuckDB
 twin replay all ``PR_ITERS`` rounds as unrolled CTEs and the result
 hash-check despite being an iterative float algorithm.
 
-Scale posture (100 TB): the edge list shuffles once on (cust, supp)
-to aggregate weights; each iteration is an equi-join of edges against
-the n-row rank table keyed by src plus a keyed aggregation on dst —
-the standard Pregel-as-join shape. Rank state is checkpointed per
-round to keep lineage flat (same discipline as ``kmeans_fit``). The
-final top-N is TakeOrderedAndProject, never a global sort. The
-single driver scalar (node count, for the teleport constant) is the
-iterative-loop probe ``kmeans_fit``/``pq_train`` already model.
+Scale posture (100 TB): each round is an equi-join of the normalized
+edge list against the rank table keyed by src plus a keyed
+aggregation on dst — the standard Pregel-as-join shape. The final
+top-N is TakeOrderedAndProject, never a global sort. The single driver
+scalar (node count, for the teleport constant) is the iterative-loop
+probe ``kmeans_fit``/``pq_train`` already model.
 """
 
 from __future__ import annotations
@@ -50,6 +50,93 @@ SUPPLIER_NODE_BASE = 1_000_000
 _Q9 = 1e9
 
 
+def pagerank(edges: DataFrame) -> DataFrame:
+    """The ``(node, r)`` PageRank vector of the weighted directed
+    graph ``edges`` = ``(src, dst, w)`` after ``PR_ITERS`` synchronous
+    rounds at damping ``PR_DAMP``, each round's incoming sum quantized
+    to 1e-9 (:func:`dec_qsum`), so the vector is bit-identical under
+    any partitioning and in the DuckDB replay (``PAGERANK_CTES``).
+
+    The edge weight is normalized per source, ``w / Σ_src w``. The
+    teleport term divides by the number of source nodes. There is no
+    dangling-mass redistribution: a node with no out-edges leaks its
+    mass, and a node with no in-edges holds no rank after round 1 (it
+    is absent from the returned vector).
+
+    Materialization rule: materialize state that is read more than
+    once per round, or whose recomputation would rescan a base table.
+    Here that is the normalized edge list (joined by every round) and
+    the returned vector (callers read it more than once); the rounds
+    in between chain lazily, since each is read once, by the next.
+    The per-source weight total is a window over the same shuffle as
+    the normalization, so ``edges`` itself is read once and needs no
+    checkpoint of its own."""
+    e = edges.select(
+        "src",
+        "dst",
+        (
+            F.col("w").cast("double")
+            / F.sum("w").over(Window.partitionBy("src")).cast("double")
+        ).alias("p"),
+    ).localCheckpoint(eager=True)
+    nodes = e.select(F.col("src").alias("node")).distinct()
+    n_nodes = nodes.count()
+    rank = nodes.withColumn("r", F.lit(1.0 / n_nodes))
+    teleport = (1.0 - PR_DAMP) / n_nodes
+    for _ in range(PR_ITERS):
+        contrib = e.join(rank, F.col("src") == F.col("node")).select(
+            "dst", (F.col("r") * F.col("p")).alias("c")
+        )
+        rank = contrib.groupBy(F.col("dst").alias("node")).agg(
+            (
+                F.lit(teleport)
+                + F.lit(PR_DAMP)
+                * (dec_qsum(F.col("c"), _Q9).cast("double") / F.lit(_Q9))
+            ).alias("r")
+        )
+    return rank.localCheckpoint(eager=True)
+
+
+def top_ranked(rank: DataFrame) -> DataFrame:
+    """``(pos, node, r)`` for the top ``PR_TOPN`` nodes of a
+    :func:`pagerank` vector, ordered by r descending, ties by node."""
+    order = [F.col("r").desc(), F.col("node")]
+    top = rank.orderBy(*order).limit(PR_TOPN)
+    return top.select(
+        F.row_number().over(Window.orderBy(*order)).alias("pos"),
+        "node",
+        "r",
+    )
+
+
+#: DuckDB twin of :func:`pagerank`: the CTEs ``outw, e, nn, r0,
+#: r1 .. r{PR_ITERS}`` over a preceding ``edges (src, dst, w)`` CTE.
+#: ``r{PR_ITERS}`` is the final vector; each round replays the
+#: quantized sum bit-for-bit.
+PAGERANK_CTES = """outw AS (
+    SELECT src, CAST(sum(w) AS BIGINT) AS wout FROM edges GROUP BY src
+),
+e AS (
+    SELECT src, dst, CAST(w AS DOUBLE) / CAST(wout AS DOUBLE) AS p
+    FROM edges JOIN outw USING (src)
+),
+nn AS (SELECT CAST(count(DISTINCT src) AS BIGINT) AS n FROM edges),
+r0 AS (
+    SELECT DISTINCT src AS node, 1.0 / (SELECT n FROM nn) AS r FROM edges
+),
+""" + ",\n".join(
+    f"""r{i} AS (
+    SELECT e.dst AS node,
+           CAST({(1.0 - PR_DAMP)!r} AS DOUBLE) / (SELECT n FROM nn)
+             + {PR_DAMP} * (sum(CAST(floor(r.r * e.p * 1000000000.0 + 0.5)
+                                     AS BIGINT)) / 1000000000.0) AS r
+    FROM e JOIN r{i - 1} r ON r.node = e.src
+    GROUP BY e.dst
+)"""
+    for i in range(1, PR_ITERS + 1)
+)
+
+
 def _trade_edges(lineitem: DataFrame, orders: DataFrame) -> DataFrame:
     """(src, dst, w): both directions of the weighted bipartite graph."""
     pairs = lineitem.join(
@@ -70,73 +157,24 @@ def _trade_edges(lineitem: DataFrame, orders: DataFrame) -> DataFrame:
 
 
 def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-``PR_TOPN`` nodes of the trade graph by weighted PageRank
-    after ``PR_ITERS`` synchronous rounds. Emits the rank position,
-    node type/id, and the (1e-9-deterministic) PageRank value."""
+    """Top-``PR_TOPN`` nodes of the trade graph by :func:`pagerank`.
+    Emits the rank position, node type/id, and the
+    (1e-9-deterministic) PageRank value."""
     lineitem = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
-    edges = _trade_edges(lineitem, orders).localCheckpoint(eager=True)
-    outw = edges.groupBy("src").agg(F.sum("w").alias("wout"))
-    e = edges.join(outw, "src").select(
-        "src",
-        "dst",
-        (F.col("w").cast("double") / F.col("wout").cast("double")).alias("p"),
-    )
-    nodes = edges.select("src").distinct()
-    n_nodes = nodes.count()
-    rank = nodes.select(
-        F.col("src").alias("node"), F.lit(1.0 / n_nodes).alias("r")
-    ).localCheckpoint(eager=True)
-    teleport = (1.0 - PR_DAMP) / n_nodes
-    for _ in range(PR_ITERS):
-        contrib = e.join(rank, F.col("src") == F.col("node")).select(
-            "dst", (F.col("r") * F.col("p")).alias("c")
-        )
-        rank = (
-            contrib.groupBy(F.col("dst").alias("node"))
-            .agg(
-                (
-                    F.lit(teleport)
-                    + F.lit(PR_DAMP)
-                    * (
-                        dec_qsum(F.col("c"), _Q9).cast("double")
-                        / F.lit(_Q9)
-                    )
-                ).alias("r")
-            )
-            .localCheckpoint(eager=True)
-        )
-    top = rank.orderBy(F.col("r").desc(), F.col("node")).limit(PR_TOPN)
-    w_pos = Window.orderBy(F.col("r").desc(), F.col("node"))
-    return top.withColumn("pos", F.row_number().over(w_pos)).select(
+    top = top_ranked(pagerank(_trade_edges(lineitem, orders)))
+    is_supp = F.col("node") >= SUPPLIER_NODE_BASE
+    return top.select(
         "pos",
-        F.when(F.col("node") >= SUPPLIER_NODE_BASE, F.lit("supplier"))
+        F.when(is_supp, F.lit("supplier"))
         .otherwise(F.lit("customer"))
         .alias("node_type"),
-        F.when(
-            F.col("node") >= SUPPLIER_NODE_BASE,
-            F.col("node") - SUPPLIER_NODE_BASE,
-        )
+        F.when(is_supp, F.col("node") - SUPPLIER_NODE_BASE)
         .otherwise(F.col("node"))
         .alias("node_id"),
         stable_round(F.col("r"), 9).alias("pagerank"),
     )
 
-
-def _pr_round(i: int) -> str:
-    """One unrolled PageRank round as a DuckDB CTE (replays the
-    quantized-sum update bit-for-bit)."""
-    return f"""r{i} AS (
-    SELECT e.dst AS node,
-           CAST({(1.0 - PR_DAMP)!r} AS DOUBLE) / (SELECT n FROM nn)
-             + {PR_DAMP} * (sum(CAST(floor(r.r * e.p * 1000000000.0 + 0.5)
-                                     AS BIGINT)) / 1000000000.0) AS r
-    FROM e JOIN r{i - 1} r ON r.node = e.src
-    GROUP BY e.dst
-)"""
-
-
-_PR_ROUNDS_SQL = ",\n".join(_pr_round(i) for i in range(1, PR_ITERS + 1))
 
 PAGERANK_ORACLE = f"""
 WITH pairs AS (
@@ -152,16 +190,7 @@ edges AS (
     UNION ALL
     SELECT supp + {SUPPLIER_NODE_BASE} AS src, cust AS dst, w FROM wts
 ),
-outw AS (SELECT src, CAST(sum(w) AS BIGINT) AS wout FROM edges GROUP BY src),
-e AS (
-    SELECT src, dst, CAST(w AS DOUBLE) / CAST(wout AS DOUBLE) AS p
-    FROM edges JOIN outw USING (src)
-),
-nn AS (SELECT CAST(count(DISTINCT src) AS BIGINT) AS n FROM edges),
-r0 AS (
-    SELECT DISTINCT src AS node, 1.0 / (SELECT n FROM nn) AS r FROM edges
-),
-{_PR_ROUNDS_SQL}
+{PAGERANK_CTES}
 SELECT CAST(pos AS INT) AS pos,
        CASE WHEN node >= {SUPPLIER_NODE_BASE} THEN 'supplier'
             ELSE 'customer' END AS node_type,

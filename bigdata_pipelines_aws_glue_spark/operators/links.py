@@ -28,6 +28,18 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata_pipelines_aws_glue_spark import registry
+from bigdata_pipelines_aws_glue_spark.functions.rounding import (
+    dec_qsum,
+    stable_round,
+)
+from bigdata_pipelines_aws_glue_spark.operators.graph import (
+    PAGERANK_CTES,
+    PR_ITERS,
+    PR_TOPN,
+    _Q9,
+    pagerank,
+    top_ranked,
+)
 from bigdata_pipelines_aws_glue_spark.operators.markup import (
     _HTML_CTE,
     synth_html,
@@ -223,13 +235,6 @@ GROUP BY host
 )
 
 
-#: PageRank geometry (matches ``operators/graph.py:43`` — same
-#: damping, same 1e-9 contribution quantization, same unrolled
-#: DuckDB round replay).
-PR_DAMP = 0.85
-PR_ITERS = 5
-PR_TOPN = 20
-_Q9 = 1e9
 #: internal doc-to-doc link target: the trailing id of an
 #: own-language ``/doc/{t}`` URL.
 _DOC_TARGET_RE = r"/doc/([0-9]+)$"
@@ -290,106 +295,35 @@ def _doc_edges(
 def _pagerank_ranks(
     spark: SparkSession, sf_dir: str, edges: DataFrame | None = None
 ) -> DataFrame:
-    """The full (node, r) PageRank vector after ``PR_ITERS`` rounds
-    — factored out of :func:`link_pagerank` so
-    :func:`frontier_authority_rank` can spend the SAME attested rank
-    mass on frontier ordering instead of re-deriving it. Returns the
-    final round's checkpointed frame (nodes with inlinks; docs
-    outside it hold no rank — the documented leak semantics).
-    ``edges`` lets frontier_authority_rank pass the edge frame it
-    derived from its shared refs checkpoint (r16)."""
+    """:func:`pagerank` over the unweighted (``w = 1``) link graph —
+    factored out of :func:`link_pagerank` so
+    :func:`frontier_authority_rank` spends the SAME rank mass on
+    frontier ordering. ``edges`` lets frontier_authority_rank pass the
+    edge frame it derived from its shared refs checkpoint."""
     if edges is None:
         edges = _doc_edges(spark, sf_dir)
-    edges = edges.localCheckpoint(eager=True)
-    from bigdata_pipelines_aws_glue_spark.functions.rounding import dec_qsum
-
-    outd = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # checkpoint the normalized edge list too: every round joins it,
-    # and without this the outdegree join re-executes per round
-    # (5 extra shuffles over the constant graph)
-    e = (
-        edges.join(outd, "src")
-        .select(
-            "src",
-            "dst",
-            (F.lit(1.0) / F.col("deg").cast("double")).alias("p"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    nodes = edges.select("src").distinct()
-    n_nodes = nodes.count()
-    # init vector stays lazy too (r15): consumed once, by round 1's
-    # join, and it reads the checkpointed edge frame — one fewer
-    # blocking job, same distinct-computation count.
-    rank = nodes.select(
-        F.col("src").alias("node"), F.lit(1.0 / n_nodes).alias("r")
-    )
-    teleport = (1.0 - PR_DAMP) / n_nodes
-    # r15: rounds chain LAZILY — each round's rank is consumed exactly
-    # once (by the next round's join), so the per-round eager
-    # checkpoint bought nothing but a blocking job; the 5 joins+aggs
-    # now run inside one job against the checkpointed edge frame
-    # (measured 1.70 s -> 1.42 s at sf0.1, rank vectors identical).
-    # Only the FINAL vector is checkpointed, because callers consume
-    # it more than once (top-N + window; authority join + rank_shift).
-    for _ in range(PR_ITERS):
-        contrib = e.join(rank, F.col("src") == F.col("node")).select(
-            "dst", (F.col("r") * F.col("p")).alias("c")
-        )
-        rank = contrib.groupBy(F.col("dst").alias("node")).agg(
-            (
-                F.lit(teleport)
-                + F.lit(PR_DAMP)
-                * (dec_qsum(F.col("c"), _Q9).cast("double") / F.lit(_Q9))
-            ).alias("r")
-        )
-    return rank.localCheckpoint(eager=True)
+    return pagerank(edges.withColumn("w", F.lit(1)))
 
 
 def link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-``PR_TOPN`` documents by PageRank over the extracted link
-    graph after ``PR_ITERS`` synchronous rounds — the HTML -> links
-    -> graph -> quality-prior composition a crawl pipeline runs.
-    Same engine-exact kernel as ``pagerank_trade_graph``
-    (``operators/graph.py:72``): contributions quantize to 1e-9
-    before the sum, the oracle unrolls the rounds as CTEs.
-
-    Simplification shared with the trade-graph form (deliberate,
-    replayed identically by the oracle): no dangling-mass
-    redistribution — a node with no surviving out-edges leaks its
-    mass, and nodes without inlinks hold no rank after round 1. At
-    sf<=0.01 about half the mod-997 targets fall outside the corpus
-    (dropped by the existence semi-join), so the graph genuinely
-    exercises both cases."""
-    rank = _pagerank_ranks(spark, sf_dir)
-    from bigdata_pipelines_aws_glue_spark.functions.rounding import (
-        stable_round,
-    )
-
-    top = rank.orderBy(F.col("r").desc(), F.col("node")).limit(PR_TOPN)
-    w_pos = Window.orderBy(F.col("r").desc(), F.col("node"))
-    return top.withColumn("pos", F.row_number().over(w_pos)).select(
+    """Top-``PR_TOPN`` documents by :func:`pagerank` over the extracted
+    link graph — the HTML -> links -> graph -> quality-prior
+    composition a crawl pipeline runs. The kernel's leak semantics
+    matter here: at sf<=0.01 about half the mod-997 targets fall
+    outside the corpus (dropped by the existence semi-join), so the
+    graph has both dangling nodes and nodes without inlinks."""
+    return top_ranked(_pagerank_ranks(spark, sf_dir)).select(
         "pos",
         F.col("node").alias("doc_id"),
         stable_round(F.col("r"), 9).alias("pagerank"),
     )
 
 
-def _lpr_round(i: int) -> str:
-    return f"""r{i} AS (
-    SELECT e.dst AS node,
-           CAST({(1.0 - PR_DAMP)!r} AS DOUBLE) / (SELECT n FROM nn)
-             + {PR_DAMP} * (sum(CAST(floor(r.r * e.p * 1000000000.0 + 0.5)
-                                     AS BIGINT)) / 1000000000.0) AS r
-    FROM e JOIN r{i - 1} r ON r.node = e.src
-    GROUP BY e.dst
-)"""
-
-
 #: just the extracted+existence-filtered edge list (raw_edges,
-#: edges) — the prefix the graph oracles (LPA, k-core) share
-#: without PageRank's rank CTEs. MATERIALIZED: edges is referenced
-#: 2-6x downstream (both UNION orientations, outd/e/nn/r0) and a
+#: edges, with PageRank's weight column w = 1) — the prefix the graph
+#: oracles (LPA, k-core) share without PageRank's rank CTEs.
+#: MATERIALIZED: edges is referenced 2-6x downstream (both UNION
+#: orientations, outw/e/nn/r0) and a
 #: non-materialized chain re-inlines the lh regex extraction per
 #: reference (the standing DuckDB CTE rule).
 _EDGES_CHAIN = f""",
@@ -413,7 +347,7 @@ raw_edges AS MATERIALIZED (
               = u.lang || '.example.test'
 ),
 edges AS MATERIALIZED (
-    SELECT src, dst FROM raw_edges
+    SELECT src, dst, 1 AS w FROM raw_edges
     WHERE dst IN (SELECT doc_id FROM documents)
 )"""
 
@@ -431,24 +365,10 @@ ue AS MATERIALIZED (
 )"""
 
 
-#: the PageRank oracle CTE chain (edges prefix + outd/e/nn/r0 +
-#: the unrolled r1..r{PR_ITERS} rounds) — shared by
-#: ``LINK_PAGERANK_ORACLE`` and the authority-ordered frontier so
-#: both replay the identical kernel.
-_PR_CHAIN = (
-    _EDGES_CHAIN
-    + f""",
-outd AS (SELECT src, count(*) AS deg FROM edges GROUP BY src),
-e AS (
-    SELECT src, dst, 1.0 / CAST(deg AS DOUBLE) AS p
-    FROM edges JOIN outd USING (src)
-),
-nn AS (SELECT CAST(count(DISTINCT src) AS BIGINT) AS n FROM edges),
-r0 AS (
-    SELECT DISTINCT src AS node, 1.0 / (SELECT n FROM nn) AS r FROM edges
-),
-{",".join(_lpr_round(i) for i in range(1, PR_ITERS + 1))}"""
-)
+#: the PageRank oracle CTE chain (edges prefix + ``PAGERANK_CTES``)
+#: — shared by ``LINK_PAGERANK_ORACLE`` and the authority-ordered
+#: frontier so both replay the identical kernel.
+_PR_CHAIN = _EDGES_CHAIN + ",\n" + PAGERANK_CTES
 
 
 LINK_PAGERANK_ORACLE = (
@@ -945,10 +865,6 @@ def frontier_authority_rank(
     the bounded rank vector + one hash agg + two per-host windows —
     the ``crawl_frontier`` plan plus a single extra join, nothing
     all-pairs, no Python."""
-    from bigdata_pipelines_aws_glue_spark.functions.rounding import (
-        dec_qsum,
-    )
-
     # r16 (guide §2.4): the PageRank edge set and the frontier
     # membership both start from the same linked-HTML synthesis +
     # href/host regex scan; before, that scan ran TWICE inside this

@@ -475,19 +475,6 @@ FRAMES_SCHEMA = (
 )
 
 
-def resize_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: decode payload -> real pixel array ->
-    nearest-neighbor resize to 16x16 -> summary stat."""
-    for pdf in batches:
-        out_rows = []
-        for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-            small = resize_image(decode_image(p), 16, 16)
-            out_rows.append((doc_id, 16, 16, float(small.mean())))
-        yield pd.DataFrame(
-            out_rows, columns=["doc_id", "out_w", "out_h", "mean_px"]
-        )
-
-
 def resize_oracle_batch(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:

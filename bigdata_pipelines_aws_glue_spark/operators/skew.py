@@ -5,14 +5,14 @@
   a coalesced scan at 100 TB) need an explicit repartition or the
   whole stage runs on a fraction of the cores. Cheap where it's a
   no-op (narrow check first).
-- ``salt_key`` / ``unsalt``: classic skew-salting for hot keys when
-  AQE's skew-join splitting isn't applicable (e.g. aggregations onto
-  a dominant key).
+- ``salted_skew_join`` / ``two_phase_agg``: classic skew-salting for
+  hot keys when AQE's skew-join splitting isn't applicable (e.g.
+  aggregations onto a dominant key).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -24,13 +24,6 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
-
-
-def salt_col(buckets: int) -> Column:
-    """Per-row salt bucket: spreads a hot key over ``buckets``
-    reducers. Pair with two-phase aggregation: partial agg on
-    (key, salt), final agg on key."""
-    return F.pmod(F.monotonically_increasing_id(), F.lit(buckets))
 
 
 def salted_skew_join(

@@ -19,13 +19,20 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from bigdata_pipelines_aws_glue_spark import registry
 from bigdata_pipelines_aws_glue_spark.functions.rounding import stable_round
 from bigdata_pipelines_aws_glue_spark.operators.dedup import _tokens
+from bigdata_pipelines_aws_glue_spark.operators.graph import (
+    PAGERANK_CTES,
+    PR_ITERS,
+    PR_TOPN,
+    pagerank,
+    top_ranked,
+)
 from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
 
 STOPWORDS = ("the", "a", "and", "of", "to")
@@ -873,29 +880,18 @@ LIMIT 20
 # TextRank keyword extraction (graph-based ranking over co-occurrence)
 # ---------------------------------------------------------------------------
 
-TEXTRANK_DAMP = 0.85
-TEXTRANK_ITERS = 5
-TEXTRANK_TOPN = 20
-_TR_Q9 = 1_000_000_000.0
-
 
 def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TextRank keyword extraction (Mihalcea & Tarau, EMNLP 2004):
-    PageRank over the undirected word co-occurrence graph (adjacent
-    token pairs, the window-2 form), ``TEXTRANK_ITERS`` synchronous
-    rounds at damping 0.85, top-``TEXTRANK_TOPN`` terms.
+    :func:`pagerank` over the undirected word co-occurrence graph
+    (adjacent token pairs, the window-2 form, weighted by pair count),
+    top-``PR_TOPN`` terms. Self-loops (w1 = w2) are excluded,
+    the standard TextRank convention.
 
     Plan: one explode of the shared ``_bigrams`` recipe aggregates
     the co-occurrence graph — VOCAB²-bounded whatever the corpus
     size, so every PageRank round is a join between vocab-sized
-    tables (the volume-scaling stage is only the bigram count). The
-    rank update replays ``pagerank_trade_graph``'s quantized-sum
-    discipline (contributions floored to 1e-9 before summing —
-    decimal-carried, bit-stable cross-engine); the DuckDB twin
-    unrolls the same rounds as CTEs. Self-loops (w1 = w2) are
-    excluded, the standard TextRank convention."""
-    from bigdata_pipelines_aws_glue_spark.functions.rounding import dec_qsum
-
+    tables (the volume-scaling stage is only the bigram count)."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = docs.select(
         F.explode(_bigrams(_tokens(F.col("text")))).alias("gram")
@@ -910,59 +906,12 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     edges = und.groupBy("src", "dst").agg(
         F.count(F.lit(1)).cast("long").alias("w")
-    ).localCheckpoint(eager=True)
-    outw = edges.groupBy("src").agg(F.sum("w").alias("wout"))
-    e = edges.join(outw, "src").select(
-        "src",
-        "dst",
-        (F.col("w").cast("double") / F.col("wout").cast("double")).alias(
-            "p"
-        ),
     )
-    nodes = edges.select("src").distinct()
-    n_nodes = nodes.count()
-    rank = nodes.select(
-        F.col("src").alias("node"), F.lit(1.0 / n_nodes).alias("r")
-    ).localCheckpoint(eager=True)
-    teleport = (1.0 - TEXTRANK_DAMP) / n_nodes
-    for _ in range(TEXTRANK_ITERS):
-        contrib = e.join(rank, F.col("src") == F.col("node")).select(
-            "dst", (F.col("r") * F.col("p")).alias("c")
-        )
-        rank = (
-            contrib.groupBy(F.col("dst").alias("node"))
-            .agg(
-                (
-                    F.lit(teleport)
-                    + F.lit(TEXTRANK_DAMP)
-                    * (
-                        dec_qsum(F.col("c"), _TR_Q9).cast("double")
-                        / F.lit(_TR_Q9)
-                    )
-                ).alias("r")
-            )
-            .localCheckpoint(eager=True)
-        )
-    top = rank.orderBy(F.col("r").desc(), F.col("node")).limit(
-        TEXTRANK_TOPN
-    )
-    w_pos = Window.orderBy(F.col("r").desc(), F.col("node"))
-    return top.withColumn("pos", F.row_number().over(w_pos)).select(
+    return top_ranked(pagerank(edges)).select(
         "pos",
         F.col("node").alias("term"),
         stable_round(F.col("r"), 9).alias("textrank"),
     )
-
-
-def _tr_round(i: int) -> str:
-    return f"""r{i} AS (
-    SELECT e.dst AS node,
-           CAST({(1.0 - TEXTRANK_DAMP)!r} AS DOUBLE) / (SELECT n FROM nn)
-             + {TEXTRANK_DAMP} * (sum(CAST(floor(r.r * e.p * 1000000000.0
-                 + 0.5) AS BIGINT)) / 1000000000.0) AS r
-    FROM e JOIN r{i - 1} r ON r.node = e.src
-    GROUP BY e.dst
-)"""
 
 
 TEXTRANK_ORACLE = f"""
@@ -989,22 +938,13 @@ edges AS (
     SELECT src, dst, CAST(count(*) AS BIGINT) AS w
     FROM und GROUP BY 1, 2
 ),
-outw AS (SELECT src, CAST(sum(w) AS BIGINT) AS wout FROM edges GROUP BY 1),
-e AS (
-    SELECT src, dst, CAST(w AS DOUBLE) / CAST(wout AS DOUBLE) AS p
-    FROM edges JOIN outw USING (src)
-),
-nn AS (SELECT CAST(count(DISTINCT src) AS BIGINT) AS n FROM edges),
-r0 AS (
-    SELECT DISTINCT src AS node, 1.0 / (SELECT n FROM nn) AS r FROM edges
-),
-{",".join(_tr_round(i) for i in range(1, TEXTRANK_ITERS + 1))}
+{PAGERANK_CTES}
 SELECT CAST(row_number() OVER (ORDER BY r DESC, node) AS INT) AS pos,
        node AS term,
        floor(r * 1000000000.0 + 0.5) / 1000000000.0 AS textrank
-FROM r{TEXTRANK_ITERS}
+FROM r{PR_ITERS}
 ORDER BY r DESC, node
-LIMIT {TEXTRANK_TOPN}
+LIMIT {PR_TOPN}
 """
 
 

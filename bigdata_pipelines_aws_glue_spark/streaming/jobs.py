@@ -374,20 +374,3 @@ def run_batch_id_sink(
         .start()
     )
 
-
-def run_to_parquet(
-    df: DataFrame,
-    output_dir: str,
-    checkpoint_dir: str,
-    output_mode: str = "append",
-) -> StreamingQuery:
-    """Production sink: parquet + checkpoint (exactly-once file sink).
-    With ``append`` mode, windows emit once their watermark passes."""
-    return (
-        df.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )

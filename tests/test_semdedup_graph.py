@@ -42,7 +42,9 @@ def test_semdedup_prunes_every_copy_keeps_every_original(spark, sf_dir):
 
 
 def test_pagerank_top_nodes_shape_and_mass(spark, sf_dir):
-    rows = pagerank_trade_graph(spark, sf_dir).collect()
+    rows = sorted(
+        pagerank_trade_graph(spark, sf_dir).collect(), key=lambda r: r.pos
+    )
     assert [r.pos for r in rows] == list(range(1, PR_TOPN + 1))
     prs = [r.pagerank for r in rows]
     # ranked descending, all probability-mass-positive and < 1

@@ -25,7 +25,8 @@ import time
 import duckdb
 
 # the checkout this file sits in
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -165,7 +166,7 @@ def stalest_names(queries: dict, n: int) -> list[str]:
     import re
 
     latest: dict[str, int] = {}
-    for path in glob.glob("/root/repo/CORRECTNESS_r*.json"):
+    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
         m = re.search(r"CORRECTNESS_r0*(\d+)\.json$", path)
         if not m:
             continue

@@ -42,9 +42,10 @@ an audit failure. Usage: python tools/plan_audit.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # query -> (pattern, reason) pairs that are deliberate
 WHITELIST: dict[str, dict[str, str]] = {

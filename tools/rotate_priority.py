@@ -24,10 +24,12 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 WINDOW = 50
 
@@ -39,7 +41,7 @@ def main() -> None:
     q = registry.queries()
     o = registry.oracle_sql()
     last_green: dict[str, int] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(f"{REPO}/CORRECTNESS_r*.json")):
         rnd = int(re.search(r"_r(\d+)", path).group(1))
         for name, row in json.load(open(path)).items():
             if row.get("hash_match"):
