@@ -47,10 +47,9 @@ EXTENDED = [
     "multimodal_audio_adpcm",
     # r12 additions (VERDICT r11 item 5): the r11 families join the
     # trend; the original-13 subtotal above is untouched.
-    # dedup_clusters_star is deliberately NOT here: its steady-state
-    # time depends on the session-level shared pair cache (runs 2..5
-    # would measure star CC alone), so its trend lives in SCALING.md
-    # where the measurement protocol is explicit.
+    # dedup_clusters_star is not here, so extended_total_sec stays
+    # comparable across rounds; its trend lives in SCALING.md, where
+    # the measurement protocol is explicit.
     "dedup_simhash_hamming",
     "multimodal_tiff_roundtrip",
     # r12 families: one representative each for markup/links (regex

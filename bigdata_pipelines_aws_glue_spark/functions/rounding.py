@@ -62,8 +62,10 @@ def quantized_sum(col: Column | str, q: int = 4) -> Column:
 def dec_qsum(c: Column, scale: float) -> Column:
     """Σ floor(c*scale + 0.5) with the sum carried in decimal(38,0)
     — the overflow-safe integral-sum primitive behind
-    :func:`quantized_sum` and every ad-hoc quantized mean (k-means /
-    PQ centroid updates, linalg power sums, retrieval NLL totals)."""
+    :func:`quantized_sum` (and so :func:`quantized_avg`, which every
+    centroid and codebook mean in ``similarity`` uses) and the
+    quantized sums that carry their own scale (linalg power sums,
+    retrieval NLL totals)."""
     return F.sum(
         F.floor(c * F.lit(scale) + F.lit(0.5)).cast("decimal(38,0)")
     )

@@ -56,10 +56,6 @@ FEATURES = (
     ("stop_hits_over_5", 5.0),
 )
 
-#: (applicationId, sf_dir) -> (weights, history) — training is
-#: deterministic, so the two registered views share one run.
-_TRAIN_CACHE: dict[tuple[str, str], tuple[list[float], list[tuple]]] = {}
-
 
 def _feature_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, x1..x4, y): the scaled features + the Gopher teacher
@@ -97,9 +93,6 @@ def _feature_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _train(spark: SparkSession, sf_dir: str) -> tuple[list[float], list[tuple]]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _TRAIN_CACHE:
-        return _TRAIN_CACHE[key]
     f = _feature_frame(spark, sf_dir).localCheckpoint(eager=True)
     n = f.count()
     w = [0.0] * len(FEATURES)
@@ -138,8 +131,7 @@ def _train(spark: SparkSession, sf_dir: str) -> tuple[list[float], list[tuple]]:
             w[j] - GD_LR * ((float(row[f"g{j}"]) / _Q9) / n)
             for j in range(len(FEATURES))
         ]
-    _TRAIN_CACHE[key] = (w, hist)
-    return _TRAIN_CACHE[key]
+    return w, hist
 
 
 def quality_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -23,8 +23,6 @@ identical Jaccard pair list.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -35,36 +33,19 @@ from bigdata_pipelines_aws_glue_spark.operators.dedup import (
 )
 from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
 
-#: checkpointed Jaccard pair sets keyed on (applicationId, sf_dir,
-#: threshold) — ``dedup_clusters`` and ``dedup_clusters_star`` consume
-#: the IDENTICAL pair list (that identity is the point of the
-#: cross-algorithm attestation), so within one driver session the
-#: expensive shingle self-join runs once, not once per CC algorithm
-#: (VERDICT r11 #6). Keying on applicationId makes a stale entry from
-#: a stopped session unreachable rather than wrongly reused.
-_PAIR_CACHE: dict[tuple[str, str, float], DataFrame] = {}
-
-
 def jaccard_pairs_checkpointed(
     spark: SparkSession, sf_dir: str, threshold: float = 0.8
 ) -> DataFrame:
-    """The shared, lineage-truncated Jaccard>=threshold pair stage.
-    ``localCheckpoint(eager=True)`` both caps the iterative-CC plan
-    growth and materializes the pair blocks once for every consumer
-    in the session."""
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.normpath(sf_dir),
-        threshold,
+    """The lineage-truncated Jaccard>=threshold pair stage shared by
+    ``dedup_clusters`` and ``dedup_clusters_star`` (both consume the
+    identical pair list — that identity is the point of the
+    cross-algorithm attestation). ``localCheckpoint(eager=True)``
+    caps the iterative-CC plan growth: the CC rounds re-read the
+    pairs, and recomputing them would rerun the shingle self-join."""
+    docs = load_table(spark, sf_dir, "documents")
+    return ngram_jaccard_pairs(docs, threshold=threshold).localCheckpoint(
+        eager=True
     )
-    df = _PAIR_CACHE.get(key)
-    if df is None:
-        docs = load_table(spark, sf_dir, "documents")
-        df = ngram_jaccard_pairs(docs, threshold=threshold).localCheckpoint(
-            eager=True
-        )
-        _PAIR_CACHE[key] = df
-    return df
 
 
 def connected_components(

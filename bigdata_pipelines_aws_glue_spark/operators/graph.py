@@ -23,9 +23,9 @@ hash-check despite being an iterative float algorithm.
 Scale posture (100 TB): each round is an equi-join of the normalized
 edge list against the rank table keyed by src plus a keyed
 aggregation on dst — the standard Pregel-as-join shape. The final
-top-N is TakeOrderedAndProject, never a global sort. The single driver
-scalar (node count, for the teleport constant) is the iterative-loop
-probe ``kmeans_fit``/``pq_train`` already model.
+top-N is TakeOrderedAndProject, never a global sort. The one value
+brought to the driver is a single scalar: the node count, for the
+teleport constant.
 """
 
 from __future__ import annotations

@@ -27,7 +27,7 @@ shuffle beyond the 1-row reduce). The covariance build shuffles
 (i, j, partial-sum) cells — 64x64 = 4096 keys regardless of corpus
 size; iterations operate on the 4096-cell matrix joined against a
 64-row vector (broadcast), checkpointed per round like
-``kmeans_fit``. Nothing driver-side except the iterative loop
+``similarity.lloyd``. Nothing driver-side except the iterative loop
 structure itself.
 """
 

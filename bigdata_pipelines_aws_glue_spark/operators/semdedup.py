@@ -11,15 +11,16 @@ exceeds ``SEMDEDUP_TAU`` is pruned; the lowest id in each near-dup
 chain survives (deterministic keep-one policy).
 
 Here the coarse structure is the same quantized per-label centroid
-index ``ivf_topk`` uses (``similarity.label_centroids`` — trained on
-the base corpus, then applied to the batch being deduped, the
-production shape), which is what makes the WHOLE pipeline — centroid
-training, nearest-cell assignment, within-cell pairing, prune rule —
-replayable bit-for-bit in the DuckDB twin. The dedup target is the
-corpus unioned with an id-offset copy of itself (same simulated
-re-ingestion as ``dedup_embedding_cosine``): every copy must land in
-its twin's cell and be pruned at cosine ~1.0, while the base corpus
-(no natural pairs above ~0.52 cosine, measured) survives.
+index ``ivf_topk`` uses (``similarity._ranked_cells`` over
+``label_centroids`` — trained on the base corpus, then applied to the
+batch being deduped, the production shape), which is what makes the
+WHOLE pipeline — centroid training, nearest-cell assignment,
+within-cell pairing, prune rule — replayable bit-for-bit in the
+DuckDB twin. The dedup target is the corpus unioned with an id-offset
+copy of itself (same simulated re-ingestion as
+``dedup_embedding_cosine``): every copy must land in its twin's cell
+and be pruned at cosine ~1.0, while the base corpus (no natural pairs
+above ~0.52 cosine, measured) survives.
 
 Scale posture (100 TB): centroids are a broadcast k-row table;
 assignment is a map over the corpus (argmin against the broadcast —
@@ -29,14 +30,14 @@ bounded by construction in SemDeDup only when k scales with n (n/k
 fixed at ~1k-10k members). The per-label cells used here have FIXED
 cardinality, so cell populations grow O(n) and the within-cell pair
 join is O(n^2/k) — fine at tested scales, but a production 100 TB
-deployment must swap in k ∝ n k-means cells (``kmeans_fit`` provides
-them) or cap cell size. The max-sim aggregation partial-aggregates
+deployment must swap in k ∝ n k-means cells (``similarity.lloyd``
+at m = 1 trains them) or cap cell size. The max-sim aggregation partial-aggregates
 on vec_id.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_pipelines_aws_glue_spark import registry
@@ -44,8 +45,9 @@ from bigdata_pipelines_aws_glue_spark.functions.rounding import stable_round
 from bigdata_pipelines_aws_glue_spark.operators.similarity import (
     DUP_OFFSET,
     _as_double,
+    _ranked_cells,
+    _sql_ranked_cells,
     dot,
-    label_centroids,
     norm,
 )
 from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
@@ -63,7 +65,6 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactly the 1000-executor plan a SemDeDup pass wants: broadcast
     centroid assignment, per-cell equi-join, keyed max."""
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = label_centroids(emb)
     doubled = emb.select("vec_id", "embedding").unionByName(
         emb.select(
             (F.col("vec_id") + DUP_OFFSET).alias("vec_id"), F.col("embedding")
@@ -72,19 +73,8 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = doubled.select(
         "vec_id", _as_double(F.col("embedding")).alias("v")
     ).withColumn("n", norm(F.col("v")))
-    scored = v.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "v",
-        "n",
-        "cell",
-        (dot(F.col("v"), F.col("cvec")) / (F.col("n") * norm(F.col("cvec"))))
-        .alias("cell_score"),
-    )
-    w_cell = Window.partitionBy("vec_id").orderBy(
-        F.col("cell_score").desc(), F.col("cell")
-    )
     assigned = (
-        scored.withColumn("cr", F.row_number().over(w_cell))
+        _ranked_cells(v, emb)
         .filter(F.col("cr") == 1)
         .select("vec_id", "v", "n", "cell")
     )
@@ -132,34 +122,9 @@ v AS (
            sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
     FROM doubled
 ),
-cents AS (
-    SELECT cell, list(cv ORDER BY dim) AS cvec FROM (
-        SELECT label AS cell, dim,
-               (sum(CAST(floor(val * 1000000000.0 + 0.5) AS BIGINT))
-                  / 1000000000.0)
-                 / count(*) AS cv
-        FROM (
-            SELECT label,
-                   generate_subscripts(embedding, 1) - 1 AS dim,
-                   unnest(embedding::DOUBLE[]) AS val
-            FROM embeddings)
-        GROUP BY label, dim)
-    GROUP BY cell
-),
-cell_scored AS (
-    SELECT v.vec_id, v.e, v.nrm, c.cell,
-           list_dot_product(v.e, c.cvec)
-             / (v.nrm * sqrt(list_dot_product(c.cvec, c.cvec)))
-             AS cell_score
-    FROM v CROSS JOIN cents c
-),
+{_sql_ranked_cells("v")},
 assigned AS (
-    SELECT vec_id, e, nrm, cell FROM (
-        SELECT vec_id, e, nrm, cell,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY cell_score DESC, cell) AS cr
-        FROM cell_scored)
-    WHERE cr = 1
+    SELECT vec_id, e, nrm, cell FROM ranked_cells WHERE cr = 1
 ),
 members AS (
     SELECT cell, CAST(count(*) AS BIGINT) AS n_cell_members

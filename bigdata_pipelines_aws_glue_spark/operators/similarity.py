@@ -1,19 +1,25 @@
 """Similarity search over embeddings ([north-star] N3, BASELINE.json:6).
 
-Three tiers, mirroring how ANN is actually deployed at scale:
+- ``cosine_topk`` — exact brute force: broadcast the (small) query
+  set against the full corpus; vector math via ``zip_with`` /
+  ``aggregate`` higher-order functions (JVM codegen, no Python).
+  The baseline every approximate method is validated against.
+- ``ann_lsh_topk`` — random-hyperplane LSH: 16-bit signatures via
+  deterministic pseudo-random planes, Hamming-bucket candidate
+  generation, exact re-scoring of candidates only. Candidate
+  generation is a hash-bucket equi-join, never a cross join.
+- IVF (``ivf_topk``): per-label centroids (``label_centroids``) as
+  coarse cells, ranked per vector by :func:`_ranked_cells`.
+- PQ-ADC (``pq_topk``, ``ivfpq_topk``) and k-means: one Lloyd's
+  kernel, :func:`lloyd`, trains both the k-means centroids (one
+  subspace) and the PQ codebooks (``PQ_M`` subspaces); its DuckDB
+  twin is :func:`_lloyd_ctes`.
+- binary sign-bit ANN (brute force, multi-index Hamming, multi-word
+  signatures, asymmetric scoring).
 
-1. ``cosine_topk`` — exact brute force: broadcast the (small) query
-   set against the full corpus; vector math via ``zip_with`` /
-   ``aggregate`` higher-order functions (JVM codegen, no Python).
-   The baseline every approximate method is validated against.
-2. ``ann_lsh_topk`` — random-hyperplane LSH: 16-bit signatures via
-   deterministic pseudo-random planes, Hamming-bucket candidate
-   generation, exact re-scoring of candidates only. The 100 TB path:
-   candidate generation is a hash-bucket equi-join, never a cross
-   join.
-3. ``embedding_centroids`` — per-label mean vector (posexplode +
-   re-assemble), the building block for IVF-style coarse quantization.
-
+Every mean vector here is :func:`_quantized_mean` — 1e-9-quantized
+components summed as exact integers — so centroids and codebooks are
+independent of aggregation order and bit-identical in DuckDB.
 Embeddings are ``array<float>``; all math casts to double first so
 the DuckDB oracle (which computes in double) matches bit-for-bit.
 """
@@ -25,9 +31,13 @@ from pyspark.sql import functions as F
 
 from bigdata_pipelines_aws_glue_spark import registry
 from bigdata_pipelines_aws_glue_spark.functions.rounding import (
-    dec_qsum,
+    quantized_avg,
+    sql_quantized_sum,
+    sql_round,
     stable_round,
 )
+from bigdata_pipelines_aws_glue_spark.operators.skew import spread
+from bigdata_pipelines_aws_glue_spark.sources.local import local_frame
 from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
 
 N_QUERIES = 50  # vec_id < 50 are the query vectors
@@ -36,6 +46,14 @@ TOP_K = 10
 
 def _as_double(v: Column) -> Column:
     return v.cast("array<double>")
+
+
+def _corpus_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, v): the embeddings as double arrays, spread over the
+    cluster."""
+    return spread(load_table(spark, sf_dir, "embeddings")).select(
+        "vec_id", _as_double(F.col("embedding")).alias("v")
+    )
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -61,8 +79,6 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     self). Query side is broadcast — the corpus never shuffles; the
     per-query ranking is a window top-k (local heaps, no global
     sort)."""
-    from bigdata_pipelines_aws_glue_spark.operators.skew import spread
-
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     # norms precomputed once per side — not per pair (3x fewer folds)
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
@@ -208,11 +224,7 @@ def _ann_lsh_topk_impl(
     candidates only. At 100 TB: signatures are 2 bytes/vector, the
     banded bucket join replaces the O(n²) cross join, and band count /
     probe width trade recall for fan-out."""
-    from bigdata_pipelines_aws_glue_spark.operators.skew import spread
-
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _as_double(F.col("embedding")).alias("v")
-    )
+    emb = _corpus_vectors(spark, sf_dir)
     sig = emb.select("vec_id", "v", lsh_signature(F.col("v")).alias("sig"))
     bands = sig.select(
         "vec_id", "v", F.explode(_band_keys(F.col("sig"))).alias("bk")
@@ -283,33 +295,49 @@ def ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_PROBE = 3  # IVF cells searched per query
 
 
-def label_centroids(emb: DataFrame) -> DataFrame:
-    """(cell, cvec): coarse centroids — the mean vector per corpus
-    label (k = n_labels). The mean is computed over 1e-9-quantized
-    values summed as LONGs, so it is independent of
-    partial-aggregation order AND expressible bit-for-bit in the
-    DuckDB twins (``IVF_RECALL_ORACLE``, ``SEMDEDUP_ORACLE``) — the
-    same move ``embedding_centroids`` uses. (Both sides sum as exact
-    integers — Spark LONG, DuckDB BIGINT→HUGEINT — so the recipe
-    holds at any scale, not just under 2^53.) Shared by ``ivf_topk``,
-    ``ivfpq_topk``, and ``semdedup_prune``."""
+def _quantized_mean(df: DataFrame, keys: list[str], vec: str) -> DataFrame:
+    """(*keys, cvec, n): the mean of the ``vec`` arrays per key and
+    the key's row count. Each component is :func:`quantized_avg` at
+    1e-9 — integer-summed, so the mean is independent of
+    partial-aggregation order and bit-identical to the DuckDB twins'
+    ``sql_quantized_sum(…, 9) / count(*)``. The shuffle carries
+    (key, dim, partial sum) triples, not vectors."""
     return (
-        emb.select("label", _as_double(F.col("embedding")).alias("v"))
-        .withColumn("dim", F.sequence(F.lit(0), F.size("v") - 1))
-        .select("label", F.explode(F.arrays_zip("dim", "v")).alias("z"))
-        .groupBy("label", F.col("z.dim").alias("dim"))
+        df.select(*keys, F.posexplode(vec).alias("dim", "val"))
+        .groupBy(*keys, "dim")
+        .agg(quantized_avg("val", 9).alias("cv"), F.count(F.lit(1)).alias("n"))
+        .groupBy(*keys)
         .agg(
-            (
-                (dec_qsum(F.col("z.v"), 1e9).cast("double") / F.lit(1e9))
-                / F.count(F.lit(1))
-            ).alias("cv")
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("dim", "cv"))),
+                lambda s: s["cv"],
+            ).alias("cvec"),
+            F.min("n").alias("n"),
         )
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "cv"))).alias("pairs"))
-        .select(
-            F.col("label").alias("cell"),
-            F.transform("pairs", lambda p: p["cv"]).alias("cvec"),
-        )
+    )
+
+
+def label_centroids(emb: DataFrame) -> DataFrame:
+    """(cell, cvec): coarse centroids — the quantized mean vector per
+    corpus label (k = n_labels); DuckDB twin ``_SQL_LABEL_CENTS``."""
+    v = emb.select(
+        F.col("label").alias("cell"), _as_double(F.col("embedding")).alias("v")
+    )
+    return _quantized_mean(v, ["cell"], "v").select("cell", "cvec")
+
+
+def _ranked_cells(v: DataFrame, emb: DataFrame) -> DataFrame:
+    """``v``'s rows (vec_id, v, …) times every label-centroid cell of
+    ``emb``, ranked per vector by cosine to the centroid: ``cr`` = 1
+    is the nearest cell, ties broken on cell. The centroids are a
+    broadcast k-row table, so ranking is a map over ``v``. Shared by
+    ``ivf_topk``, ``ivfpq_topk`` and ``semdedup_prune``."""
+    w = Window.partitionBy("vec_id").orderBy(F.col("cs").desc(), "cell")
+    return (
+        v.crossJoin(F.broadcast(label_centroids(emb)))
+        .withColumn("cs", cosine(F.col("v"), F.col("cvec")))
+        .drop("cvec")
+        .withColumn("cr", F.row_number().over(w))
     )
 
 
@@ -319,25 +347,10 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     nearest centroid, each query probes its ``N_PROBE`` nearest cells
     and re-scores exactly within them. At 100 TB: centroids are a
     broadcast table (k rows), cell assignment is a map, and search is
-    an equi-join on cell id — never a cross join. Rows-only check;
-    recall vs brute force asserted in tests."""
-    from bigdata_pipelines_aws_glue_spark.operators.skew import spread
-
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _as_double(F.col("embedding")).alias("v")
-    )
-    cents = label_centroids(load_table(spark, sf_dir, "embeddings"))
-    # rank cells per vector by centroid cosine
-    scored_cells = emb.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "v",
-        "cell",
-        cosine(F.col("v"), F.col("cvec")).alias("cell_score"),
-    )
-    w_cell = Window.partitionBy("vec_id").orderBy(
-        F.col("cell_score").desc(), F.col("cell")
-    )
-    ranked_cells = scored_cells.withColumn("cr", F.row_number().over(w_cell))
+    an equi-join on cell id — never a cross join. Hash-checked
+    (``IVF_TOPK_ORACLE``); recall vs brute force asserted in tests."""
+    emb = _corpus_vectors(spark, sf_dir)
+    ranked_cells = _ranked_cells(emb, load_table(spark, sf_dir, "embeddings"))
     index = ranked_cells.filter(F.col("cr") == 1).select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("v").alias("bv"),
@@ -384,8 +397,6 @@ def matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     halving the vector (and the index RAM/bandwidth with it) cost?
     Same plan shape as ``cosine_topk`` (broadcast query sample, no
     corpus shuffle, per-query window top-k)."""
-    from bigdata_pipelines_aws_glue_spark.operators.skew import spread
-
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     tv = F.slice(_as_double(F.col("embedding")), 1, MATRYOSHKA_DIMS)
     queries = (
@@ -602,39 +613,48 @@ def ann_lsh_multiprobe_recall_at10(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-#: SQL replay of ``ivf_topk``'s INDEX (through cell probing):
-#: quantized centroid means (long-summed on the Spark side, exact
-#: BIGINT-summed here), cell ranking and probing with the same
-#: (score DESC, cell) tie-break. Shared by the IVF oracles (which add
-#: exact in-cell scoring) and the IVF-PQ oracle (which adds ADC).
-_IVF_INDEX_CTES = f"""{_SQL_VN},
-cents AS (
-    SELECT cell, list(cv ORDER BY dim) AS cvec FROM (
-        SELECT label AS cell, dim,
-               (sum(CAST(floor(val * 1000000000.0 + 0.5) AS BIGINT))
-                  / 1000000000.0)
-                 / count(*) AS cv
-        FROM (
+#: Per-(label, dim) rows of the corpus: the input of both
+#: ``label_centroids``' and ``embedding_centroids``' twins.
+_SQL_LABEL_DIMS = """(
             SELECT label,
                    generate_subscripts(embedding, 1) - 1 AS dim,
                    unnest(embedding::DOUBLE[]) AS val
-            FROM embeddings)
+            FROM embeddings)"""
+
+#: ``label_centroids``' twin: the integer-summed 1e-9 quantized mean.
+_SQL_LABEL_CENTS = f"""cents AS (
+    SELECT cell, list(cv ORDER BY dim) AS cvec FROM (
+        SELECT label AS cell, dim,
+               {sql_quantized_sum("val", 9)} / count(*) AS cv
+        FROM {_SQL_LABEL_DIMS}
         GROUP BY label, dim)
     GROUP BY cell
-),
-cell_scored AS (
-    SELECT v.vec_id, v.e, v.nrm, c.cell,
-           list_dot_product(v.e, c.cvec)
-             / (v.nrm * sqrt(list_dot_product(c.cvec, c.cvec)))
-             AS cell_score
-    FROM vn v CROSS JOIN cents c
-),
+)"""
+
+
+def _sql_ranked_cells(src: str) -> str:
+    """``_ranked_cells``' twin: ``cents`` and ``ranked_cells`` (vec_id,
+    e, nrm, cell, cr) over the ``src`` CTE (vec_id, e, nrm), with the
+    same (cosine DESC, cell) tie-break."""
+    return f"""{_SQL_LABEL_CENTS},
 ranked_cells AS (
     SELECT vec_id, e, nrm, cell,
            row_number() OVER (PARTITION BY vec_id
                               ORDER BY cell_score DESC, cell) AS cr
-    FROM cell_scored
-),
+    FROM (
+        SELECT v.vec_id, v.e, v.nrm, c.cell,
+               list_dot_product(v.e, c.cvec)
+                 / (v.nrm * sqrt(list_dot_product(c.cvec, c.cvec)))
+                 AS cell_score
+        FROM {src} v CROSS JOIN cents c)
+)"""
+
+
+#: SQL replay of ``ivf_topk``'s index through cell probing. Shared by
+#: the IVF oracles (which add exact in-cell scoring) and the IVF-PQ
+#: oracles (which add ADC).
+_IVF_INDEX_CTES = f"""{_SQL_VN},
+{_sql_ranked_cells("vn")},
 idx AS (
     SELECT vec_id AS neighbor_id, e AS be, nrm AS bn, cell
     FROM ranked_cells WHERE cr = 1
@@ -669,28 +689,17 @@ def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode(_as_double(F.col("embedding"))).alias("dim", "val"),
     )
     return exploded.groupBy("label", "dim").agg(
-        stable_round(
-            (dec_qsum(F.col("val"), 1e9).cast("double") / F.lit(1e9))
-            / F.count(F.lit(1)),
-            8,
-        ).alias("centroid_val"),
+        stable_round(quantized_avg("val", 9), 8).alias("centroid_val"),
         F.count(F.lit(1)).alias("n_vectors"),
     )
 
 
-CENTROID_ORACLE = """
-WITH exploded AS (
-    SELECT label,
-           generate_subscripts(embedding, 1) - 1 AS dim,
-           unnest(embedding::DOUBLE[]) AS val
-    FROM embeddings
-)
+CENTROID_ORACLE = f"""
 SELECT label, CAST(dim AS INT) AS dim,
-       floor(((sum(CAST(floor(val * 1000000000.0 + 0.5) AS BIGINT))
-               / 1000000000.0)
-              / count(*)) * 100000000.0 + 0.5) / 100000000.0 AS centroid_val,
+       {sql_round(f'{sql_quantized_sum("val", 9)} / count(*)', 8)}
+         AS centroid_val,
        count(*) AS n_vectors
-FROM exploded
+FROM {_SQL_LABEL_DIMS}
 GROUP BY label, dim
 """
 
@@ -792,6 +801,152 @@ def _sqdist(a: Column, b: Column) -> Column:
     )
 
 
+def _vector_blocks(df: DataFrame, id_col: str, vec_col: str, m: int) -> DataFrame:
+    """(id, block, bv): the ``m`` contiguous sub-vector slices of
+    every vector, one row per (vector, subspace)."""
+    sub = (F.size(vec_col) / F.lit(m)).cast("int")
+    return df.select(
+        id_col, F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("block"), vec_col
+    ).select(
+        id_col,
+        "block",
+        F.slice(F.col(vec_col), F.col("block") * sub + 1, sub).alias("bv"),
+    )
+
+
+def _nearest_code(blocks: DataFrame, codebook: DataFrame) -> DataFrame:
+    """``blocks`` (id, block, bv) plus the nearest codeword of their
+    block: ``code_id`` and its squared distance ``d``. The argmin runs
+    against the broadcast codebook, so the vectors never shuffle for
+    it; ties break on code_id."""
+    w = Window.partitionBy(blocks.columns[0], "block").orderBy("d", "code_id")
+    return (
+        blocks.join(F.broadcast(codebook.select("block", "code_id", "cvec")), "block")
+        .withColumn("d", _sqdist(F.col("bv"), F.col("cvec")))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .drop("cvec", "rn")
+    )
+
+
+def lloyd(
+    v: DataFrame,
+    k: int,
+    iters: int,
+    m: int = 1,
+    inertia_out: list | None = None,
+) -> DataFrame:
+    """Lloyd's k-means over a ``(vid, v)`` frame, run independently in
+    each of ``m`` contiguous subspaces in one keyed pass (``block`` is
+    one more grouping key): ``m = 1`` is k-means, ``m = PQ_M`` trains
+    the PQ codebooks. Returns (block, code_id, cvec, n), at most m*k
+    rows — a broadcast table at any corpus size.
+
+    Deterministic and bit-identical to its DuckDB twin
+    (:func:`_lloyd_ctes`): the seeds are the k lowest-vid vectors (one
+    collect, bounded by k; their length gives the dimension), a round
+    assigns with :func:`_nearest_code` and updates with
+    :func:`_quantized_mean`. A code that loses all its members drops
+    out, so a block can end with fewer than k codes. The codebook is
+    checkpointed every round: the next round reads it, and recomputing
+    it would rescan the corpus.
+
+    ``inertia_out``: audit mode — when a list is passed, the inertia
+    after every update (Σ per-block min squared distance) is appended,
+    at one extra assignment pass per round."""
+    seeds = [r["v"] for r in v.orderBy("vid").limit(k).collect()]
+    if not seeds:
+        raise ValueError("lloyd: no input vectors")
+    dim = len(seeds[0])
+    if dim % m:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    sub = dim // m
+    cb = local_frame(
+        v.sparkSession,
+        [
+            (b, c, s[b * sub : (b + 1) * sub])
+            for b in range(m)
+            for c, s in enumerate(seeds, 1)
+        ],
+        "block int, code_id int, cvec array<double>",
+    )
+    blocks = _vector_blocks(v, "vid", "v", m)
+    for _ in range(iters):
+        cb = _quantized_mean(
+            _nearest_code(blocks, cb), ["block", "code_id"], "bv"
+        ).localCheckpoint(eager=True)
+        if inertia_out is not None:
+            inertia_out.append(_nearest_code(blocks, cb).agg(F.sum("d")).first()[0])
+    return cb
+
+
+def _sql_code_dists(codebook: str, where: str = "") -> str:
+    """Every ``blocks`` row (vid, block, bv) against every codeword of
+    ``codebook`` in its block, with squared distance ``d``:
+    ``list_dot_product(df, df)`` reproduces ``_sqdist``'s in-order
+    fold."""
+    return f"""SELECT vid, block, bv, code_id, list_dot_product(df, df) AS d
+        FROM (
+            SELECT bl.vid, bl.block, bl.bv, cb.code_id,
+                   list_transform(generate_series(1, len(bl.bv)),
+                                  x -> bl.bv[x] - cb.cvec[x]) AS df
+            FROM blocks bl JOIN {codebook} cb USING (block){where})"""
+
+
+def _assign_cte(name: str, codebook: str, where: str = "") -> str:
+    """``_nearest_code``'s twin: ``rn = 1`` marks each block's nearest
+    codeword, ties on code_id."""
+    return f"""{name} AS (
+    SELECT vid, block, bv, code_id,
+           row_number() OVER (PARTITION BY vid, block
+                              ORDER BY d, code_id) AS rn
+    FROM ({_sql_code_dists(codebook, where)})
+)"""
+
+
+def _lloyd_ctes(m: int, k: int, iters: int, train_where: str = "") -> str:
+    """CTE prefix replaying :func:`lloyd` in DuckDB over ``vn``
+    (vec_id, e): ``blocks`` (1-based ``list_slice`` == ``F.slice``),
+    seeds ``cb0`` (the k lowest vids), then ``iters`` unrolled rounds
+    ``asg{i}``/``cb{i}`` — cb{i} is (block, code_id, cvec, n) with the
+    integer-summed 1e-9 quantized mean. ``train_where`` (a ``WHERE``
+    on ``bl.vid``) restricts seeds and rounds to a training sample."""
+    sub = f"(len(e) // {m})"
+    ctes = [
+        f"""blocks AS (
+    SELECT vec_id AS vid, bl.block,
+           list_slice(e, bl.block * {sub} + 1, (bl.block + 1) * {sub}) AS bv
+    FROM vn CROSS JOIN
+         (SELECT unnest(generate_series(0, {m - 1})) AS block) bl
+)""",
+        f"""cb0 AS (
+    SELECT block, code_id, bv AS cvec FROM (
+        SELECT block, bv,
+               row_number() OVER (PARTITION BY block ORDER BY vid) AS code_id
+        FROM blocks bl{train_where})
+    WHERE code_id <= {k}
+)""",
+    ]
+    for i in range(1, iters + 1):
+        ctes.append(_assign_cte(f"asg{i}", f"cb{i - 1}", train_where))
+        ctes.append(
+            f"""cb{i} AS (
+    SELECT block, code_id, list(cv ORDER BY dim) AS cvec, min(n) AS n
+    FROM (
+        SELECT block, code_id, dim,
+               {sql_quantized_sum("val", 9)} / count(*) AS cv,
+               count(*) AS n
+        FROM (
+            SELECT block, code_id, generate_subscripts(bv, 1) AS dim,
+                   unnest(bv) AS val
+            FROM asg{i} WHERE rn = 1)
+        GROUP BY block, code_id, dim)
+    GROUP BY block, code_id
+)"""
+        )
+    return ",\n".join(ctes)
+
+
 KMEANS_K = 8
 KMEANS_ITERS = 5
 
@@ -800,89 +955,18 @@ def kmeans_fit(
     vectors: DataFrame,
     k: int = KMEANS_K,
     n_iter: int = KMEANS_ITERS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     inertia_out: list | None = None,
 ) -> DataFrame:
-    """Lloyd's k-means on DataFrames — the training step behind IVF
-    cell lists (``ivf_topk`` consumes centroids; this produces them).
-
-    Deterministic — and cross-engine reproducible: seeds are the k
-    lowest-id vectors, assignment ties break on (distance, cluster_id),
-    and the centroid update is a 1e-9-QUANTIZED mean (long-summed, so
-    it is independent of partial-aggregation order and bit-identical
-    to a DuckDB replay — the same recipe as ``embedding_centroids``).
-    That determinism is what lets ``pq_topk``/``ivfpq_topk``, whose
-    codebooks this trains, carry full hash oracles
-    (``PQ_TOPK_ORACLE``) instead of rows-only checks. Each iteration:
-    assignment = argmin squared distance against the BROADCAST k-row
-    centroid table (the corpus never shuffles for assignment); update =
-    posexplode + (cluster, dim) mean, shuffling only (cluster, dim,
-    partial-sum) triples. Centroid state is k rows — checkpointed per
-    round so the lineage stays flat. Clusters that lose all members
-    drop out (standard Lloyd's degeneracy; k is then effectively
-    smaller). Returns (cluster_id, centroid, n_assigned).
-
-    ``inertia_out``: audit mode — when a list is passed, the inertia
-    (one scalar) is collected after every update and appended, adding
-    one extra assignment pass per iteration. Training runs leave it
-    None; ``kmeans_convergence`` uses it to attest monotonicity."""
-    from pyspark.sql import Window
-
+    """k-means over the (vec_id, embedding) rows of ``vectors``: the
+    ``m = 1`` call of :func:`lloyd`. Returns (cluster_id, centroid,
+    n_assigned)."""
     v = vectors.select(
-        F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("v")
+        F.col("vec_id").alias("vid"), _as_double(F.col("embedding")).alias("v")
     )
-    seed_w = Window.orderBy("vid")
-    cent = (
-        v.orderBy("vid")
-        .limit(k)
-        .select(
-            F.row_number().over(seed_w).alias("cluster_id"),
-            F.col("v").alias("cv"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    w = Window.partitionBy("vid").orderBy("d", "cluster_id")
-    for _ in range(n_iter):
-        assigned = (
-            v.crossJoin(F.broadcast(cent))
-            .withColumn("d", _sqdist(F.col("v"), F.col("cv")))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-        )
-        cent = (
-            assigned.select(
-                "cluster_id", F.posexplode("v").alias("dim", "val")
-            )
-            .groupBy("cluster_id", "dim")
-            .agg(
-                (
-                    (dec_qsum(F.col("val"), 1e9).cast("double") / F.lit(1e9))
-                    / F.count(F.lit(1))
-                ).alias("m"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .groupBy("cluster_id")
-            .agg(
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(F.struct(F.col("dim"), F.col("m")))
-                    ),
-                    lambda s: s.getField("m"),
-                ).alias("cv"),
-                F.first("n").alias("n_assigned"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        if inertia_out is not None:
-            d = (
-                v.crossJoin(F.broadcast(cent.select("cv")))
-                .groupBy("vid")
-                .agg(F.min(_sqdist(F.col("v"), F.col("cv"))).alias("d"))
-            )
-            inertia_out.append(d.agg(F.sum("d")).collect()[0][0])
-    return cent.select(
-        "cluster_id", F.col("cv").alias("centroid"), "n_assigned"
+    return lloyd(v, k, n_iter, inertia_out=inertia_out).select(
+        F.col("code_id").alias("cluster_id"),
+        F.col("cvec").alias("centroid"),
+        F.col("n").alias("n_assigned"),
     )
 
 
@@ -899,13 +983,10 @@ def kmeans_inertia(vectors: DataFrame, centroids: DataFrame) -> float:
 
 def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-vector Lloyd's clustering certificate: (cluster_id,
-    n_assigned, centroid_norm) after KMEANS_ITERS rounds. HASH-ORACLED
-    since round 6: the same unrolled-CTE replay technique as the PQ
-    codebooks (``_pq_ctes``) — deterministic lowest-vid seeding,
-    (distance, cluster_id) tie-breaks, and the 1e-9-quantized
-    decimal-summed centroid mean make every round bit-reproducible in
-    DuckDB (``KMEANS_EMBEDDINGS_ORACLE``), so the centroids themselves
-    are attested, not just convergence booleans."""
+    n_assigned, centroid_norm) after KMEANS_ITERS rounds. Hash-oracled:
+    ``KMEANS_EMBEDDINGS_ORACLE`` replays :func:`lloyd` with
+    :func:`_lloyd_ctes` at m = 1, so the centroids themselves are
+    attested, not just convergence booleans."""
     emb = load_table(spark, sf_dir, "embeddings")
     fitted = kmeans_fit(emb)
     return fitted.select(
@@ -915,62 +996,13 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kmeans_ctes(k: int = KMEANS_K, n_iter: int = KMEANS_ITERS) -> str:
-    """CTE prefix replaying :func:`kmeans_fit` bit-for-bit in DuckDB —
-    the full-vector sibling of ``_pq_ctes`` (same seeding, tie-break,
-    and quantized-mean conventions; ``list_dot_product(df, df)``
-    reproduces ``_sqdist``'s in-order fold). Yields ``c{n_iter}``
-    with (cluster_id, cvec, n_assigned)."""
-    ctes = [
-        """v AS (
-    SELECT vec_id AS vid, embedding::DOUBLE[] AS e FROM embeddings
-)""",
-        f"""c0 AS (
-    SELECT cluster_id, e AS cvec FROM (
-        SELECT e, row_number() OVER (ORDER BY vid) AS cluster_id FROM v)
-    WHERE cluster_id <= {k}
-)""",
-    ]
-    for i in range(1, n_iter + 1):
-        ctes.append(
-            f"""asg{i} AS (
-    SELECT vid, e, cluster_id,
-           row_number() OVER (PARTITION BY vid
-                              ORDER BY list_dot_product(df, df),
-                                       cluster_id) AS rn
-    FROM (
-        SELECT v.vid, v.e, c.cluster_id,
-               list_transform(generate_series(1, len(v.e)),
-                              x -> v.e[x] - c.cvec[x]) AS df
-        FROM v CROSS JOIN c{i - 1} c)
-)"""
-        )
-        ctes.append(
-            f"""c{i} AS (
-    SELECT cluster_id, list(cv ORDER BY dim) AS cvec,
-           min(n) AS n_assigned
-    FROM (
-        SELECT cluster_id, dim,
-               (sum(CAST(floor(val * 1000000000.0 + 0.5) AS BIGINT))
-                  / 1000000000.0) / count(*) AS cv,
-               count(*) AS n
-        FROM (
-            SELECT cluster_id, generate_subscripts(e, 1) AS dim,
-                   unnest(e) AS val
-            FROM asg{i} WHERE rn = 1)
-        GROUP BY cluster_id, dim)
-    GROUP BY cluster_id
-)"""
-        )
-    return ",\n".join(ctes)
-
-
-KMEANS_EMBEDDINGS_ORACLE = f"""WITH {_kmeans_ctes()}
-SELECT CAST(cluster_id AS INT) AS cluster_id,
-       CAST(n_assigned AS BIGINT) AS n_assigned,
+KMEANS_EMBEDDINGS_ORACLE = f"""WITH {_SQL_VN},
+{_lloyd_ctes(1, KMEANS_K, KMEANS_ITERS)}
+SELECT CAST(code_id AS INT) AS cluster_id,
+       CAST(n AS BIGINT) AS n_assigned,
        floor(sqrt(list_dot_product(cvec, cvec)) * 1000000.0 + 0.5)
          / 1000000.0 AS centroid_norm
-FROM c{KMEANS_ITERS}
+FROM cb{KMEANS_ITERS}
 """
 
 
@@ -1077,160 +1109,49 @@ PQ_ITERS = 4
 #: samples/codeword (k * 1000 is the common rule).
 PQ_TRAIN_TARGET = 256
 
-#: (applicationId, sf_dir, sample_mod) -> trained codebook DataFrame.
-#: Codebook training is deterministic and eagerly checkpointed, so
-#: reusing it across the PQ-family queries changes nothing
-#: semantically — it models the production shape (codebooks trained
-#: once, then reused by every encode/search job) and cuts the
-#: driver's correctness pass by ~3 trainings.
-_PQ_CODEBOOK_CACHE: dict[tuple[str, str, int | None], DataFrame] = {}
+
+def _codebooks(emb: DataFrame, sampled: bool = False) -> DataFrame:
+    """PQ codebooks of the (vec_id, v) corpus ``emb``: :func:`lloyd`
+    with ``m = PQ_M``, trained once per call. ``sampled`` trains on
+    every ``max(1, n // PQ_TRAIN_TARGET)``-th vector (one count, a
+    driver scalar), so the training set stays ~PQ_TRAIN_TARGET rows
+    at any scale."""
+    if sampled:
+        mod = max(1, emb.count() // PQ_TRAIN_TARGET)
+        emb = emb.filter(F.col("vec_id") % mod == 0)
+    return lloyd(emb.withColumnRenamed("vec_id", "vid"), PQ_K, PQ_ITERS, PQ_M)
 
 
-def _corpus_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from bigdata_pipelines_aws_glue_spark.operators.skew import spread
+def _adc_tables(
+    emb: DataFrame, codebooks: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """(codes, adc) for asymmetric distance computation over the
+    (vec_id, v) corpus ``emb``:
 
-    return spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _as_double(F.col("embedding")).alias("v")
+    - codes (neighbor_id, block, code_id): every vector's nearest
+      codeword per subspace. 64 float32 dims (256 B) compress to
+      PQ_M=4 5-bit codes (2.5 B packed), ~102x less to scan.
+    - adc (query_id, block, code_id, dq): each query sub-vector's
+      squared distance to every codeword of its block as 1e-9 longs,
+      so a neighbor's PQ_M-term sum is exact in any aggregation
+      order. m*k rows per query — broadcast."""
+    blocks = _vector_blocks(emb, "vec_id", "v", PQ_M)
+    codes = _nearest_code(blocks, codebooks).select(
+        F.col("vec_id").alias("neighbor_id"), "block", "code_id"
     )
-
-
-def _cached_codebooks(
-    spark: SparkSession,
-    sf_dir: str,
-    emb: DataFrame,
-    sampled: bool = False,
-) -> DataFrame:
-    # applicationId is unique per SparkContext — unlike id(), which
-    # the allocator can recycle after a session stop/start, leaving a
-    # cache hit pointing at checkpoint blocks of a dead context
-    key = (spark.sparkContext.applicationId, sf_dir, sampled)
-    if key not in _PQ_CODEBOOK_CACHE:
-        train = emb
-        if sampled:
-            # one metadata-sized driver scalar, same discipline as the
-            # k-means round probes; mod grows with the corpus so the
-            # training set stays ~PQ_TRAIN_TARGET rows at any scale
-            mod = max(1, emb.count() // PQ_TRAIN_TARGET)
-            train = emb.filter(F.col("vec_id") % mod == 0)
-        _PQ_CODEBOOK_CACHE[key] = pq_train(train, vec_col="v")
-    return _PQ_CODEBOOK_CACHE[key]
-
-
-def _vector_blocks(
-    df: DataFrame, id_col: str, vec_col: str, m: int, sub: int
-) -> DataFrame:
-    """(id, block, bv): contiguous sub-vector slices, one row per
-    (vector, subspace)."""
-    parts = [
-        df.select(
-            F.col(id_col),
-            F.lit(b).alias("block"),
-            F.slice(F.col(vec_col), b * sub + 1, sub).alias("bv"),
+    adc = (
+        blocks.filter(F.col("vec_id") < N_QUERIES)
+        .join(F.broadcast(codebooks), "block")
+        .select(
+            F.col("vec_id").alias("query_id"),
+            "block",
+            "code_id",
+            F.floor(
+                _sqdist(F.col("bv"), F.col("cvec")) * 1e9 + F.lit(0.5)
+            ).alias("dq"),
         )
-        for b in range(m)
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def pq_train(
-    vectors: DataFrame,
-    m: int = PQ_M,
-    k: int = PQ_K,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Product-quantization codebooks: deterministic quantized-mean
-    Lloyd's over ALL subspaces in one keyed pass — ``block`` is just
-    another grouping key, exactly as the DuckDB replay
-    (``_pq_ctes``) models it, so m subspaces cost one training run
-    instead of m sequential ones (the per-block ``kmeans_fit`` loop
-    this replaces checkpointed 4x as often and dominated pq_topk's
-    runtime). Identical output by construction: per-block seeds are
-    the k lowest-vid sub-vectors, assignment ties break on
-    (in-order sqdist, code_id), and the update is the
-    1e-9-quantized long-summed mean. Returns (block, code_id, cvec)
-    — m*k rows, a broadcast table at any corpus size. The one-row
-    dim probe is fine here: PQ training is already an iterative
-    driver-side loop (like k-means itself)."""
-    v = vectors.select(
-        F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("v")
     )
-    dim = len(v.select("v").first()["v"])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
-    blocks = _vector_blocks(v, "vid", "v", m, sub)
-    seed_w = Window.partitionBy("block").orderBy("vid")
-    cb = (
-        blocks.withColumn("code_id", F.row_number().over(seed_w))
-        .filter(F.col("code_id") <= k)
-        .select("block", "code_id", F.col("bv").alias("cvec"))
-        .localCheckpoint(eager=True)
-    )
-    asg_w = Window.partitionBy("vid", "block").orderBy("d", "code_id")
-    for _ in range(PQ_ITERS):
-        assigned = (
-            blocks.join(F.broadcast(cb), "block")
-            .withColumn("d", _sqdist(F.col("bv"), F.col("cvec")))
-            .withColumn("rn", F.row_number().over(asg_w))
-            .filter(F.col("rn") == 1)
-        )
-        cb = (
-            assigned.select(
-                "block", "code_id", F.posexplode("bv").alias("dim", "val")
-            )
-            .groupBy("block", "code_id", "dim")
-            .agg(
-                (
-                    (dec_qsum(F.col("val"), 1e9).cast("double") / F.lit(1e9))
-                    / F.count(F.lit(1))
-                ).alias("cv")
-            )
-            .groupBy("block", "code_id")
-            .agg(
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(F.struct(F.col("dim"), F.col("cv")))
-                    ),
-                    lambda s: s.getField("cv"),
-                ).alias("cvec")
-            )
-            .localCheckpoint(eager=True)
-        )
-    return cb
-
-
-def pq_encode(
-    vectors: DataFrame,
-    codebooks: DataFrame,
-    sub: int,
-    m: int = PQ_M,
-    id_col: str = "vec_id",
-    vec_col: str = "v",
-) -> DataFrame:
-    """(vec_id, codes): nearest codeword per subspace — a map over the
-    corpus against the BROADCAST codebook, then an m-row-per-vector
-    regroup. 64 float32 dims (256 B) compress to m=4 5-bit codes
-    (PQ_K=32 -> 20 bits, 2.5 B packed): the ~102x memory reduction
-    that lets a 100 TB embedding corpus be scanned for ADC scoring
-    from RAM."""
-    blocks = _vector_blocks(vectors, id_col, vec_col, m, sub)
-    w = Window.partitionBy(id_col, "block").orderBy("d", "code_id")
-    assigned = (
-        blocks.join(F.broadcast(codebooks), "block")
-        .withColumn("d", _sqdist(F.col("bv"), F.col("cvec")))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-    )
-    return assigned.groupBy(id_col).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("block", "code_id"))),
-            lambda s: s.getField("code_id"),
-        ).alias("codes")
-    )
+    return codes, adc
 
 
 def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1238,16 +1159,13 @@ def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     and IVF — compression rather than candidate pruning): score each
     neighbor by summing, per subspace, the precomputed distance from
     the query's sub-vector to the neighbor's CODEWORD (asymmetric
-    distance computation). The per-query lookup table is m*k rows —
-    broadcast — so scoring scans only the ~2.5-byte codes, never the
-    vectors. Hash-checked end-to-end: the quantized-mean k-means
-    (:func:`kmeans_fit`) makes the codebooks cross-engine
-    deterministic, and per-block ADC distances are 1e-9-quantized
-    longs so their sum is aggregation-order independent — the DuckDB
-    twin (``PQ_TOPK_ORACLE``) replays train+encode+ADC bit-for-bit.
-    At 100 TB, compose with IVF cells to prune before the ADC scan."""
+    distance computation, :func:`_adc_tables`), so scoring scans only
+    the codes, never the vectors. Hash-checked end-to-end: the
+    DuckDB twin (``PQ_TOPK_ORACLE``) replays train+encode+ADC
+    bit-for-bit. At 100 TB, compose with IVF cells to prune before
+    the ADC scan."""
     emb = _corpus_vectors(spark, sf_dir)
-    return _pq_adc_topk(emb, _cached_codebooks(spark, sf_dir, emb))
+    return _pq_adc_topk(emb, _codebooks(emb))
 
 
 def pq_topk_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1264,9 +1182,7 @@ def pq_topk_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-to-end; ``pq_sampled_recall_at10`` documents the quality
     delta vs full-corpus training."""
     emb = _corpus_vectors(spark, sf_dir)
-    return _pq_adc_topk(
-        emb, _cached_codebooks(spark, sf_dir, emb, sampled=True)
-    )
+    return _pq_adc_topk(emb, _codebooks(emb, sampled=True))
 
 
 def pq_sampled_recall_at10(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1284,34 +1200,10 @@ def pq_sampled_recall_at10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_adc_topk(emb: DataFrame, codebooks: DataFrame) -> DataFrame:
-    """Shared encode + ADC + window-top-k tail of the PQ searches."""
-    sub = len(
-        codebooks.select("cvec").first()["cvec"]
-    )
-    codes = pq_encode(emb, codebooks, sub)
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "v"
-    )
-    qblocks = _vector_blocks(queries, "query_id", "v", PQ_M, sub)
-    # per-block distances quantized to 1e-9 longs: the 4-term ADC sum
-    # is then exact and aggregation-order independent (cross-engine)
-    adc = (
-        qblocks.join(F.broadcast(codebooks), "block")
-        .select(
-            "query_id",
-            "block",
-            "code_id",
-            F.floor(
-                _sqdist(F.col("bv"), F.col("cvec")) * 1e9 + F.lit(0.5)
-            ).alias("dq"),
-        )
-    )
-    ncodes = codes.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.posexplode("codes").alias("block", "code_id"),
-    )
+    """Shared ADC + window-top-k tail of the PQ searches."""
+    codes, adc = _adc_tables(emb, codebooks)
     scored = (
-        ncodes.join(F.broadcast(adc), ["block", "code_id"])
+        codes.join(F.broadcast(adc), ["block", "code_id"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .groupBy("query_id", "neighbor_id")
         .agg((F.sum("dq") / F.lit(1e9)).alias("approx_dist"))
@@ -1337,11 +1229,7 @@ def exact_l2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     objective). Same broadcast-queries / window-top-k shape as
     :func:`cosine_topk`. Not registered: it exists as the recall
     reference for ``pq_recall_at10``."""
-    from bigdata_pipelines_aws_glue_spark.operators.skew import spread
-
-    emb = spread(load_table(spark, sf_dir, "embeddings")).select(
-        "vec_id", _as_double(F.col("embedding")).alias("v")
-    )
+    emb = _corpus_vectors(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
@@ -1396,43 +1284,20 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF probe, ADC shortlist, exact re-rank — cross-engine
     deterministic; recall vs exact additionally asserted in tests."""
     emb = _corpus_vectors(spark, sf_dir)
-    # ---- IVF side: quantized per-label centroids, cell assignment
-    cents = label_centroids(load_table(spark, sf_dir, "embeddings"))
-    scored_cells = emb.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "v", "cell", cosine(F.col("v"), F.col("cvec")).alias("cs")
-    )
-    w_cell = Window.partitionBy("vec_id").orderBy(F.col("cs").desc(), "cell")
-    ranked_cells = scored_cells.withColumn("cr", F.row_number().over(w_cell))
+    ranked_cells = _ranked_cells(emb, load_table(spark, sf_dir, "embeddings"))
     index = ranked_cells.filter(F.col("cr") == 1).select(
         F.col("vec_id").alias("neighbor_id"), "cell"
     )
     probes = ranked_cells.filter(
         (F.col("cr") <= N_PROBE) & (F.col("vec_id") < N_QUERIES)
     ).select(F.col("vec_id").alias("query_id"), "cell")
-    # ---- PQ side: codebooks + codes for the whole corpus
-    codebooks = _cached_codebooks(spark, sf_dir, emb)
-    sub = len(codebooks.select("cvec").first()["cvec"])
-    codes = pq_encode(emb, codebooks, sub)
-    queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "v"
-    )
-    qblocks = _vector_blocks(queries, "query_id", "v", PQ_M, sub)
-    adc = qblocks.join(F.broadcast(codebooks), "block").select(
-        "query_id", "block", "code_id",
-        F.floor(
-            _sqdist(F.col("bv"), F.col("cvec")) * 1e9 + F.lit(0.5)
-        ).alias("dq"),
-    )
+    codes, adc = _adc_tables(emb, _codebooks(emb))
     # ---- candidates = IVF-pruned pairs; score from codes only
     cand = probes.join(index, "cell").filter(
         F.col("query_id") != F.col("neighbor_id")
     ).select("query_id", "neighbor_id").distinct()
-    ncodes = codes.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.posexplode("codes").alias("block", "code_id"),
-    )
     adc_scored = (
-        cand.join(ncodes, "neighbor_id")
+        cand.join(codes, "neighbor_id")
         .join(F.broadcast(adc), ["query_id", "block", "code_id"])
         .groupBy("query_id", "neighbor_id")
         .agg((F.sum("dq") / F.lit(1e9)).alias("approx_dist"))
@@ -1446,7 +1311,9 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id")
     )
     # ---- exact cosine re-rank of the shortlist only
-    qv = queries.select("query_id", F.col("v").alias("qv"))
+    qv = emb.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    )
     bv = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("bv"))
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("neighbor_id")
@@ -1471,158 +1338,40 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_ctes(sample_mod_sql: str | None = None) -> str:
-    """CTE prefix replaying PQ train + encode + ADC in DuckDB,
-    bit-for-bit against :func:`pq_train`/:func:`pq_encode`. With
-    ``sample_mod_sql`` (a SQL expression for the sampling modulus,
-    e.g. a scalar subquery over the corpus count), TRAINING (seeds +
-    Lloyd's rounds) sees only vectors with ``vid % mod == 0`` — the
-    fixed-size-sample production recipe — while encode and ADC still
-    cover the full corpus:
-
-    - ``blocks``: contiguous sub-vector slices (1-based list_slice ==
-      ``F.slice``);
-    - ``cb0``: seeds = the PQ_K lowest-vid sub-vectors per block (the
-      ``kmeans_fit`` seeding rule);
-    - ``asg{{i}}``/``cb{{i}}``: PQ_ITERS unrolled Lloyd's rounds —
-      argmin on (in-order sqdist, code_id) exactly like the Spark
-      window, then the 1e-9-quantized BIGINT-summed mean;
-    - ``ncodes``: final assignment (the encode step);
-    - ``adc``: per-(query, block, code) distances as 1e-9 longs, so
-      the ADC sum is exact in any aggregation order.
-
-    ``list_dot_product(df, df)`` reproduces ``_sqdist``'s in-order
-    fold (the proven LSH-oracle precedent). Assumes ``vn`` (vec_id, e,
-    nrm) is already in scope."""
-    sub = f"(len(e) // {PQ_M})"
-    seed_where = (
-        f" WHERE vid % {sample_mod_sql} = 0" if sample_mod_sql else ""
-    )
+    """CTE prefix replaying PQ train + encode + ADC in DuckDB over
+    ``vn``: :func:`_lloyd_ctes` at ``m = PQ_M``, then ``ncodes`` (the
+    final assignment, ``_adc_tables``' codes) and ``adc``
+    (per-(query, block, code) distances as 1e-9 longs). With
+    ``sample_mod_sql`` (a SQL expression for the sampling modulus)
+    only training sees the ``vid % mod = 0`` sample; encode and ADC
+    cover the whole corpus."""
     train_where = (
         f" WHERE bl.vid % {sample_mod_sql} = 0" if sample_mod_sql else ""
     )
-    ctes = [
-        f"""blocks AS (
-    SELECT vec_id AS vid, bl.block,
-           list_slice(e, bl.block * {sub} + 1, (bl.block + 1) * {sub}) AS bv
-    FROM vn CROSS JOIN
-         (SELECT unnest(generate_series(0, {PQ_M - 1})) AS block) bl
-)""",
-        f"""cb0 AS (
-    SELECT block, code_id, bv AS cvec FROM (
-        SELECT block, bv,
-               row_number() OVER (PARTITION BY block ORDER BY vid) AS code_id
-        FROM blocks{seed_where})
-    WHERE code_id <= {PQ_K}
-)""",
-    ]
-
-    def _assign(name: str, codebook: str, extra_where: str = "") -> str:
-        return f"""{name} AS (
-    SELECT vid, block, bv, code_id,
-           row_number() OVER (PARTITION BY vid, block
-                              ORDER BY list_dot_product(df, df), code_id)
-             AS rn
-    FROM (
-        SELECT bl.vid, bl.block, bl.bv, cb.code_id,
-               list_transform(generate_series(1, len(bl.bv)),
-                              x -> bl.bv[x] - cb.cvec[x]) AS df
-        FROM blocks bl JOIN {codebook} cb USING (block){extra_where})
-)"""
-
-    for i in range(1, PQ_ITERS + 1):
-        ctes.append(_assign(f"asg{i}", f"cb{i - 1}", train_where))
-        ctes.append(
-            f"""cb{i} AS (
-    SELECT block, code_id, list(cv ORDER BY dim) AS cvec FROM (
-        SELECT block, code_id, dim,
-               (sum(CAST(floor(val * 1000000000.0 + 0.5) AS BIGINT))
-                  / 1000000000.0) / count(*) AS cv
-        FROM (
-            SELECT block, code_id,
-                   generate_subscripts(bv, 1) AS dim,
-                   unnest(bv) AS val
-            FROM asg{i} WHERE rn = 1)
-        GROUP BY block, code_id, dim)
-    GROUP BY block, code_id
-)"""
-        )
-    ctes.append(_assign("enc", f"cb{PQ_ITERS}"))
-    ctes.append(
-        "ncodes AS (\n"
-        "    SELECT vid AS neighbor_id, block, code_id FROM enc WHERE rn = 1\n)"
-    )
-    ctes.append(
-        f"""adc AS (
+    return f"""{_lloyd_ctes(PQ_M, PQ_K, PQ_ITERS, train_where)},
+{_assign_cte("enc", f"cb{PQ_ITERS}")},
+ncodes AS (
+    SELECT vid AS neighbor_id, block, code_id FROM enc WHERE rn = 1
+),
+adc AS (
     SELECT vid AS query_id, block, code_id,
-           CAST(floor(list_dot_product(df, df) * 1000000000.0 + 0.5)
-                AS BIGINT) AS dq
-    FROM (
-        SELECT bl.vid, bl.block, cb.code_id,
-               list_transform(generate_series(1, len(bl.bv)),
-                              x -> bl.bv[x] - cb.cvec[x]) AS df
-        FROM blocks bl JOIN cb{PQ_ITERS} cb USING (block)
-        WHERE bl.vid < {N_QUERIES})
+           CAST(floor(d * 1000000000.0 + 0.5) AS BIGINT) AS dq
+    FROM ({_sql_code_dists(f"cb{PQ_ITERS}", f" WHERE bl.vid < {N_QUERIES}")})
 )"""
-    )
-    return ",\n".join(ctes)
 
 
-_PQ_TOPK_SELECT = f"""
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-       floor(approx_dist * 100000000.0 + 0.5) / 100000000.0 AS approx_dist
-FROM (
+#: PQ-ADC neighbors ranked per query, as in ``_pq_adc_topk``.
+_SQL_PQ_RANKED = """pq_ranked AS (
     SELECT query_id, neighbor_id, approx_dist,
            row_number() OVER (PARTITION BY query_id
                               ORDER BY approx_dist ASC, neighbor_id) AS rank
-    FROM pq_scored)
-WHERE rank <= {TOP_K}
-"""
-
-PQ_TOPK_ORACLE = f"""WITH {_SQL_VN},
-{_pq_ctes()},
-pq_scored AS (
-    SELECT a.query_id, n.neighbor_id,
-           sum(a.dq) / 1000000000.0 AS approx_dist
-    FROM ncodes n JOIN adc a ON n.block = a.block AND n.code_id = a.code_id
-    WHERE a.query_id <> n.neighbor_id
-    GROUP BY a.query_id, n.neighbor_id
-)
-{_PQ_TOPK_SELECT}
-"""
-
-IVFPQ_TOPK_ORACLE = f"""WITH {_IVF_INDEX_CTES},
-{_pq_ctes()},
-cand AS (
-    SELECT DISTINCT p.query_id, i.neighbor_id
-    FROM probes p JOIN idx i USING (cell)
-    WHERE p.query_id <> i.neighbor_id
-),
-adc_scored AS (
-    SELECT c.query_id, c.neighbor_id,
-           sum(a.dq) / 1000000000.0 AS approx_dist
-    FROM cand c
-    JOIN ncodes n ON n.neighbor_id = c.neighbor_id
-    JOIN adc a ON a.query_id = c.query_id AND a.block = n.block
-              AND a.code_id = n.code_id
-    GROUP BY c.query_id, c.neighbor_id
-),
-shortlist AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY approx_dist ASC, neighbor_id) AS sr
-        FROM adc_scored)
-    WHERE sr <= {IVFPQ_SHORTLIST}
-),
-rr AS (
-    SELECT s.query_id, s.neighbor_id,
-           list_dot_product(q.e, b.e) / (q.nrm * b.nrm) AS score
-    FROM shortlist s
-    JOIN vn q ON q.vec_id = s.query_id
-    JOIN vn b ON b.vec_id = s.neighbor_id
-)
-{_SQL_ANN_TOPK_SELECT.replace("FROM ann_scored", "FROM rr")}
-"""
+    FROM (
+        SELECT a.query_id, n.neighbor_id,
+               sum(a.dq) / 1000000000.0 AS approx_dist
+        FROM ncodes n JOIN adc a ON n.block = a.block AND n.code_id = a.code_id
+        WHERE a.query_id <> n.neighbor_id
+        GROUP BY a.query_id, n.neighbor_id)
+)"""
 
 #: Exact-L2 reference CTEs (exact_scored/exact_topk names match what
 #: ``_SQL_RECALL_SELECT`` expects) — the PQ recall ground truth.
@@ -1646,68 +1395,42 @@ exact_topk AS (
 )
 """
 
-PQ_RECALL_ORACLE = f"""WITH {_SQL_VN},
-{_pq_ctes()},
-pq_scored AS (
-    SELECT a.query_id, n.neighbor_id,
-           sum(a.dq) / 1000000000.0 AS approx_dist
-    FROM ncodes n JOIN adc a ON n.block = a.block AND n.code_id = a.code_id
-    WHERE a.query_id <> n.neighbor_id
-    GROUP BY a.query_id, n.neighbor_id
-),
+
+def _pq_topk_sql(sample_mod_sql: str | None = None) -> str:
+    return f"""WITH {_SQL_VN},
+{_pq_ctes(sample_mod_sql)},
+{_SQL_PQ_RANKED}
+SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
+       {sql_round("approx_dist", 8)} AS approx_dist
+FROM pq_ranked WHERE rank <= {TOP_K}
+"""
+
+
+def _pq_recall_sql(sample_mod_sql: str | None = None) -> str:
+    return f"""WITH {_SQL_VN},
+{_pq_ctes(sample_mod_sql)},
+{_SQL_PQ_RANKED},
 ann_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY approx_dist ASC, neighbor_id)
-                 AS rank
-        FROM pq_scored)
-    WHERE rank <= {TOP_K}
+    SELECT query_id, neighbor_id FROM pq_ranked WHERE rank <= {TOP_K}
 ),
 {_SQL_EXACT_L2_TOPK.strip()}
 {_SQL_RECALL_SELECT}
 """
+
 
 #: sampling modulus computed in SQL from the corpus count — the twin
 #: adapts to any scale factor exactly like the Spark side's
 #: ``emb.count() // PQ_TRAIN_TARGET``.
 _PQ_MOD_SQL = f"(SELECT GREATEST(1, count(*) // {PQ_TRAIN_TARGET}) FROM vn)"
 
-PQ_TOPK_SAMPLED_ORACLE = f"""WITH {_SQL_VN},
-{_pq_ctes(_PQ_MOD_SQL)},
-pq_scored AS (
-    SELECT a.query_id, n.neighbor_id,
-           sum(a.dq) / 1000000000.0 AS approx_dist
-    FROM ncodes n JOIN adc a ON n.block = a.block AND n.code_id = a.code_id
-    WHERE a.query_id <> n.neighbor_id
-    GROUP BY a.query_id, n.neighbor_id
-)
-{_PQ_TOPK_SELECT}
-"""
+PQ_TOPK_ORACLE = _pq_topk_sql()
+PQ_TOPK_SAMPLED_ORACLE = _pq_topk_sql(_PQ_MOD_SQL)
+PQ_RECALL_ORACLE = _pq_recall_sql()
+PQ_SAMPLED_RECALL_ORACLE = _pq_recall_sql(_PQ_MOD_SQL)
 
-PQ_SAMPLED_RECALL_ORACLE = f"""WITH {_SQL_VN},
-{_pq_ctes(_PQ_MOD_SQL)},
-pq_scored AS (
-    SELECT a.query_id, n.neighbor_id,
-           sum(a.dq) / 1000000000.0 AS approx_dist
-    FROM ncodes n JOIN adc a ON n.block = a.block AND n.code_id = a.code_id
-    WHERE a.query_id <> n.neighbor_id
-    GROUP BY a.query_id, n.neighbor_id
-),
-ann_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY approx_dist ASC, neighbor_id)
-                 AS rank
-        FROM pq_scored)
-    WHERE rank <= {TOP_K}
-),
-{_SQL_EXACT_L2_TOPK.strip()}
-{_SQL_RECALL_SELECT}
-"""
-
-IVFPQ_RECALL_ORACLE = f"""WITH {_IVF_INDEX_CTES},
+#: ``ivfpq_topk`` through the exact re-rank: IVF-pruned candidates,
+#: ADC shortlist, exact cosine ``ann_scored``.
+_IVFPQ_ANN_CTES = f"""{_IVF_INDEX_CTES},
 {_pq_ctes()},
 cand AS (
     SELECT DISTINCT p.query_id, i.neighbor_id
@@ -1737,9 +1460,10 @@ ann_scored AS (
     FROM shortlist s
     JOIN vn q ON q.vec_id = s.query_id
     JOIN vn b ON b.vec_id = s.neighbor_id
-),
-{_SQL_ANN_RECALL_TAIL}
-"""
+)"""
+
+IVFPQ_TOPK_ORACLE = f"WITH {_IVFPQ_ANN_CTES}\n{_SQL_ANN_TOPK_SELECT}"
+IVFPQ_RECALL_ORACLE = f"WITH {_IVFPQ_ANN_CTES},\n{_SQL_ANN_RECALL_TAIL}"
 
 
 # ------------------------------- binary (sign-bit) quantization ANN
@@ -1773,8 +1497,6 @@ def binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bounded query side broadcasts, the corpus never shuffles, and
     each candidate costs one XOR + POPCNT. Ties (Hamming is coarse:
     0..64) break on neighbor_id — deterministic cross-engine."""
-    from bigdata_pipelines_aws_glue_spark.operators.skew import spread
-
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     sigs = emb.select("vec_id", _sign_sig("embedding").alias("sig"))
     queries = sigs.filter(F.col("vec_id") < N_QUERIES).select(
@@ -1832,8 +1554,6 @@ def binary_mih_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     MIH recall trade-off the recall audit below measures. Queries
     with fewer candidates than TOP_K return fewer rows (both engines
     replay identically)."""
-    from bigdata_pipelines_aws_glue_spark.operators.skew import spread
-
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     sigs = emb.select("vec_id", _sign_sig("embedding").alias("sig"))
     # band keys via shiftright + MIH_BITS-wide (8-bit) mask
@@ -2053,8 +1773,6 @@ def binary_multiword_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature build is a map-side shrink to 8 bytes/word BEFORE
     anything moves, the bounded query side broadcasts, ties break on
     neighbor_id. Integer-only, so the oracle is exact."""
-    from bigdata_pipelines_aws_glue_spark.operators.skew import spread
-
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     sigs = emb.select("vec_id", _mw_sig("embedding").alias("sig"))
     queries = sigs.filter(F.col("vec_id") < N_QUERIES).select(
@@ -2085,8 +1803,6 @@ def binary_multiword_mih_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     BNLJ at any size; random signs sit at expected distance 96, so
     corpus candidates are band-collision-driven (~n*24/256 per
     query), which the recall audit below prices."""
-    from bigdata_pipelines_aws_glue_spark.operators.skew import spread
-
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     sigs = emb.select("vec_id", _mw_sig("embedding").alias("sig"))
     # (word, byte) band key: arithmetic-vs-logical shift is
@@ -2164,8 +1880,6 @@ def binary_mih_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus side is untouched: probes explode on the BOUNDED query
     side only, and candidates still come from the bucketed
     (band, key) equi-join."""
-    from bigdata_pipelines_aws_glue_spark.operators.skew import spread
-
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     sigs = emb.select("vec_id", _sign_sig("embedding").alias("sig"))
     bands = sigs.select(
@@ -2246,8 +1960,6 @@ def binary_multiword_mih_multiprobe_topk(
     Probes explode only on the BOUNDED query side (9x); candidates
     still come from the bucketed (band, key) EQUI-join, corpus side
     untouched — no BNLJ at any scale."""
-    from bigdata_pipelines_aws_glue_spark.operators.skew import spread
-
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     sigs = emb.select("vec_id", _mw_sig("embedding").alias("sig"))
     bands = sigs.select(
@@ -2398,8 +2110,6 @@ def binary_asymmetric_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     compare ``binary_hamming_recall_at10``). Query components
     quantize to integer millionths so the score is integer-exact
     cross-engine; ranking is DESC score, neighbor_id ties."""
-    from bigdata_pipelines_aws_glue_spark.operators.skew import spread
-
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     sigs = emb.select("vec_id", _sign_sig("embedding").alias("sig"))
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(

@@ -1,12 +1,140 @@
-"""k-means (Lloyd's on DataFrames) convergence + determinism tests."""
+"""The Lloyd's kernel (``similarity.lloyd``) against a pure-Python
+replay on literal vectors, k-means convergence and determinism, the
+PQ and IVF-PQ searches built on it, and the partition- and
+AQE-invariance of its consumers."""
 
 from __future__ import annotations
 
+import math
+
+import pytest
+
+from bigdata_pipelines_aws_glue_spark.operators.semdedup import semdedup_prune
 from bigdata_pipelines_aws_glue_spark.operators.similarity import (
+    ivfpq_topk,
+    kmeans_embeddings,
     kmeans_fit,
     kmeans_inertia,
+    lloyd,
+    pq_topk_sampled,
 )
+from bigdata_pipelines_aws_glue_spark.sources.local import local_frame
 from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
+
+#: m = 1, k = 3: vid 3 repeats seed 2, so code 3 ties code 2 for every
+#: vector, loses them all on code_id and drops out; vid 4 sits at
+#: distance 4 from both code 1 and code 2 in round 1.
+VECTORS_M1 = {
+    1: [0.0, 0.0],
+    2: [4.0, 0.0],
+    3: [4.0, 0.0],
+    4: [2.0, 0.0],
+    5: [0.1, 0.3],
+    6: [3.9, -0.2],
+    7: [4.2, 0.1],
+}
+
+#: m = 2, k = 2: in block 1, vids 1 and 2 (the seeds) are equal, so
+#: code 2 drops out of block 1 only; in block 0, vid 3 is equidistant
+#: from both seeds.
+VECTORS_M2 = {
+    1: [1.0, 2.0, 0.5, 0.5],
+    2: [3.0, 2.0, 0.5, 0.5],
+    3: [2.0, 2.0, 1.5, -0.5],
+    4: [0.7, 1.9, 0.25, 0.75],
+    5: [3.3, 2.2, 0.6, 0.4],
+    6: [1.1, 1.7, -0.3, 0.9],
+}
+
+
+def _sqdist(a: list[float], b: list[float]) -> float:
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + (x - y) * (x - y)
+    return acc
+
+
+def _qmean(xs: list[float]) -> float:
+    total = sum(math.floor(x * 1e9 + 0.5) for x in xs)
+    return (float(total) / 1e9) / len(xs)
+
+
+def _lloyd_replay(vectors: dict, k: int, iters: int, m: int) -> dict:
+    """{(block, code_id): (cvec, n)}: seeds are the k lowest vids,
+    ties break on (distance, code_id), means are integer-summed at
+    1e-9."""
+    vids = sorted(vectors)
+    sub = len(vectors[vids[0]]) // m
+    out = {}
+    for b in range(m):
+        x = {vid: vectors[vid][b * sub : (b + 1) * sub] for vid in vids}
+        cb = {c: x[vid] for c, vid in enumerate(vids[:k], 1)}
+        for _ in range(iters):
+            members: dict[int, list] = {}
+            for vid in vids:
+                best = min(cb, key=lambda c: (_sqdist(x[vid], cb[c]), c))
+                members.setdefault(best, []).append(x[vid])
+            cb = {c: [_qmean(list(d)) for d in zip(*xs)] for c, xs in members.items()}
+        out.update({(b, c): (cb[c], len(members[c])) for c in cb})
+    return out
+
+
+def _lloyd(spark, vectors: dict, k: int, iters: int, m: int) -> dict:
+    frame = local_frame(
+        spark, list(vectors.items()), "vid long, v array<double>"
+    )
+    return {
+        (r["block"], r["code_id"]): (list(r["cvec"]), r["n"])
+        for r in lloyd(frame, k, iters, m).collect()
+    }
+
+
+@pytest.mark.parametrize(
+    "vectors, k, iters, m, dropped, kept",
+    [
+        (VECTORS_M1, 3, 2, 1, (0, 3), (0, 2)),
+        (VECTORS_M2, 2, 3, 2, (1, 2), (0, 2)),
+    ],
+    ids=["m1", "m2"],
+)
+def test_lloyd_matches_python_replay(spark, vectors, k, iters, m, dropped, kept):
+    got = _lloyd(spark, vectors, k, iters, m)
+    assert got == _lloyd_replay(vectors, k, iters, m)
+    assert dropped not in got
+    assert kept in got
+    for block in range(m):
+        # every vector is assigned once per block
+        assert sum(n for (b, _), (_, n) in got.items() if b == block) == len(
+            vectors
+        )
+
+
+def test_lloyd_rejects_indivisible_dimension(spark):
+    with pytest.raises(ValueError, match="not divisible"):
+        _lloyd(spark, VECTORS_M2, 2, 1, 3)
+
+
+def test_lloyd_consumers_partition_and_aqe_invariant(spark, sf_dir):
+    consumers = [kmeans_embeddings, pq_topk_sampled, ivfpq_topk, semdedup_prune]
+    keys = ["spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled"]
+    saved = [spark.conf.get(k) for k in keys]
+    results = {}
+    try:
+        for parts in ("1", "7"):
+            for aqe in ("true", "false"):
+                spark.conf.set(keys[0], parts)
+                spark.conf.set(keys[1], aqe)
+                results[(parts, aqe)] = [
+                    sorted(tuple(r) for r in fn(spark, sf_dir).collect())
+                    for fn in consumers
+                ]
+    finally:
+        for k, v in zip(keys, saved):
+            spark.conf.set(k, v)
+    first, *rest = results.values()
+    assert all(len(rows) > 0 for rows in first)
+    for setting, rows in results.items():
+        assert rows == first, setting
 
 
 def test_kmeans_inertia_monotone_nonincreasing(spark, sf_dir):

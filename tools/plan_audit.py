@@ -443,9 +443,6 @@ WHITELIST: dict[str, dict[str, str]] = {
         "ForcedBroadcastUnbounded": "k-row coarse centroids + m*k-row codebooks — fixed size at any "
         "corpus scale",
     },
-    "kmeans_embeddings": {
-        "BroadcastNestedLoopJoin": "k-row centroid broadcast per assignment round",
-    },
     "kmeans_convergence": {
         "BroadcastNestedLoopJoin": "k-row centroid broadcast per assignment/inertia round + 1-row "
         "count x 1-row sum crossJoin for the certificate row",
