@@ -4,21 +4,23 @@ real curation pipeline must group pairs into clusters and elect one
 canonical document per cluster. This is connected components over the
 similarity graph.
 
-Spark-first design: iterative min-label propagation on DataFrames.
-Each round is one self-contained stage pair (join labels to the
-symmetric edge list, groupBy-min, least() merge); lineage is truncated
-every round with ``localCheckpoint`` so the plan doesn't grow
-unboundedly (the classic iterative-Spark failure mode). Rounds needed
-= graph diameter; LSH/Jaccard duplicate graphs are near-cliques
-(diameter 2-3 in practice), so this settles in a handful of shuffles.
-For adversarially chainy graphs the O(log n)-round alternating
+Spark-first design: min-label propagation on DataFrames through the
+package's one min-propagation kernel, :func:`graph.relax`: the
+symmetric edge list is checkpointed once, and each round sends only
+the labels that moved in the round before, keeps the per-node minimum
+and checkpoints the label state, whose moved-row count rides that
+checkpoint as an observed metric (no probe job). Rounds needed = graph
+diameter + 1; LSH/Jaccard duplicate graphs are near-cliques (diameter
+2-3 in practice), so this settles in a handful of shuffles, and a
+graph that does not settle within ``CC_MAX_ROUNDS`` raises. For
+adversarially chainy graphs the O(log n)-round alternating
 large-star/small-star contraction (Kiveris et al., "Connected
-Components in MapReduce and Beyond") is the drop-in upgrade; the label
-state here is already (node, component) so the swap is local.
+Components in MapReduce and Beyond") is the drop-in upgrade,
+:func:`connected_components_star`.
 
 The cluster assignment is oracle-checked end-to-end: DuckDB computes
 the same components via a recursive transitive-closure CTE over the
-identical Jaccard pair list.
+identical pair list (:func:`_closure_oracle`).
 """
 
 from __future__ import annotations
@@ -29,76 +31,48 @@ from pyspark.sql import functions as F
 from bigdata_pipelines_aws_glue_spark import registry
 from bigdata_pipelines_aws_glue_spark.operators.dedup import (
     NGRAM_JACCARD_ORACLE,
+    SIMHASH_HAMMING_ORACLE,
+    dedup_simhash_hamming,
     ngram_jaccard_pairs,
 )
+from bigdata_pipelines_aws_glue_spark.operators.graph import relax
 from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
 
-def jaccard_pairs_checkpointed(
-    spark: SparkSession, sf_dir: str, threshold: float = 0.8
-) -> DataFrame:
-    """The lineage-truncated Jaccard>=threshold pair stage shared by
-    ``dedup_clusters`` and ``dedup_clusters_star`` (both consume the
-    identical pair list — that identity is the point of the
-    cross-algorithm attestation). ``localCheckpoint(eager=True)``
-    caps the iterative-CC plan growth: the CC rounds re-read the
-    pairs, and recomputing them would rerun the shingle self-join."""
-    docs = load_table(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs(docs, threshold=threshold).localCheckpoint(
-        eager=True
-    )
+
+#: Label-propagation rounds: rounds needed = graph diameter + 1 (the
+#: last one confirms that nothing moved).
+CC_MAX_ROUNDS = 25
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 25,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """Min-label propagation: every node converges to the smallest node
     id reachable from it. Returns (node, component).
 
-    Each iteration shuffles (node, component) pairs only — never
-    payload columns — so the per-round cost at 100 TB is bounded by
-    |V| + |E| longs, not document bytes. Convergence is detected with
-    a limit(1) existence probe (no full count over the label table).
+    The symmetric edge list is checkpointed (every round reads it) and
+    handed to :func:`graph.relax` with every node labelled by itself.
+    Each round shuffles (node, label) pairs of the nodes whose label
+    moved — never payload columns — so the per-round cost at 100 TB is
+    bounded by |V| + |E| ids, not document bytes. A graph whose
+    diameter needs more than ``CC_MAX_ROUNDS`` rounds raises
+    ``RuntimeError``: its labels would be wrong components.
     """
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    sym = e.union(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).distinct()
-    sym = sym.localCheckpoint(eager=True)
-    labels = sym.select("u").distinct().withColumn("comp", F.col("u"))
-    for _ in range(max_iter):
-        nbr_min = (
-            sym.join(
-                labels.select(F.col("u").alias("v"), F.col("comp")), "v"
-            )
-            .groupBy("u")
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        new_labels = (
-            labels.join(nbr_min, "u", "left")
-            .select(
-                "u",
-                F.least(
-                    F.col("comp"), F.coalesce("nbr_comp", "comp")
-                ).alias("comp"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "u")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels.select(
-        F.col("u").alias("node"), F.col("comp").alias("component")
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    sym = (
+        e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .distinct()
+        .localCheckpoint(eager=True)
     )
+    init = sym.select(F.col("src").alias("node"), F.col("src").alias("d"))
+    labels, settled = relax(sym, init.distinct(), CC_MAX_ROUNDS)
+    if not settled:
+        raise RuntimeError(
+            f"connected_components did not converge within "
+            f"{CC_MAX_ROUNDS} rounds; the graph's diameter needs more — "
+            f"use connected_components_star, whose rounds are O(log n)"
+        )
+    return labels.select("node", F.col("d").alias("component"))
 
 
 def connected_components_star(
@@ -165,27 +139,23 @@ def connected_components_star(
             break
         nxt = small_star(large_star(cur)).localCheckpoint(eager=True)
         n_nxt = nxt.count()
-        # cheap count gate first (both sides are checkpointed and
-        # distinct, so equal sets iff equal counts AND one-sided
-        # containment) — the exceptAll co-group only runs on the
-        # final converged round
+        # both sides are checkpointed and distinct, so the sets are
+        # equal iff the counts are equal AND one contains the other;
+        # the count gate keeps the exceptAll co-group to the last round
         converged = n_nxt == n_cur and (
             nxt.exceptAll(cur).limit(1).count() == 0
         )
         cur, n_cur = nxt, n_nxt
     if not converged:
-        # loud failure (ADVICE r11): labels read off a non-star edge
-        # set would be silently wrong components.
+        # labels read off a non-star edge set would be wrong components
         raise RuntimeError(
             f"connected_components_star did not converge within "
             f"max_iter={max_iter} rounds ({n_cur} edges remaining); "
             f"raise max_iter — rounds needed are O(log n)"
         )
     # star forest: every edge is (node, root). Roots label themselves.
-    # NB: nodes derive from the CHECKPOINTED edge set — deriving from
-    # `e` would re-execute the (possibly expensive) upstream pair
-    # lineage a second time (measured on dedup_clusters_star: the
-    # Jaccard pair plan re-ran just to list vertices).
+    # Nodes derive from the checkpointed edge set, so listing them
+    # does not re-run the upstream pair lineage.
     nodes = (
         base.select("u")
         .union(base.select(F.col("v").alias("u")))
@@ -203,47 +173,49 @@ def connected_components_star(
     )
 
 
-def assign_dedup_clusters(
-    docs: DataFrame, pairs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
+def _assign(docs: DataFrame, comp: DataFrame) -> DataFrame:
+    """``(doc_id, cluster_id, is_canonical)`` for every document, from a
+    ``(node, component)`` frame; a document in no pair is a singleton
+    cluster and its own canonical."""
+    cluster = F.coalesce("component", F.col("doc_id"))
+    return docs.join(
+        comp.select(F.col("node").alias("doc_id"), "component"),
+        "doc_id",
+        "left",
+    ).select(
+        "doc_id",
+        cluster.alias("cluster_id"),
+        (cluster == F.col("doc_id")).alias("is_canonical"),
+    )
+
+
+def assign_dedup_clusters(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Every document gets a cluster id (= min doc_id of its component;
     singletons cluster with themselves) and a canonical flag. Keep rows
     where ``is_canonical`` to materialize the deduplicated corpus."""
-    comp = connected_components(pairs, src="doc_a", dst="doc_b")
-    return (
-        docs.join(
-            comp.select(F.col("node").alias(id_col), F.col("component")),
-            id_col,
-            "left",
-        )
-        .select(
-            F.col(id_col),
-            F.coalesce("component", F.col(id_col)).alias("cluster_id"),
-            (F.coalesce("component", F.col(id_col)) == F.col(id_col)).alias(
-                "is_canonical"
-            ),
-        )
-    )
+    return _assign(docs, connected_components(pairs, src="doc_a", dst="doc_b"))
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N2 end-to-end: Jaccard>=0.8 pairs -> connected components ->
     per-document cluster assignment + canonical election."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = jaccard_pairs_checkpointed(spark, sf_dir, threshold=0.8)
+    pairs = ngram_jaccard_pairs(docs, threshold=0.8)
     return assign_dedup_clusters(docs, pairs)
 
 
-# DuckDB twin: recursive transitive closure over the SAME pair list
-# (the UNION recursion is set-semantics, so it terminates), then
-# component = min reachable id. Fine at oracle scale; the Spark side
-# is the one that has to survive 100 TB.
-DEDUP_CLUSTERS_ORACLE = f"""
-WITH RECURSIVE pairs AS MATERIALIZED ({NGRAM_JACCARD_ORACLE}),
+def _closure_oracle(pairs_sql: str, a: str, b: str) -> str:
+    """DuckDB twin of the cluster assignment: recursive transitive
+    closure over the ``(a, b)`` pair list ``pairs_sql`` (the UNION
+    recursion is set-semantics, so it terminates), then component =
+    min reachable id. Fine at oracle scale; the Spark side is the one
+    that has to survive 100 TB."""
+    return f"""
+WITH RECURSIVE pairs AS MATERIALIZED ({pairs_sql}),
 sym AS MATERIALIZED (
-    SELECT doc_a AS u, doc_b AS v FROM pairs
+    SELECT {a} AS u, {b} AS v FROM pairs
     UNION
-    SELECT doc_b AS u, doc_a AS v FROM pairs
+    SELECT {b} AS u, {a} AS v FROM pairs
 ),
 reach(u, v) AS (
     SELECT u, v FROM sym
@@ -258,6 +230,9 @@ SELECT d.doc_id,
        coalesce(c.component, d.doc_id) = d.doc_id AS is_canonical
 FROM documents d LEFT JOIN comp c ON d.doc_id = c.node
 """
+
+
+DEDUP_CLUSTERS_ORACLE = _closure_oracle(NGRAM_JACCARD_ORACLE, "doc_a", "doc_b")
 
 
 def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -271,64 +246,23 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     graphs whose diameter is NOT clique-like (provenance chains,
     citation paths): rounds scale with log n, not diameter."""
     docs = load_table(spark, sf_dir, "documents")
-    pairs = jaccard_pairs_checkpointed(spark, sf_dir, threshold=0.8)
+    pairs = ngram_jaccard_pairs(docs, threshold=0.8)
     comp = connected_components_star(pairs, src="doc_a", dst="doc_b")
-    return docs.join(
-        comp.select(F.col("node").alias("doc_id"), F.col("component")),
-        "doc_id",
-        "left",
-    ).select(
-        F.col("doc_id"),
-        F.coalesce("component", F.col("doc_id")).alias("cluster_id"),
-        (F.coalesce("component", F.col("doc_id")) == F.col("doc_id")).alias(
-            "is_canonical"
-        ),
-    )
+    return _assign(docs, comp)
 
 
 def dedup_simhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash-family N2 completion (r11): the Hamming<=3 pair list
-    from ``dedup_simhash_hamming`` grouped into connected components
-    with canonical election — the integer-exact mirror of
+    """SimHash-family N2 completion: the Hamming<=3 pair list from
+    ``dedup_simhash_hamming`` grouped into connected components with
+    canonical election — the integer-exact mirror of
     ``dedup_clusters`` (whose pairs carry a float Jaccard threshold).
     Same label-propagation core; the pair stage is the df-capped
     Manku block equi-join, so the whole path stays sub-quadratic."""
-    from bigdata_pipelines_aws_glue_spark.operators.dedup import (
-        dedup_simhash_hamming,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup_simhash_hamming(spark, sf_dir).select(
         F.col("doc_id_a").alias("doc_a"), F.col("doc_id_b").alias("doc_b")
     )
     return assign_dedup_clusters(docs, pairs)
-
-
-def _simhash_clusters_oracle() -> str:
-    from bigdata_pipelines_aws_glue_spark.operators.dedup import (
-        SIMHASH_HAMMING_ORACLE,
-    )
-
-    return f"""
-WITH RECURSIVE pairs AS MATERIALIZED ({SIMHASH_HAMMING_ORACLE}),
-sym AS MATERIALIZED (
-    SELECT doc_id_a AS u, doc_id_b AS v FROM pairs
-    UNION
-    SELECT doc_id_b AS u, doc_id_a AS v FROM pairs
-),
-reach(u, v) AS (
-    SELECT u, v FROM sym
-    UNION
-    SELECT r.u, s.v FROM reach r JOIN sym s ON r.v = s.u
-),
-comp AS (
-    SELECT u AS node, least(u, min(v)) AS component FROM reach GROUP BY u
-)
-SELECT d.doc_id,
-       coalesce(c.component, d.doc_id) AS cluster_id,
-       coalesce(c.component, d.doc_id) = d.doc_id AS is_canonical
-FROM documents d LEFT JOIN comp c ON d.doc_id = c.node
-"""
 
 
 def corpus_curation_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -367,7 +301,7 @@ def _register() -> None:
     registry.register(
         "dedup_simhash_clusters",
         dedup_simhash_clusters,
-        _simhash_clusters_oracle(),
+        _closure_oracle(SIMHASH_HAMMING_ORACLE, "doc_id_a", "doc_id_b"),
     )
     registry.register(
         "dedup_clusters_star", dedup_clusters_star, DEDUP_CLUSTERS_ORACLE

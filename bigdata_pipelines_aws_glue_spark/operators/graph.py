@@ -1,17 +1,23 @@
 """Iterative graph analytics on DataFrames: the one PageRank kernel
-(:func:`pagerank`) and its DuckDB twin (``PAGERANK_CTES``), weighted
-PageRank over the customer–supplier trade graph (SURVEY.md §2
-adjacency — the iterative-algorithm family next to k-means/BPE; method
-is the public Page et al. 1999 formulation), the part co-occurrence
-triangle census and k-hop reachability.
+(:func:`pagerank`) and its DuckDB twin (``PAGERANK_CTES``), the one
+min-propagation kernel (:func:`relax`: bounded Bellman-Ford, BFS hop
+counts and the min-label propagation behind
+``clustering.connected_components``), weighted PageRank, BFS and
+Bellman-Ford over the customer–supplier trade graph (SURVEY.md §2
+adjacency — the iterative-algorithm family next to k-means/BPE;
+method is the public Page et al. 1999 formulation), the part
+co-occurrence triangle census and k-hop reachability.
 
 Trade graph: an undirected bipartite graph built from the fact tables
-— customer ``o_custkey`` is linked to supplier ``l_suppkey`` with
-weight = number of lineitems traded between them (lineitem ⋈ orders,
-grouped). Undirected means both directions are materialized as
-directed edges, so every node has out-degree ≥ 1 — no dangling-mass
-special case. Supplier node ids are offset by ``SUPPLIER_NODE_BASE``
-to share one id space with customers.
+by one Spark function (:func:`_trade_edges`) and one SQL generator
+(:func:`_trade_edges_sql`) — customer ``o_custkey`` is linked to
+supplier ``l_suppkey`` with an aggregate over the lineitems traded
+between them as the edge value (lineitem ⋈ orders, grouped): their
+count for PageRank, the cheapest price for Bellman-Ford. Undirected
+means both directions are materialized as directed edges, so every
+node has out-degree ≥ 1 — no dangling-mass special case. Supplier
+node ids are offset by ``SUPPLIER_NODE_BASE`` to share one id space
+with customers.
 
 Rank update (damping d = ``PR_DAMP``, n source nodes):
 ``r'(v) = (1-d)/n + d·Σ_{u→v} r(u)·w(u,v)/W(u)``
@@ -20,17 +26,18 @@ independent, exact in both engines), which is what lets the DuckDB
 twin replay all ``PR_ITERS`` rounds as unrolled CTEs and the result
 hash-check despite being an iterative float algorithm.
 
-Scale posture (100 TB): each round is an equi-join of the normalized
-edge list against the rank table keyed by src plus a keyed
-aggregation on dst — the standard Pregel-as-join shape. The final
-top-N is TakeOrderedAndProject, never a global sort. The one value
-brought to the driver is a single scalar: the node count, for the
-teleport constant.
+Scale posture (100 TB): each round is an equi-join of the edge list
+against the node state keyed by src plus a keyed aggregation on dst —
+the standard Pregel-as-join shape. The final top-N is
+TakeOrderedAndProject, never a global sort. The values brought to the
+driver are scalars: PageRank's node count, for the teleport constant,
+and, per :func:`relax` round, the count of improved nodes, observed on
+the round's checkpoint.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata_pipelines_aws_glue_spark import registry
@@ -137,65 +144,138 @@ r0 AS (
 )
 
 
-def _trade_edges(lineitem: DataFrame, orders: DataFrame) -> DataFrame:
-    """(src, dst, w): both directions of the weighted bipartite graph."""
-    pairs = lineitem.join(
-        orders, F.col("l_orderkey") == F.col("o_orderkey")
-    ).select(F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp"))
-    wts = pairs.groupBy("cust", "supp").agg(F.count(F.lit(1)).alias("w"))
-    fwd = wts.select(
-        F.col("cust").alias("src"),
-        (F.col("supp") + F.lit(SUPPLIER_NODE_BASE)).alias("dst"),
-        "w",
+def relax(
+    edges: DataFrame, init: DataFrame, rounds: int
+) -> tuple[DataFrame, bool]:
+    """The one min-propagation kernel: ``(state, settled)`` after at
+    most ``rounds`` rounds over ``edges`` = ``(src, dst[, cost])``
+    from ``init`` = ``(node, d)``. After round k, ``d(v)`` is the
+    minimum of its ``init`` value and of ``d(u) + cost`` (``d(u)`` if
+    there is no ``cost`` column) over every path u→v of at most k
+    edges. With a cost column this is bounded Bellman-Ford (unit cost
+    gives BFS hop counts); without one it is min-label propagation,
+    for any orderable id type. ``state`` is ``(node, d)`` for every
+    node with a value; ``settled`` means the last round run improved
+    nothing, so more rounds would change nothing.
+
+    Only nodes improved in the previous round send, so a round
+    shuffles the frontier's out-edges; the result is still that of
+    relaxing every node, because a node that did not improve already
+    sent its current value. A round is the union of the state (its
+    value kept as ``old``) with the candidates ``frontier ⋈ edges``,
+    a min per node, a ``fresh`` flag (``d < old``, or a node reached
+    for the first time) and one eager checkpoint. The count of fresh
+    rows rides that checkpoint as an observed metric: it is the one
+    value per round brought to the driver, and no probe job runs.
+
+    Materialization rule: the caller passes a materialized edge list,
+    because every round reads it; the kernel checkpoints the initial
+    state and each round's state, because each is read twice per
+    round (as the frontier and as the kept values)."""
+    sent = F.col("d")
+    if "cost" in edges.columns:
+        sent = sent + F.col("cost")
+    fresh = F.col("old").isNull() | (F.col("d") < F.col("old"))
+    state = init.select("node", "d", F.lit(True).alias("fresh"))
+    state = state.localCheckpoint(eager=True)
+    no_old = F.lit(None).cast(state.schema["d"].dataType).alias("old")
+    settled = False
+    for _ in range(rounds):
+        frontier = state.filter("fresh").withColumnRenamed("node", "src")
+        cand = edges.join(frontier, "src").select(
+            F.col("dst").alias("node"), sent.alias("d"), no_old
+        )
+        merged = (
+            state.select("node", "d", F.col("d").alias("old"))
+            .unionByName(cand)
+            .groupBy("node")
+            .agg(F.min("d").alias("d"), F.min("old").alias("old"))
+            .select("node", "d", fresh.alias("fresh"))
+        )
+        improved = Observation()
+        state = merged.observe(
+            improved, F.count_if("fresh").alias("n")
+        ).localCheckpoint(eager=True)
+        settled = improved.get["n"] == 0
+        if settled:
+            break
+    return state.select("node", "d"), settled
+
+
+def _trade_edges(
+    lineitem: DataFrame, orders: DataFrame, w: Column
+) -> DataFrame:
+    """``(src, dst, <w>)``: both directions of every customer–supplier
+    link, ``w`` an aliased aggregate over the link's lineitems."""
+    wts = (
+        lineitem.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        .groupBy(
+            F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp")
+        )
+        .agg(w)
     )
-    rev = wts.select(
-        (F.col("supp") + F.lit(SUPPLIER_NODE_BASE)).alias("src"),
-        F.col("cust").alias("dst"),
-        "w",
-    )
+    cust, supp = F.col("cust"), F.col("supp") + F.lit(SUPPLIER_NODE_BASE)
+    fwd = wts.select(cust.alias("src"), supp.alias("dst"), wts.columns[2])
+    rev = wts.select(supp.alias("src"), cust.alias("dst"), wts.columns[2])
     return fwd.unionByName(rev)
 
 
-def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-``PR_TOPN`` nodes of the trade graph by :func:`pagerank`.
-    Emits the rank position, node type/id, and the
-    (1e-9-deterministic) PageRank value."""
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    top = top_ranked(pagerank(_trade_edges(lineitem, orders)))
-    is_supp = F.col("node") >= SUPPLIER_NODE_BASE
-    return top.select(
-        "pos",
-        F.when(is_supp, F.lit("supplier"))
-        .otherwise(F.lit("customer"))
-        .alias("node_type"),
-        F.when(is_supp, F.col("node") - SUPPLIER_NODE_BASE)
-        .otherwise(F.col("node"))
+def _typed(node: Column) -> list[Column]:
+    """``node_type`` and ``node_id`` of a trade-graph node id."""
+    sup = node >= SUPPLIER_NODE_BASE
+    return [
+        F.when(sup, F.lit("supplier")).otherwise(F.lit("customer")).alias(
+            "node_type"
+        ),
+        F.when(sup, node - SUPPLIER_NODE_BASE)
+        .otherwise(node)
         .alias("node_id"),
-        stable_round(F.col("r"), 9).alias("pagerank"),
-    )
+    ]
 
 
-PAGERANK_ORACLE = f"""
-WITH pairs AS (
-    SELECT o_custkey AS cust, l_suppkey AS supp
+def _trade_edges_sql(w: str) -> str:
+    """The CTEs ``wts (cust, supp, w)`` and ``edges (src, dst, w)``,
+    the SQL twin of :func:`_trade_edges`. Valid Spark SQL as well as
+    DuckDB, since :data:`RECURSIVE_REACH_SQL` runs in both engines."""
+    return f"""wts AS (
+    SELECT o_custkey AS cust, l_suppkey AS supp, {w} AS w
     FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-),
-wts AS (
-    SELECT cust, supp, CAST(count(*) AS BIGINT) AS w
-    FROM pairs GROUP BY cust, supp
+    GROUP BY 1, 2
 ),
 edges AS (
     SELECT cust AS src, supp + {SUPPLIER_NODE_BASE} AS dst, w FROM wts
     UNION ALL
     SELECT supp + {SUPPLIER_NODE_BASE} AS src, cust AS dst, w FROM wts
-),
-{PAGERANK_CTES}
-SELECT CAST(pos AS INT) AS pos,
-       CASE WHEN node >= {SUPPLIER_NODE_BASE} THEN 'supplier'
+)"""
+
+
+#: The SQL twin of :func:`_typed` over a ``node`` column.
+_TYPED_SQL = f"""CASE WHEN node >= {SUPPLIER_NODE_BASE} THEN 'supplier'
             ELSE 'customer' END AS node_type,
        CASE WHEN node >= {SUPPLIER_NODE_BASE}
-            THEN node - {SUPPLIER_NODE_BASE} ELSE node END AS node_id,
+            THEN node - {SUPPLIER_NODE_BASE} ELSE node END AS node_id"""
+
+
+def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-``PR_TOPN`` nodes of the trade graph by :func:`pagerank`,
+    edge weight = number of lineitems traded on the link. Emits the
+    rank position, node type/id, and the (1e-9-deterministic)
+    PageRank value."""
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    edges = _trade_edges(lineitem, orders, F.count(F.lit(1)).alias("w"))
+    return top_ranked(pagerank(edges)).select(
+        "pos",
+        *_typed(F.col("node")),
+        stable_round(F.col("r"), 9).alias("pagerank"),
+    )
+
+
+PAGERANK_ORACLE = f"""
+WITH {_trade_edges_sql("CAST(count(*) AS BIGINT)")},
+{PAGERANK_CTES}
+SELECT CAST(pos AS INT) AS pos,
+       {_TYPED_SQL},
        floor(r * 1000000000.0 + 0.5) / 1000000000.0 AS pagerank
 FROM (
     SELECT node, r, row_number() OVER (ORDER BY r DESC, node) AS pos
@@ -363,16 +443,7 @@ FROM counts, nodes, tri, wt
 _REACH_SEED_MAX = 10
 _REACH_MAX_HOPS = 2
 RECURSIVE_REACH_SQL = f"""
-WITH RECURSIVE wts AS (
-    SELECT o_custkey AS cust, l_suppkey AS supp
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    GROUP BY 1, 2
-),
-edges AS (
-    SELECT cust AS src, supp + {SUPPLIER_NODE_BASE} AS dst FROM wts
-    UNION ALL
-    SELECT supp + {SUPPLIER_NODE_BASE} AS src, cust AS dst FROM wts
-),
+WITH RECURSIVE {_trade_edges_sql("1")},
 reach(node, hops) AS (
     SELECT CAST(c_custkey AS BIGINT), 0
     FROM customer WHERE c_custkey < {_REACH_SEED_MAX}
@@ -381,10 +452,7 @@ reach(node, hops) AS (
     FROM reach r JOIN edges e ON e.src = r.node
     WHERE r.hops < {_REACH_MAX_HOPS}
 )
-SELECT CASE WHEN node >= {SUPPLIER_NODE_BASE} THEN 'supplier'
-            ELSE 'customer' END AS node_type,
-       CASE WHEN node >= {SUPPLIER_NODE_BASE}
-            THEN node - {SUPPLIER_NODE_BASE} ELSE node END AS node_id,
+SELECT {_TYPED_SQL},
        CAST(min(hops) AS INT) AS min_hops,
        CAST(count(*) AS BIGINT) AS n_paths
 FROM reach GROUP BY 1, 2
@@ -395,8 +463,7 @@ def recursive_trade_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-hop reachability on the trade graph through Spark 4's NATIVE
     recursive CTE (``WITH RECURSIVE`` landed in Spark 4.0; the engine
     plans the fixpoint itself — a UnionLoop, no driver-side iteration
-    or checkpointing like :func:`pagerank_trade_graph` hand-rolls for
-    its weighted update). Emits, per reachable node, the BFS distance
+    or checkpointing). Emits, per reachable node, the BFS distance
     from the seed customers and the exact count of distinct trade
     paths. DuckDB runs the IDENTICAL SQL text — the dialects agree on
     recursion semantics, so the oracle is the same string.
@@ -412,6 +479,28 @@ def recursive_trade_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(RECURSIVE_REACH_SQL)
 
 
+def _trade_relax(
+    spark: SparkSession, sf_dir: str, cost: Column, rounds: int
+) -> DataFrame:
+    """``(node_type, node_id, d)``: :func:`relax` for ``rounds`` rounds
+    over the trade graph with edge cost ``cost`` (an aggregate over
+    the link's lineitems), from the seed customers at d = 0."""
+    edges = _trade_edges(
+        load_table(spark, sf_dir, "lineitem"),
+        load_table(spark, sf_dir, "orders"),
+        cost.alias("cost"),
+    ).localCheckpoint(eager=True)
+    seeds = (
+        load_table(spark, sf_dir, "customer")
+        .filter(F.col("c_custkey") < _REACH_SEED_MAX)
+        .select(
+            F.col("c_custkey").alias("node"), F.lit(0).cast("long").alias("d")
+        )
+    )
+    dist, _ = relax(edges, seeds, rounds)
+    return dist.select(*_typed(F.col("node")), "d")
+
+
 #: Depth for the frontier-deduplicated BFS form. Deeper than the
 #: UNION-ALL variant's 2 because dedup makes depth cheap: per-node
 #: state is one (node, min_hops) row, never a path.
@@ -423,87 +512,26 @@ def trade_reach_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     form that survives dense graphs, closing
     :func:`recursive_trade_reach`'s documented caveat: UNION ALL
     recursion enumerates PATHS (exponential in the worst case, the
-    hop bound its only guard), while this iterates joins with a
-    distinct + anti-join per round, so per-node state is one
-    (node, min_hops) row regardless of path multiplicity — the
-    ``connected_components`` machinery applied to BFS.
+    hop bound its only guard), while here per-node state is one
+    (node, min_hops) row regardless of path multiplicity.
 
     Spark rejects UNION-distinct recursion as of 4.1, so the Spark
-    side is a driver loop (one stage pair per hop, lineage truncated
-    with eager localCheckpoint exactly like connected_components;
-    early exit on an empty frontier via a limit(1) probe). The DuckDB
-    twin IS the UNION-distinct recursive CTE — min(hops) over
-    set-semantics recursion is the same BFS distance, so the two
-    forms attest each other.
+    side is :func:`relax` at unit edge cost for
+    ``_FRONTIER_MAX_HOPS`` rounds, stopping early once a round reaches
+    nothing new. The DuckDB twin IS the UNION-distinct recursive CTE
+    — min(hops) over set-semantics recursion is the same BFS distance,
+    so the two forms attest each other.
 
-    Scale: each round shuffles (frontier x avg-degree) node ids only;
-    visited is bounded by |V| longs. At 100 TB the per-round cost is
-    |E_touched| + |V| — never the path count the UNION-ALL form pays.
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    wts = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("cust"),
-            F.col("l_suppkey").alias("supp"),
-        )
-        .distinct()
-    )
-    fwd = wts.select(
-        F.col("cust").cast("long").alias("src"),
-        (F.col("supp") + SUPPLIER_NODE_BASE).cast("long").alias("dst"),
-    )
-    edges = fwd.union(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
-
-    seeds = cust.filter(F.col("c_custkey") < _REACH_SEED_MAX).select(
-        F.col("c_custkey").cast("long").alias("node")
-    )
-    visited = seeds.withColumn(
-        "min_hops", F.lit(0)
-    ).localCheckpoint(eager=True)
-    frontier = visited.select("node")
-    for h in range(1, _FRONTIER_MAX_HOPS + 1):
-        nxt = (
-            edges.join(
-                frontier.withColumnRenamed("node", "src"), "src"
-            )
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited, "node", "left_anti")
-            .withColumn("min_hops", F.lit(h))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.limit(1).count() == 0:
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt.select("node")
-    sup = F.col("node") >= SUPPLIER_NODE_BASE
-    return visited.select(
-        F.when(sup, F.lit("supplier"))
-        .otherwise(F.lit("customer"))
-        .alias("node_type"),
-        F.when(sup, F.col("node") - SUPPLIER_NODE_BASE)
-        .otherwise(F.col("node"))
-        .alias("node_id"),
-        F.col("min_hops").cast("int").alias("min_hops"),
+    Scale: each round shuffles the frontier's out-edges and the
+    (node, min_hops) state, never the path count the UNION-ALL form
+    pays."""
+    return _trade_relax(spark, sf_dir, F.lit(1), _FRONTIER_MAX_HOPS).select(
+        "node_type", "node_id", F.col("d").cast("int").alias("min_hops")
     )
 
 
 FRONTIER_REACH_ORACLE = f"""
-WITH RECURSIVE wts AS (
-    SELECT o_custkey AS cust, l_suppkey AS supp
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    GROUP BY 1, 2
-),
-edges AS (
-    SELECT cust AS src, supp + {SUPPLIER_NODE_BASE} AS dst FROM wts
-    UNION ALL
-    SELECT supp + {SUPPLIER_NODE_BASE} AS src, cust AS dst FROM wts
-),
+WITH RECURSIVE {_trade_edges_sql("1")},
 reach(node, hops) AS (
     SELECT CAST(c_custkey AS BIGINT), 0
     FROM customer WHERE c_custkey < {_REACH_SEED_MAX}
@@ -512,10 +540,7 @@ reach(node, hops) AS (
     FROM reach r JOIN edges e ON e.src = r.node
     WHERE r.hops < {_FRONTIER_MAX_HOPS}
 )
-SELECT CASE WHEN node >= {SUPPLIER_NODE_BASE} THEN 'supplier'
-            ELSE 'customer' END AS node_type,
-       CASE WHEN node >= {SUPPLIER_NODE_BASE}
-            THEN node - {SUPPLIER_NODE_BASE} ELSE node END AS node_id,
+SELECT {_TYPED_SQL},
        CAST(min(hops) AS INT) AS min_hops
 FROM reach GROUP BY 1, 2
 """
@@ -535,65 +560,13 @@ def bellman_ford_trade_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the bounded-horizon variant, the honest trade documented for
     ``recursive_trade_reach`` applied to WEIGHTED distance).
 
-    Spark: K driver-loop rounds of (edges JOIN dist ON src) -> min per
-    node — one keyed shuffle pair per round, lineage truncated with
-    eager localCheckpoint (the connected_components/frontier-BFS
-    machinery). The DuckDB twin unrolls the same K rounds as
-    MATERIALIZED CTEs, so a hash match replays every relaxation."""
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    wts = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(
-            F.col("o_custkey").alias("cust"),
-            F.col("l_suppkey").alias("supp"),
-            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-        )
-        .groupBy("cust", "supp")
-        .agg(F.min("cents").alias("cost"))
-    )
-    fwd = wts.select(
-        F.col("cust").cast("long").alias("src"),
-        (F.col("supp") + SUPPLIER_NODE_BASE).cast("long").alias("dst"),
-        "cost",
-    )
-    edges = fwd.union(
-        fwd.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst"), "cost"
-        )
-    ).localCheckpoint(eager=True)
-
-    dist = (
-        cust.filter(F.col("c_custkey") < _REACH_SEED_MAX)
-        .select(F.col("c_custkey").cast("long").alias("node"))
-        .withColumn("d", F.lit(0).cast("long"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(_BF_ROUNDS):
-        relaxed = (
-            edges.join(dist.withColumnRenamed("node", "src"), "src")
-            .select(
-                F.col("dst").alias("node"), (F.col("d") + F.col("cost")).alias("d")
-            )
-        )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("d").alias("d"))
-            .localCheckpoint(eager=True)
-        )
-    sup = F.col("node") >= SUPPLIER_NODE_BASE
-    return dist.select(
-        F.when(sup, F.lit("supplier")).otherwise(F.lit("customer")).alias(
-            "node_type"
-        ),
-        F.when(sup, F.col("node") - SUPPLIER_NODE_BASE)
-        .otherwise(F.col("node"))
-        .alias("node_id"),
-        F.col("d").alias("min_cost_cents"),
+    Spark: :func:`relax` for ``_BF_ROUNDS`` rounds, stopping early once
+    a round improves nothing. The DuckDB twin unrolls the same K
+    full rounds as MATERIALIZED CTEs, so a hash match replays every
+    relaxation."""
+    cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)).cast("long")
+    return _trade_relax(spark, sf_dir, F.min(cents), _BF_ROUNDS).select(
+        "node_type", "node_id", F.col("d").alias("min_cost_cents")
     )
 
 
@@ -602,7 +575,7 @@ def _bf_round_sql(i: int) -> str:
     SELECT node, min(d) AS d FROM (
         SELECT node, d FROM d{i - 1}
         UNION ALL
-        SELECT e.dst AS node, p.d + e.cost AS d
+        SELECT e.dst AS node, p.d + e.w AS d
         FROM d{i - 1} p JOIN edges e ON e.src = p.node
     ) GROUP BY node
 )"""
@@ -612,28 +585,16 @@ _BF_ROUNDS_SQL = ",\n".join(
     _bf_round_sql(i) for i in range(1, _BF_ROUNDS + 1)
 )
 
+_SQL_CENTS = "CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)"
+
 BELLMAN_FORD_ORACLE = f"""
-WITH wts AS MATERIALIZED (
-    SELECT o_custkey AS cust, l_suppkey AS supp,
-           min(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT)) AS cost
-    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-    GROUP BY 1, 2
-),
-edges AS MATERIALIZED (
-    SELECT cust AS src, supp + {SUPPLIER_NODE_BASE} AS dst, cost FROM wts
-    UNION ALL
-    SELECT supp + {SUPPLIER_NODE_BASE} AS src, cust AS dst, cost FROM wts
-),
+WITH {_trade_edges_sql(f"min({_SQL_CENTS})")},
 d0 AS MATERIALIZED (
     SELECT CAST(c_custkey AS BIGINT) AS node, CAST(0 AS BIGINT) AS d
     FROM customer WHERE c_custkey < {_REACH_SEED_MAX}
 ),
 {_BF_ROUNDS_SQL}
-SELECT CASE WHEN node >= {SUPPLIER_NODE_BASE} THEN 'supplier'
-            ELSE 'customer' END AS node_type,
-       CAST(CASE WHEN node >= {SUPPLIER_NODE_BASE}
-                 THEN node - {SUPPLIER_NODE_BASE} ELSE node END AS BIGINT)
-           AS node_id,
+SELECT {_TYPED_SQL},
        CAST(d AS BIGINT) AS min_cost_cents
 FROM d{_BF_ROUNDS}
 """

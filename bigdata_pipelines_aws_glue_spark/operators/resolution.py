@@ -17,10 +17,11 @@ standard blocking formulation per Christen's survey), Spark-first:
    DuckDB — identical classic DP semantics, exact integers) with a
    fixed ``MAX_EDIT`` threshold.
 4. **Cluster + survivorship.** Connected components over the match
-   graph (reusing ``clustering.connected_components`` min-label
-   propagation) and lexicographic-min canonical election give the
-   golden-record mapping every raw row can be redirected through
-   with one equi-join.
+   graph (``clustering.connected_components``: min-label propagation
+   through ``graph.relax``, which takes string ids as they are) label
+   each name with its component's lexicographic-min name, the
+   canonical, giving the golden-record mapping every raw row can be
+   redirected through with one equi-join.
 
 Both queries are exact (integer distances, string mins), so the
 DuckDB twins — including a recursive transitive-closure CTE for the

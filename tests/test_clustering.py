@@ -30,6 +30,19 @@ def test_cc_chain_triangle_and_isolated(spark):
     }
 
 
+def test_cc_raises_when_rounds_run_out(spark):
+    """A 41-node chain needs 41 label-propagation rounds, more than
+    ``CC_MAX_ROUNDS``: labels read off the unsettled state would be
+    wrong components, so the call raises instead."""
+    import pytest
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(edges)
+
+
 def test_assign_clusters_singletons_and_canonical(spark):
     docs = spark.createDataFrame(
         [(i, f"doc {i}") for i in (1, 2, 3, 7, 9)], "doc_id long, text string"
@@ -58,13 +71,14 @@ def test_cc_label_columns_only_in_shuffle(spark):
 
 
 def test_star_contraction_matches_truth_and_label_prop(spark):
-    """Kiveris large-star/small-star CC (r11): exact agreement with a
+    """Kiveris large-star/small-star CC: exact agreement with a
     union-find ground truth on (a) a 512-node CHAIN — the diameter-
-    bound pathology where 25-round label propagation cannot converge
-    — (b) a random multi-component graph, (c) star+triangle; and
-    agreement with label propagation on the clique-like shapes where
-    both are in-contract."""
+    bound pathology on which label propagation runs out of rounds and
+    raises — (b) a random multi-component graph, (c) star+triangle;
+    and agreement with label propagation on the clique-like shapes
+    where both are in-contract."""
     import numpy as np
+    import pytest
 
     from bigdata_pipelines_aws_glue_spark.operators.clustering import (
         connected_components,
@@ -106,6 +120,10 @@ def test_star_contraction_matches_truth_and_label_prop(spark):
         }
         assert star == truth_of(edges), name
 
+    df = spark.createDataFrame(cases["chain512"], "src long, dst long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(df)
+
     # clique-like: both algorithms agree (label prop is in-contract)
     df = spark.createDataFrame(cases["star+tri"], "src long, dst long")
     lp = {
@@ -120,7 +138,7 @@ def test_star_contraction_matches_truth_and_label_prop(spark):
 
 
 def test_star_contraction_raises_on_max_iter_exhaustion(spark):
-    """Non-convergence must be LOUD (ADVICE r11): labels read off a
+    """Non-convergence must be loud: labels read off a
     non-star edge set would be silently wrong components."""
     import pytest
 
