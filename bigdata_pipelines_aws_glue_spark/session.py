@@ -10,7 +10,18 @@ for correctness-at-scale:
   runtime re-planner that makes a static plan survive 100 TB inputs,
 - Arrow enabled for the few pandas-UDF operators (multimodal, LSH),
 - shuffle partitions sized for local[32] tests; on a real cluster AQE
-  coalesces from a deliberately high initial number.
+  coalesces from a deliberately high initial number,
+- Python workers forked from ``daemon`` (``spark.python.daemon.module``),
+  which stops each task from re-reading ``pyspark.zip`` and the other
+  archives on the worker's path,
+- ``spark.executorEnv.PYTHONPATH`` set to the directory holding this
+  package, so workers import the checkout the driver imported.
+
+Deployment rule these imply: an executor's Python must import this
+package when it starts, because the daemon module is imported before
+any task adds its paths. Install the package on the executors, or put
+it on ``spark.executorEnv.PYTHONPATH``; shipping it only through
+``addPyFile`` or ``--py-files`` no longer suffices.
 """
 
 from __future__ import annotations
@@ -20,6 +31,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -55,6 +67,8 @@ def get_spark(
         "spark.sql.autoBroadcastJoinThreshold": "64m",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         "spark.ui.enabled": "false",
+        "spark.python.daemon.module": f"{__package__}.daemon",
+        "spark.executorEnv.PYTHONPATH": PACKAGE_ROOT,
     }
     if extra_conf:
         conf.update(extra_conf)
