@@ -4,18 +4,22 @@
   set against the full corpus; vector math via ``zip_with`` /
   ``aggregate`` higher-order functions (JVM codegen, no Python).
   The baseline every approximate method is validated against.
-- ``ann_lsh_topk`` — random-hyperplane LSH: 16-bit signatures via
-  deterministic pseudo-random planes, Hamming-bucket candidate
-  generation, exact re-scoring of candidates only. Candidate
-  generation is a hash-bucket equi-join, never a cross join.
+- Banded ANN: one candidate kernel serves hyperplane LSH
+  (``ann_lsh_topk``) and the four multi-index-Hamming searches. A
+  signature is an ``array<bigint>`` (:func:`sign_words`, or the
+  16-bit :func:`lsh_signature` as one word); :func:`_bands` cuts it
+  into (band, key) rows and :func:`_probe` equi-joins each query's
+  keys, XORed with a probe-mask set, against the band table. Its
+  DuckDB twin is :func:`_sql_probe`. Candidate generation is never a
+  cross join.
 - IVF (``ivf_topk``): per-label centroids (``label_centroids``) as
   coarse cells, ranked per vector by :func:`_ranked_cells`.
 - PQ-ADC (``pq_topk``, ``ivfpq_topk``) and k-means: one Lloyd's
   kernel, :func:`lloyd`, trains both the k-means centroids (one
   subspace) and the PQ codebooks (``PQ_M`` subspaces); its DuckDB
   twin is :func:`_lloyd_ctes`.
-- binary sign-bit ANN (brute force, multi-index Hamming, multi-word
-  signatures, asymmetric scoring).
+- Every search ends in one per-query window top-k, :func:`_top_k`;
+  its twin is :func:`_sql_topk`.
 
 Every mean vector here is :func:`_quantized_mean` — 1e-9-quantized
 components summed as exact integers — so centroids and codebooks are
@@ -74,6 +78,29 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def _top_k(scored: DataFrame, *order: Column | str) -> DataFrame:
+    """``scored`` (query_id, neighbor_id, …) cut to each query's
+    ``TOP_K`` best rows: ``rank`` is the row number by ``order``, ties
+    broken on neighbor_id, placed after neighbor_id in the output. A
+    window top-k — local heaps per query, no global sort. DuckDB twin:
+    :func:`_sql_topk`."""
+    w = Window.partitionBy("query_id").orderBy(*order, "neighbor_id")
+    rest = [c for c in scored.columns if c not in ("query_id", "neighbor_id")]
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= TOP_K)
+        .select("query_id", "neighbor_id", "rank", *rest)
+    )
+
+
+def _cosine_top_k(scored: DataFrame) -> DataFrame:
+    """:func:`_top_k` by descending ``score``, then rounded to 8
+    decimals (twin: :func:`_sql_cosine_topk`)."""
+    return _top_k(scored, F.col("score").desc()).withColumn(
+        "score", stable_round(F.col("score"), 8)
+    )
+
+
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-k cosine neighbors for each query vector (excluding
     self). Query side is broadcast — the corpus never shuffles; the
@@ -99,46 +126,8 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            stable_round(F.col("score"), 8).alias("score"),
-        )
-    )
+    return _cosine_top_k(scored)
 
-
-COSINE_TOPK_ORACLE = f"""
-WITH q AS (
-    SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-    FROM embeddings WHERE vec_id < {N_QUERIES}
-),
-b AS (
-    SELECT vec_id AS neighbor_id, embedding::DOUBLE[] AS bv FROM embeddings
-),
-scored AS (
-    SELECT query_id, neighbor_id,
-           list_dot_product(qv, bv)
-             / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(bv, bv)))
-             AS score
-    FROM q JOIN b ON query_id <> neighbor_id
-),
-ranked AS (
-    SELECT query_id, neighbor_id, score,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY score DESC, neighbor_id) AS rank
-    FROM scored
-)
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-       floor((score) * 100000000.0 + 0.5) / 100000000.0 AS score
-FROM ranked WHERE rank <= {TOP_K}
-"""
 
 N_PLANES = 16
 
@@ -189,100 +178,96 @@ LSH_BANDS = 4
 BITS_PER_BAND = N_PLANES // LSH_BANDS
 
 
-def _band_keys(sig: Column) -> Column:
-    """Split the 16-bit signature into 4 banded bucket keys: two
-    vectors are candidates if ANY band matches (standard OR-of-ANDs
-    amplification — matches the MinHash banding in dedup.py)."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.shiftright(sig, b * BITS_PER_BAND)
-                .bitwiseAND(F.lit((1 << BITS_PER_BAND) - 1))
-                .alias("key"),
-            )
-            for b in range(LSH_BANDS)
-        ]
+def _bands(items: DataFrame, n_bands: int, bits: int) -> DataFrame:
+    """``items`` (vec_id, sig, …), ``sig`` an ``array<bigint>``
+    signature, as one row per (vector, band) with the band's
+    ``bits``-wide key ``bkey``: band b reads word b DIV (64 DIV bits)
+    at shift (b % (64 DIV bits)) * bits. Vectors sharing any
+    (band, bkey) are candidates — OR-of-ANDs amplification, as in the
+    MinHash banding of dedup.py. Arithmetic vs logical shift is
+    irrelevant under the mask, so both engines agree. DuckDB twin:
+    :func:`_sql_probe`."""
+    per_word = 64 // bits
+    return items.withColumn(
+        "band", F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1)))
+    ).withColumn(
+        "bkey",
+        F.expr(
+            f"shiftright(element_at(sig, CAST(band DIV {per_word} AS INT) + 1),"
+            f" (band % {per_word}) * {bits}) & {(1 << bits) - 1}"
+        ),
     )
+
+
+def _probe(bands: DataFrame, masks: tuple[int, ...]) -> DataFrame:
+    """Candidate pairs of a :func:`_bands` table: each query vector
+    (vec_id < N_QUERIES) probes every band key XOR each of ``masks``
+    in an equi-join on (band, bkey). Returns the distinct (query_id,
+    q_<payload>, neighbor_id, n_<payload>), the payload being every
+    other column of ``bands``. ``masks`` = (0,) is the plain search
+    and skips the probe explode; a wider set explodes only the
+    bounded query side, so the indexed corpus is untouched."""
+    payload = [c for c in bands.columns if c not in ("vec_id", "band", "bkey")]
+    key = F.col("bkey")
+    if masks != (0,):
+        key = F.explode(F.array(*[key.bitwiseXOR(F.lit(m)) for m in masks]))
+    q = bands.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        *[F.col(c).alias(f"q_{c}") for c in payload],
+        "band",
+        key.alias("bkey"),
+    )
+    n = bands.select(
+        F.col("vec_id").alias("neighbor_id"),
+        *[F.col(c).alias(f"n_{c}") for c in payload],
+        "band",
+        "bkey",
+    )
+    return (
+        q.join(n, ["band", "bkey"])
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .drop("band", "bkey")
+        .distinct()
+    )
+
+
+def _lsh_bands(v: DataFrame) -> DataFrame:
+    """``v`` (vec_id, v, …) in :func:`_bands` form over its one-word
+    hyperplane signature, which is then dropped: LSH_BANDS bands of
+    BITS_PER_BAND bits."""
+    sigs = v.withColumn("sig", F.array(lsh_signature(F.col("v"))))
+    return _bands(sigs, LSH_BANDS, BITS_PER_BAND).drop("sig")
 
 
 #: Multi-probe masks: besides each band's own bucket (mask 0), the
 #: query side also probes the buckets at Hamming distance 1 within
-#: the band — 5x the query-side bucket lookups, ZERO change to the
-#: indexed corpus (the standard multi-probe asymmetry: index once,
-#: probe wider). Measured at sf0.01 this lifts mean recall@10 from
-#: 0.36 to 0.84 at the cost of ~5x candidates on the bounded query
-#: sample only.
+#: the band — 5x the query-side bucket lookups, no change to the
+#: indexed corpus.
 PROBE_MASKS = tuple([0] + [1 << i for i in range(BITS_PER_BAND)])
 
 
 def _ann_lsh_topk_impl(
     spark: SparkSession, sf_dir: str, probe_masks: tuple[int, ...] = (0,)
 ) -> DataFrame:
-    """Approximate top-k: candidates share at least one LSH band
-    bucket (equi-join on (band, key)), then exact cosine re-scoring of
-    candidates only. At 100 TB: signatures are 2 bytes/vector, the
-    banded bucket join replaces the O(n²) cross join, and band count /
-    probe width trade recall for fan-out."""
-    emb = _corpus_vectors(spark, sf_dir)
-    sig = emb.select("vec_id", "v", lsh_signature(F.col("v")).alias("sig"))
-    bands = sig.select(
-        "vec_id", "v", F.explode(_band_keys(F.col("sig"))).alias("bk")
-    ).select("vec_id", "v", "bk.band", "bk.key")
-    q = bands.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        "band",
-        "key",
-    )
-    if len(probe_masks) > 1:
-        q = q.select(
-            "query_id",
-            "qv",
-            "band",
-            F.explode(
-                F.array(
-                    *[F.col("key").bitwiseXOR(F.lit(m)) for m in probe_masks]
-                )
-            ).alias("key"),
-        )
-    cand = (
-        q.join(
-            bands.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("v").alias("bv"),
-                "band",
-                "key",
-            ),
-            ["band", "key"],
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "qv", "bv")
-        .distinct()
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
+    """Approximate top-k: candidates share at least one probed LSH
+    band bucket, then exact cosine re-scoring of candidates only. At
+    100 TB: signatures are 2 bytes/vector, the banded bucket join
+    replaces the O(n²) cross join, and band count / probe width trade
+    recall for fan-out."""
+    cand = _probe(_lsh_bands(_corpus_vectors(spark, sf_dir)), probe_masks)
+    return _cosine_top_k(
         cand.select(
             "query_id",
             "neighbor_id",
-            cosine(F.col("qv"), F.col("bv")).alias("score"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            stable_round(F.col("score"), 8).alias("score"),
+            cosine(F.col("q_v"), F.col("n_v")).alias("score"),
         )
     )
 
 
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-probe banded LSH ANN (see :func:`_ann_lsh_topk_impl`).
-    Rows-only entry; quality is attested by ``ann_lsh_recall_at10``."""
+    Hash-checked against ``LSH_TOPK_ORACLE``; quality is attested by
+    ``ann_lsh_recall_at10``."""
     return _ann_lsh_topk_impl(spark, sf_dir)
 
 
@@ -365,24 +350,12 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = probes.join(index, "cell").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
+    return _cosine_top_k(
         cand.select(
             "query_id",
             "neighbor_id",
             cosine(F.col("qv"), F.col("bv")).alias("score"),
-        )
-        .distinct()
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            stable_round(F.col("score"), 8).alias("score"),
-        )
+        ).distinct()
     )
 
 
@@ -416,19 +389,7 @@ def matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "score"
         ),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            stable_round(F.col("score"), 8).alias("score"),
-        )
-    )
+    return _cosine_top_k(scored)
 
 
 def matryoshka_recall_at10(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -476,51 +437,109 @@ def ivf_recall_at10(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall_vs_exact(cosine_topk(spark, sf_dir), ivf_topk(spark, sf_dir))
 
 
-#: Shared SQL fragments for the recall oracles. ``_SQL_VN`` gives every
-#: vector its norm once; ``_SQL_EXACT_TOPK`` is the brute-force side.
-_SQL_VN = f"""
-vn AS (
+#: DuckDB twins start from ``vn``, every vector with its norm, and
+#: ``all_pairs``, the brute-force candidate set (each query with
+#: every other vector). DuckDB does not run a CTE nothing reads.
+_SQL_VN = f"""vn AS (
     SELECT vec_id, embedding::DOUBLE[] AS e,
            sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
     FROM embeddings
-)
-"""
-
-_SQL_EXACT_TOPK = f"""
-exact_scored AS (
-    SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
-           list_dot_product(q.e, b.e) / (q.nrm * b.nrm) AS score
-    FROM vn q JOIN vn b ON q.vec_id < {N_QUERIES} AND q.vec_id <> b.vec_id
 ),
-exact_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY score DESC, neighbor_id) AS rank
-        FROM exact_scored)
-    WHERE rank <= {TOP_K}
-)
-"""
+all_pairs AS (
+    SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id
+    FROM embeddings q JOIN embeddings n
+      ON q.vec_id < {N_QUERIES} AND q.vec_id <> n.vec_id
+)"""
 
-_SQL_RECALL_SELECT = f"""
+#: cosine of a candidate pair over its ``q``/``n`` rows of ``vn``
+_SQL_COSINE = "list_dot_product(q.e, n.e) / (q.nrm * n.nrm) AS score"
+
+
+def _sql_scored(name: str, cand: str, table: str, score: str) -> str:
+    """CTE ``name``: the (query_id, neighbor_id) pairs of ``cand``
+    with ``score``, an expression over their ``table`` rows ``q`` and
+    ``n``."""
+    return f"""{name} AS (
+    SELECT c.query_id, c.neighbor_id, {score}
+    FROM {cand} c JOIN {table} q ON q.vec_id = c.query_id
+    JOIN {table} n ON n.vec_id = c.neighbor_id
+)"""
+
+
+def _sql_topk(src: str, order: str) -> str:
+    """:func:`_top_k`'s twin: the rows of ``src`` with ``rank``, the
+    row number per query by ``order`` then neighbor_id, cut at
+    TOP_K."""
+    return f"""SELECT * FROM (
+    SELECT *, row_number() OVER (PARTITION BY query_id
+                                 ORDER BY {order}, neighbor_id) AS rank
+    FROM {src})
+WHERE rank <= {TOP_K}"""
+
+
+def _sql_cosine_topk(src: str) -> str:
+    """:func:`_cosine_top_k`'s twin: the final select over ``src``."""
+    return f"""SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
+       {sql_round("score", 8)} AS score
+FROM ({_sql_topk(src, "score DESC")})"""
+
+
+def _sql_recall(ann_order: str, exact_order: str) -> str:
+    """:func:`_recall_vs_exact`'s twin, the tail of every recall
+    oracle: the top-k of the ``ann_scored`` and ``exact_scored`` CTEs
+    its prefix defines, joined per query."""
+    return f"""ann_topk AS ({_sql_topk("ann_scored", ann_order)}),
+exact_topk AS ({_sql_topk("exact_scored", exact_order)})
 SELECT e.query_id,
        CAST(count(a.neighbor_id) AS BIGINT) AS hits,
        count(a.neighbor_id)::DOUBLE / {TOP_K}.0::DOUBLE AS recall_at{TOP_K}
 FROM exact_topk e LEFT JOIN ann_topk a
   ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
-GROUP BY e.query_id
-"""
+GROUP BY e.query_id"""
 
-#: Bit-for-bit SQL replay of ``lsh_signature``/``_band_keys``/
-#: ``_ann_lsh_topk_impl``: the LCG runs in BIGINT (INT32 would
-#: overflow), the projection is the same in-order product fold
-#: (list_dot_product), the signature assembles as an order-independent
-#: integer sum, and the query side probes ``xor(bkey, m)`` for each
-#: probe mask (mask 0 alone = single-probe).
+
+def _sql_cosine_recall(ann_order: str) -> str:
+    """Recall tail against exact cosine (``cosine_topk``)."""
+    return f"""{_sql_scored("exact_scored", "all_pairs", "vn", _SQL_COSINE)},
+{_sql_recall(ann_order, "score DESC")}"""
+
+
+COSINE_TOPK_ORACLE = f"""WITH {_SQL_VN},
+{_sql_scored("exact_scored", "all_pairs", "vn", _SQL_COSINE)}
+{_sql_cosine_topk("exact_scored")}"""
+
+
+def _sql_probe(n_bands: int, bits: int, masks: tuple[int, ...]) -> str:
+    """:func:`_bands` + :func:`_probe` over ``sigs`` (vec_id, w0, …):
+    ``bands`` (vec_id, band, bkey), the query keys XOR each mask
+    ``qbands``, and the distinct candidate pairs ``cand``."""
+    per_word = 64 // bits
+    words = ", ".join(f"w{i}" for i in range(-(-n_bands // per_word)))
+    return f"""bands AS (
+    SELECT vec_id, bd.band,
+           ([{words}][bd.band // {per_word} + 1]
+            >> ((bd.band % {per_word}) * {bits})) & {(1 << bits) - 1} AS bkey
+    FROM sigs CROSS JOIN
+         (SELECT unnest(generate_series(0, {n_bands - 1})) AS band) bd
+),
+qbands AS (
+    SELECT vec_id, band, xor(bkey, pm.m) AS bkey
+    FROM bands CROSS JOIN (SELECT unnest([{", ".join(map(str, masks))}]) AS m) pm
+    WHERE vec_id < {N_QUERIES}
+),
+cand AS (
+    SELECT DISTINCT q.vec_id AS query_id, n.vec_id AS neighbor_id
+    FROM qbands q JOIN bands n ON q.band = n.band AND q.bkey = n.bkey
+    WHERE q.vec_id <> n.vec_id
+)"""
+
+
 def _lsh_ann_ctes(probe_masks: tuple[int, ...]) -> str:
-    """CTE prefix replaying the LSH pipeline through ``ann_scored`` —
-    shared by the standalone top-k oracle and the recall oracles."""
-    masks = ", ".join(str(m) for m in probe_masks)
+    """CTE prefix replaying ``_ann_lsh_topk_impl`` through
+    ``ann_scored``: the LCG runs in BIGINT (INT32 would overflow), the
+    projection is the same in-order product fold (list_dot_product),
+    and the signature assembles as an order-independent integer sum
+    into its one word ``w0``."""
     return f"""{_SQL_VN},
 sigbits AS (
     SELECT vec_id,
@@ -535,73 +554,20 @@ sigbits AS (
          (SELECT unnest(generate_series(0, {N_PLANES - 1})) AS p) pl
 ),
 sigs AS (
-    SELECT vec_id, CAST(sum(bit) AS BIGINT) AS sig FROM sigbits
+    SELECT vec_id, CAST(sum(bit) AS BIGINT) AS w0 FROM sigbits
     GROUP BY vec_id
 ),
-bands AS (
-    SELECT s.vec_id, bd.b AS band,
-           (s.sig >> (bd.b * {BITS_PER_BAND})) & {(1 << BITS_PER_BAND) - 1}
-             AS bkey
-    FROM sigs s CROSS JOIN
-         (SELECT unnest(generate_series(0, {LSH_BANDS - 1})) AS b) bd
-),
-qbands AS (
-    SELECT vec_id, band, xor(bkey, pm.m) AS bkey
-    FROM bands CROSS JOIN (SELECT unnest([{masks}]) AS m) pm
-    WHERE vec_id < {N_QUERIES}
-),
-cand AS (
-    SELECT DISTINCT q.vec_id AS query_id, n.vec_id AS neighbor_id
-    FROM qbands q JOIN bands n ON q.band = n.band AND q.bkey = n.bkey
-    WHERE q.vec_id <> n.vec_id
-),
-ann_scored AS (
-    SELECT c.query_id, c.neighbor_id,
-           list_dot_product(a.e, b.e) / (a.nrm * b.nrm) AS score
-    FROM cand c
-    JOIN vn a ON a.vec_id = c.query_id
-    JOIN vn b ON b.vec_id = c.neighbor_id
-)"""
+{_sql_probe(LSH_BANDS, BITS_PER_BAND, probe_masks)},
+{_sql_scored("ann_scored", "cand", "vn", _SQL_COSINE)}"""
 
 
-#: Final select shared by the standalone ANN top-k oracles: same rank
-#: window and 8-decimal rounding as the Spark output.
-_SQL_ANN_TOPK_SELECT = f"""
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-       floor((score) * 100000000.0 + 0.5) / 100000000.0 AS score
-FROM (
-    SELECT query_id, neighbor_id, score,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY score DESC, neighbor_id) AS rank
-    FROM ann_scored)
-WHERE rank <= {TOP_K}
-"""
-
-_SQL_ANN_RECALL_TAIL = f"""
-ann_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY score DESC, neighbor_id) AS rank
-        FROM ann_scored)
-    WHERE rank <= {TOP_K}
-),
-{_SQL_EXACT_TOPK.strip()}
-{_SQL_RECALL_SELECT}
-"""
-
-
-def _lsh_recall_sql(probe_masks: tuple[int, ...]) -> str:
-    return f"WITH {_lsh_ann_ctes(probe_masks)},\n{_SQL_ANN_RECALL_TAIL}"
-
-
-#: ``ann_lsh_topk``'s own oracle: the same pipeline replay, ending at
-#: the ranked, rounded top-k — the LCG hyperplanes make even the
-#: "approximate" index exactly reproducible cross-engine, so this
-#: entry is hash-checked rather than rows-only.
-LSH_TOPK_ORACLE = f"WITH {_lsh_ann_ctes((0,))}\n{_SQL_ANN_TOPK_SELECT}"
-LSH_RECALL_ORACLE = _lsh_recall_sql((0,))
-MULTIPROBE_LSH_RECALL_ORACLE = _lsh_recall_sql(PROBE_MASKS)
+#: The LCG hyperplanes make even the "approximate" index exactly
+#: reproducible cross-engine, so ``ann_lsh_topk`` is hash-checked.
+LSH_TOPK_ORACLE = f"WITH {_lsh_ann_ctes((0,))}\n{_sql_cosine_topk('ann_scored')}"
+LSH_RECALL_ORACLE = f"WITH {_lsh_ann_ctes((0,))},\n{_sql_cosine_recall('score DESC')}"
+MULTIPROBE_LSH_RECALL_ORACLE = (
+    f"WITH {_lsh_ann_ctes(PROBE_MASKS)},\n{_sql_cosine_recall('score DESC')}"
+)
 
 
 def ann_lsh_multiprobe_recall_at10(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -672,11 +638,11 @@ ann_scored AS (
     WHERE p.query_id <> i.neighbor_id
 )"""
 
-IVF_RECALL_ORACLE = f"WITH {_IVF_ANN_CTES},\n{_SQL_ANN_RECALL_TAIL}"
+IVF_RECALL_ORACLE = f"WITH {_IVF_ANN_CTES},\n{_sql_cosine_recall('score DESC')}"
 
 #: ``ivf_topk``'s own oracle — quantized centroids make the whole
 #: index deterministic, so the approximate result itself hash-checks.
-IVF_TOPK_ORACLE = f"WITH {_IVF_ANN_CTES}\n{_SQL_ANN_TOPK_SELECT}"
+IVF_TOPK_ORACLE = f"WITH {_IVF_ANN_CTES}\n{_sql_cosine_topk('ann_scored')}"
 
 
 def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -723,15 +689,13 @@ def embedding_near_dup_pairs(
     )
     cos = dot(F.col("a.v"), F.col("b.v")) / (F.col("a.n") * F.col("b.n"))
     if blocked:
-        banded = v.select(
-            "vec_id", "v", "n",
-            F.explode(_band_keys(lsh_signature(F.col("v")))).alias("bk"),
-        )
+        banded = _lsh_bands(v)
         pairs = (
             banded.alias("a")
             .join(
                 banded.alias("b"),
-                (F.col("a.bk") == F.col("b.bk"))
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.bkey") == F.col("b.bkey"))
                 & (F.col("a.vec_id") < F.col("b.vec_id")),
             )
             .select("a.vec_id", "a.v", "a.n", "b.vec_id", "b.v", "b.n")
@@ -1042,47 +1006,20 @@ def kmeans_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MATRYOSHKA_TOPK_ORACLE = f"""WITH {_SQL_VN},
+#: ``matryoshka_topk``'s exact cosine over the truncated vectors
+_SQL_MATRYOSHKA = f"""{_SQL_VN},
 vt AS (
     SELECT vec_id, list_slice(e, 1, {MATRYOSHKA_DIMS}) AS e,
            sqrt(list_dot_product(list_slice(e, 1, {MATRYOSHKA_DIMS}),
                                  list_slice(e, 1, {MATRYOSHKA_DIMS}))) AS nrm
     FROM vn
 ),
-tk AS (
-    SELECT query_id, neighbor_id, score,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY score DESC, neighbor_id) AS rank
-    FROM (
-        SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
-               list_dot_product(q.e, b.e) / (q.nrm * b.nrm) AS score
-        FROM vt q JOIN vt b ON q.vec_id < {N_QUERIES} AND q.vec_id <> b.vec_id)
-)
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-       floor(score * 100000000.0 + 0.5) / 100000000.0 AS score
-FROM tk WHERE rank <= {TOP_K}
-"""
+{_sql_scored("ann_scored", "all_pairs", "vt", _SQL_COSINE)}"""
 
-MATRYOSHKA_RECALL_ORACLE = f"""WITH {_SQL_VN},
-{_SQL_EXACT_TOPK.strip().lstrip()},
-vt AS (
-    SELECT vec_id, list_slice(e, 1, {MATRYOSHKA_DIMS}) AS e,
-           sqrt(list_dot_product(list_slice(e, 1, {MATRYOSHKA_DIMS}),
-                                 list_slice(e, 1, {MATRYOSHKA_DIMS}))) AS nrm
-    FROM vn
-),
-ann_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY q.vec_id
-                                  ORDER BY list_dot_product(q.e, b.e)
-                                           / (q.nrm * b.nrm) DESC,
-                                           b.vec_id) AS rank
-        FROM vt q JOIN vt b ON q.vec_id < {N_QUERIES} AND q.vec_id <> b.vec_id)
-    WHERE rank <= {TOP_K}
+MATRYOSHKA_TOPK_ORACLE = f"WITH {_SQL_MATRYOSHKA}\n{_sql_cosine_topk('ann_scored')}"
+MATRYOSHKA_RECALL_ORACLE = (
+    f"WITH {_SQL_MATRYOSHKA},\n{_sql_cosine_recall('score DESC')}"
 )
-{_SQL_RECALL_SELECT}
-"""
 
 
 KMEANS_CONVERGENCE_ORACLE = f"""
@@ -1208,18 +1145,8 @@ def _pq_adc_topk(emb: DataFrame, codebooks: DataFrame) -> DataFrame:
         .groupBy("query_id", "neighbor_id")
         .agg((F.sum("dq") / F.lit(1e9)).alias("approx_dist"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_dist").asc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            stable_round(F.col("approx_dist"), 8).alias("approx_dist"),
-        )
+    return _top_k(scored, "approx_dist").withColumn(
+        "approx_dist", stable_round(F.col("approx_dist"), 8)
     )
 
 
@@ -1243,14 +1170,7 @@ def exact_l2_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "neighbor_id",
         _sqdist(F.col("qv"), F.col("bv")).alias("d"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("d").asc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id")
-    )
+    return _top_k(scored, "d").select("query_id", "neighbor_id")
 
 
 def pq_recall_at10(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1315,24 +1235,13 @@ def ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
     bv = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("bv"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
+    return _cosine_top_k(
         shortlist.join(qv, "query_id")
         .join(bv, "neighbor_id")
         .select(
             "query_id",
             "neighbor_id",
             cosine(F.col("qv"), F.col("bv")).alias("score"),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            stable_round(F.col("score"), 8).alias("score"),
         )
     )
 
@@ -1360,62 +1269,42 @@ adc AS (
 )"""
 
 
-#: PQ-ADC neighbors ranked per query, as in ``_pq_adc_topk``.
-_SQL_PQ_RANKED = """pq_ranked AS (
-    SELECT query_id, neighbor_id, approx_dist,
-           row_number() OVER (PARTITION BY query_id
-                              ORDER BY approx_dist ASC, neighbor_id) AS rank
-    FROM (
-        SELECT a.query_id, n.neighbor_id,
-               sum(a.dq) / 1000000000.0 AS approx_dist
-        FROM ncodes n JOIN adc a ON n.block = a.block AND n.code_id = a.code_id
-        WHERE a.query_id <> n.neighbor_id
-        GROUP BY a.query_id, n.neighbor_id)
+#: PQ-ADC distance of every (query, neighbor), as in ``_pq_adc_topk``.
+_SQL_PQ_SCORED = """ann_scored AS (
+    SELECT a.query_id, n.neighbor_id,
+           sum(a.dq) / 1000000000.0 AS approx_dist
+    FROM ncodes n JOIN adc a ON n.block = a.block AND n.code_id = a.code_id
+    WHERE a.query_id <> n.neighbor_id
+    GROUP BY a.query_id, n.neighbor_id
 )"""
 
-#: Exact-L2 reference CTEs (exact_scored/exact_topk names match what
-#: ``_SQL_RECALL_SELECT`` expects) — the PQ recall ground truth.
-_SQL_EXACT_L2_TOPK = f"""
-exact_scored AS (
+#: Exact squared L2 distances: the PQ recall ground truth.
+_SQL_EXACT_L2 = """exact_scored AS (
     SELECT query_id, neighbor_id, list_dot_product(df, df) AS d
     FROM (
-        SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
+        SELECT c.query_id, c.neighbor_id,
                list_transform(generate_series(1, len(q.e)),
-                              x -> q.e[x] - b.e[x]) AS df
-        FROM vn q JOIN vn b
-          ON q.vec_id < {N_QUERIES} AND q.vec_id <> b.vec_id)
-),
-exact_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY d ASC, neighbor_id) AS rank
-        FROM exact_scored)
-    WHERE rank <= {TOP_K}
-)
-"""
+                              x -> q.e[x] - n.e[x]) AS df
+        FROM all_pairs c JOIN vn q ON q.vec_id = c.query_id
+        JOIN vn n ON n.vec_id = c.neighbor_id)
+)"""
 
 
 def _pq_topk_sql(sample_mod_sql: str | None = None) -> str:
     return f"""WITH {_SQL_VN},
 {_pq_ctes(sample_mod_sql)},
-{_SQL_PQ_RANKED}
+{_SQL_PQ_SCORED}
 SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
        {sql_round("approx_dist", 8)} AS approx_dist
-FROM pq_ranked WHERE rank <= {TOP_K}
-"""
+FROM ({_sql_topk("ann_scored", "approx_dist")})"""
 
 
 def _pq_recall_sql(sample_mod_sql: str | None = None) -> str:
     return f"""WITH {_SQL_VN},
 {_pq_ctes(sample_mod_sql)},
-{_SQL_PQ_RANKED},
-ann_topk AS (
-    SELECT query_id, neighbor_id FROM pq_ranked WHERE rank <= {TOP_K}
-),
-{_SQL_EXACT_L2_TOPK.strip()}
-{_SQL_RECALL_SELECT}
-"""
+{_SQL_PQ_SCORED},
+{_SQL_EXACT_L2},
+{_sql_recall("approx_dist", "d")}"""
 
 
 #: sampling modulus computed in SQL from the corpus count — the twin
@@ -1454,69 +1343,136 @@ shortlist AS (
         FROM adc_scored)
     WHERE sr <= {IVFPQ_SHORTLIST}
 ),
-ann_scored AS (
-    SELECT s.query_id, s.neighbor_id,
-           list_dot_product(q.e, b.e) / (q.nrm * b.nrm) AS score
-    FROM shortlist s
-    JOIN vn q ON q.vec_id = s.query_id
-    JOIN vn b ON b.vec_id = s.neighbor_id
-)"""
+{_sql_scored("ann_scored", "shortlist", "vn", _SQL_COSINE)}"""
 
-IVFPQ_TOPK_ORACLE = f"WITH {_IVFPQ_ANN_CTES}\n{_SQL_ANN_TOPK_SELECT}"
-IVFPQ_RECALL_ORACLE = f"WITH {_IVFPQ_ANN_CTES},\n{_SQL_ANN_RECALL_TAIL}"
+IVFPQ_TOPK_ORACLE = f"WITH {_IVFPQ_ANN_CTES}\n{_sql_cosine_topk('ann_scored')}"
+IVFPQ_RECALL_ORACLE = f"WITH {_IVFPQ_ANN_CTES},\n{_sql_cosine_recall('score DESC')}"
 
 
 # ------------------------------- binary (sign-bit) quantization ANN
 
 
-def _sign_sig(col_name: str) -> Column:
-    """Embedding → ONE 64-bit signature over its FIRST 64 dims: bit d
-    set iff dimension d is strictly positive. The ``slice`` makes the
-    first-64 truncation EXPLICIT (matching the twin's range(1, 65)):
-    without it, Java's ``shiftleft`` silently wraps the shift count
-    mod 64, so a wider embedding would alias dim 64 onto bit 0 —
-    a silent-corruption class, not a crash. Pure-JVM fold (shiftleft
-    + OR inside whole-stage codegen); bit 63 lands on the sign bit,
-    which is fine — all downstream math is XOR/POPCNT."""
-    sl = f"slice({col_name}, 1, 64)"
+def sign_words(col: str, offsets: tuple[int, ...]) -> Column:
+    """Embedding column ``col`` → ``array<bigint>`` signature, one
+    64-bit word per offset over the first 64 dims. Bit i of the
+    offset-0 word is set iff dim i > 0 (the sign bits); bit i of an
+    offset-k word is set iff dim i > dim (i + k) mod 64. Dims are read
+    with ``try_element_at``, so a dim the vector lacks gives a 0 bit,
+    as the twin's NULL list index does. Each word is a pure-JVM
+    shiftleft/OR fold; bit 63 lands on the sign bit, which is fine —
+    all downstream math is XOR/POPCNT/mask. DuckDB twin:
+    :func:`_sql_sigs`."""
+
+    def word(off: int) -> Column:
+        other = "0" if off == 0 else f"try_element_at({col}, pmod(i + {off}, 64) + 1)"
+        return F.expr(
+            f"""aggregate(
+                  transform(sequence(0, 63),
+                            i -> IF(try_element_at({col}, i + 1) > {other},
+                                    shiftleft(1L, i), 0L)),
+                  0L, (acc, b) -> acc | b)"""
+        )
+
+    return F.array(*[word(off) for off in offsets])
+
+
+#: Multi-index Hamming bands: each 64-bit signature word splits into
+#: MIH_BANDS 8-bit substrings; by pigeonhole, any neighbor within
+#: Hamming distance (bands - 1) shares at least one band EXACTLY, so
+#: band equality is a lossless candidate filter at that radius
+#: (Norouzi et al., multi-index hashing). 8-bit bands, because random
+#: sign bits almost never collide on a 16-bit band.
+MIH_BANDS = 8
+MIH_BITS = 8
+
+#: MIH multiprobe flips: probing each 8-bit band key at Hamming <= 1
+#: in key space (the exact key + its 8 one-bit flips) widens the
+#: pigeonhole radius from bands - 1 to 2 * bands - 1: if the total
+#: distance is below 2 * bands, some band carries <= 1 of it — each
+#: index searched to radius floor(r/m), as in Norouzi et al. 9x the
+#: query-side keys; the join stays a (band, key) equi-join.
+MIH_PROBE_FLIPS = (0,) + tuple(1 << i for i in range(MIH_BITS))
+
+#: Multi-word signatures: the general form past 64 dims is one word
+#: per 64 dims. The corpus here is 64-dim, so words 1.. are a WIDENED
+#: FIXTURE of rank-order features ``x[i] > x[(i + offset) mod 64]`` —
+#: pure float comparisons, so both engines derive bit-identical words
+#: and the family stays integer-exact. No offset makes a bit another
+#: bit's reversed comparison (2 * off != 0 mod 64) and no two words
+#: share a dim pair.
+MW_OFFSETS = (0, 1, 17)
+MW_WORDS = len(MW_OFFSETS)
+MW_TOTAL_BANDS = MW_WORDS * MIH_BANDS  # 24 bands of 8 bits over 192
+
+
+def _mw_hamming(a: str, b: str, n_words: int) -> Column:
+    """Hamming distance of two ``n_words``-word signatures: per-word
+    XOR/POPCNT, unrolled at plan-build time so it stays inside
+    whole-stage codegen."""
     return F.expr(
-        f"""aggregate(
-              zip_with({sl}, sequence(0, size({sl}) - 1),
-                       (x, i) -> IF(x > 0, shiftleft(1L, i), 0L)),
-              0L, (acc, b) -> acc | b)"""
+        " + ".join(f"bit_count({a}[{i}] ^ {b}[{i}])" for i in range(n_words))
     )
+
+
+def _signatures(
+    spark: SparkSession, sf_dir: str, offsets: tuple[int, ...]
+) -> DataFrame:
+    """(vec_id, sig): every embedding's :func:`sign_words` signature —
+    a map-side shrink to 8 bytes per word before anything moves."""
+    emb = spread(load_table(spark, sf_dir, "embeddings"))
+    return emb.select("vec_id", sign_words("embedding", offsets).alias("sig"))
+
+
+def _all_pairs(sigs: DataFrame) -> DataFrame:
+    """Brute-force candidates: the bounded N_QUERIES query signatures
+    broadcast against every corpus signature; the corpus never
+    shuffles."""
+    queries = sigs.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("sig").alias("q_sig")
+    )
+    return sigs.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("sig").alias("n_sig")
+    ).join(F.broadcast(queries), F.col("query_id") != F.col("neighbor_id"))
+
+
+def _hamming_top_k(cand: DataFrame, n_words: int) -> DataFrame:
+    """Exact-Hamming re-rank of (query_id, neighbor_id, q_sig, n_sig)
+    candidates. Ties (Hamming is coarse) break on neighbor_id, and
+    the math is integer-only, so the oracle is exact. Queries with
+    fewer candidates than TOP_K return fewer rows in both engines."""
+    return _top_k(
+        cand.select(
+            "query_id",
+            "neighbor_id",
+            _mw_hamming("q_sig", "n_sig", n_words).cast("int").alias("hamming"),
+        ),
+        "hamming",
+    )
+
+
+def _mih(
+    spark: SparkSession,
+    sf_dir: str,
+    offsets: tuple[int, ...],
+    masks: tuple[int, ...],
+) -> DataFrame:
+    """Multi-index Hamming search: MIH_BANDS bands of MIH_BITS per
+    signature word, probed with ``masks``, then exact-Hamming re-rank
+    of the candidates only. Bucketed and shuffle-partitionable: no
+    broadcast nested loop at any size."""
+    bands = _bands(
+        _signatures(spark, sf_dir, offsets), len(offsets) * MIH_BANDS, MIH_BITS
+    )
+    return _hamming_top_k(_probe(bands, masks), len(offsets))
 
 
 def binary_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-quantized ANN (r10): sign-bit signatures compress each
-    64-dim float vector 32× into one BIGINT; neighbor ranking is
-    ``bit_count(xor(sig_q, sig_b))`` — integer-only end to end, so
-    the oracle is EXACT (no float rounding anywhere). This is the
-    memory-bound regime binary embeddings target at 100 TB: the
-    signature build is a map-side 32× shrink BEFORE anything moves,
-    the bounded query side broadcasts, the corpus never shuffles, and
-    each candidate costs one XOR + POPCNT. Ties (Hamming is coarse:
-    0..64) break on neighbor_id — deterministic cross-engine."""
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    sigs = emb.select("vec_id", _sign_sig("embedding").alias("sig"))
-    queries = sigs.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("sig").alias("qsig")
-    )
-    scored = sigs.join(
-        F.broadcast(queries), F.col("query_id") != F.col("vec_id")
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.bit_count(F.col("qsig").bitwiseXOR(F.col("sig")))
-        .cast("int")
-        .alias("hamming"),
-    )
-    w = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "hamming")
-    )
+    """Binary-quantized ANN: sign-bit signatures compress each 64-dim
+    float vector 32× into one word; neighbors rank by brute-force
+    Hamming distance. This is the memory-bound regime binary
+    embeddings target at 100 TB: each candidate costs one XOR +
+    POPCNT."""
+    return _hamming_top_k(_all_pairs(_signatures(spark, sf_dir, (0,))), 1)
 
 
 def binary_hamming_recall_at10(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1528,72 +1484,14 @@ def binary_hamming_recall_at10(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Multi-index Hamming bands: the 64-bit signature splits into
-#: MIH_BANDS 8-bit substrings; by pigeonhole, any neighbor within
-#: Hamming distance MIH_BANDS-1 (= 7) shares at least one band
-#: EXACTLY, so band equality is a lossless candidate filter for
-#: radius-7 search (Norouzi et al., multi-index hashing). 8×8 (not
-#: 4×16) because random sign bits collide on a 16-bit band with
-#: p=2^-16 — measured 0 candidates at sf0.01 — while 8-bit bands
-#: give each query ~|corpus|×8/256 candidates and a wider radius
-#: guarantee.
-MIH_BANDS = 8
-MIH_BITS = 8
-
-
 def binary_mih_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SCALE path for the binary family (r10): multi-index
-    Hamming. Candidates come from a (band, 8-bit key) EQUI-join —
-    bucketed, shuffle-partitionable, no broadcast nested loop at any
-    size — then exact Hamming re-ranks candidates only. By pigeonhole
-    the candidate set provably contains every neighbor at Hamming
-    distance <= MIH_BANDS-1 = 7 (property pinned by pytest on
-    constructed close pairs — the corpus' random signs sit at
-    expected distance 32 — plus a full numpy candidate/rank replay);
-    farther neighbors appear only if they share a band, the standard
-    MIH recall trade-off the recall audit below measures. Queries
-    with fewer candidates than TOP_K return fewer rows (both engines
-    replay identically)."""
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    sigs = emb.select("vec_id", _sign_sig("embedding").alias("sig"))
-    # band keys via shiftright + MIH_BITS-wide (8-bit) mask
-    # (arithmetic vs logical shift is irrelevant under the mask, so
-    # both engines agree)
-    bands = sigs.select(
-        "vec_id",
-        "sig",
-        F.explode(F.sequence(F.lit(0), F.lit(MIH_BANDS - 1))).alias("band"),
-    ).withColumn(
-        "bkey",
-        F.expr(f"shiftright(sig, band * {MIH_BITS}) & {(1 << MIH_BITS) - 1}"),
-    )
-    qb = bands.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("sig").alias("qsig"),
-        "band",
-        "bkey",
-    )
-    cand = (
-        qb.join(bands, ["band", "bkey"])
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id", "qsig", F.col("vec_id").alias("neighbor_id"), "sig"
-        )
-        .distinct()
-    )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.bit_count(F.col("qsig").bitwiseXOR(F.col("sig")))
-        .cast("int")
-        .alias("hamming"),
-    )
-    w = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "hamming")
-    )
+    """The scale path of the binary family: multi-index Hamming over
+    one word. By pigeonhole the candidate set contains every neighbor
+    at Hamming distance <= MIH_BANDS - 1 = 7 (pinned by pytest on
+    constructed close pairs — the corpus' random signs sit at expected
+    distance 32); farther neighbors appear only if they share a band,
+    the recall trade-off ``binary_mih_recall_at10`` measures."""
+    return _mih(spark, sf_dir, (0,), (0,))
 
 
 def binary_mih_recall_at10(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1605,519 +1503,104 @@ def binary_mih_recall_at10(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: DuckDB cannot shift 1::BIGINT by 63 (overflow check), so bit 63
-#: packs as the min-long literal; disjoint bits make arithmetic sum
-#: equal bitwise OR, sign bit included.
-_SQL_SIGS_CTE = """sigs AS (
-    SELECT vec_id,
-           CAST(list_aggregate(list_transform(range(1, 65),
-               i -> CASE WHEN embedding[i] > 0 THEN
-                           CASE WHEN i = 64
-                                THEN (-9223372036854775807)::BIGINT - 1
-                                ELSE 1::BIGINT << (i - 1) END
-                         ELSE 0::BIGINT END), 'sum') AS BIGINT) AS sig
-    FROM embeddings
-)"""
-
-_SQL_SIGN_SIGS = f"""
-{_SQL_SIGS_CTE},
-hscored AS (
-    SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
-           bit_count(xor(q.sig, b.sig)) AS hamming
-    FROM sigs q JOIN sigs b
-      ON q.vec_id < {N_QUERIES} AND q.vec_id <> b.vec_id
-)"""
-
-BINARY_HAMMING_TOPK_ORACLE = f"""
-WITH {_SQL_SIGN_SIGS.strip()}
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-       CAST(hamming AS INT) AS hamming
-FROM (SELECT query_id, neighbor_id, hamming,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY hamming, neighbor_id) AS rank
-      FROM hscored)
-WHERE rank <= {TOP_K}
-"""
-
-BINARY_HAMMING_RECALL_ORACLE = f"""
-WITH {_SQL_VN.strip()},
-{_SQL_SIGN_SIGS.strip()},
-ann_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY hamming, neighbor_id) AS rank
-        FROM hscored)
-    WHERE rank <= {TOP_K}
-),
-{_SQL_EXACT_TOPK.strip()}
-{_SQL_RECALL_SELECT}
-"""
-
-#: MIH candidate generation + re-rank, replayed exactly: band keys by
-#: shiftright+mask (convention-proof under the MIH_BITS-wide 8-bit
-#: mask), equality join on (band, bkey), distinct pairs,
-#: exact-Hamming rank.
-_SQL_MIH = f"""
-bands AS (
-    SELECT vec_id, sig, b.band,
-           (sig >> (b.band * {MIH_BITS})) & {(1 << MIH_BITS) - 1} AS bkey
-    FROM sigs CROSS JOIN
-         (SELECT unnest(generate_series(0, {MIH_BANDS - 1})) AS band) b
-),
-cand AS (
-    SELECT DISTINCT q.vec_id AS query_id, q.sig AS qsig,
-                    n.vec_id AS neighbor_id, n.sig AS nsig
-    FROM bands q JOIN bands n ON q.band = n.band AND q.bkey = n.bkey
-    WHERE q.vec_id < {N_QUERIES} AND q.vec_id <> n.vec_id
-),
-mscored AS (
-    SELECT query_id, neighbor_id,
-           bit_count(xor(qsig, nsig)) AS hamming
-    FROM cand
-)"""
-
-BINARY_MIH_TOPK_ORACLE = f"""
-WITH {_SQL_SIGS_CTE},
-{_SQL_MIH.strip()}
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-       CAST(hamming AS INT) AS hamming
-FROM (SELECT query_id, neighbor_id, hamming,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY hamming, neighbor_id) AS rank
-      FROM mscored)
-WHERE rank <= {TOP_K}
-"""
-
-BINARY_MIH_RECALL_ORACLE = f"""
-WITH {_SQL_VN.strip()},
-{_SQL_SIGS_CTE},
-{_SQL_MIH.strip()},
-ann_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY hamming, neighbor_id) AS rank
-        FROM mscored)
-    WHERE rank <= {TOP_K}
-),
-{_SQL_EXACT_TOPK.strip()}
-{_SQL_RECALL_SELECT}
-"""
-
-
-# ---------------- multi-word binary signatures (r11): past 64 dims
-
-
-#: The r10 binary family is 64-dim-bounded by construction —
-#: ``_sign_sig`` slices the first 64 dims into ONE BIGINT. Real
-#: embedding pipelines run 256–1024 dims, so the general form is an
-#: ``array<bigint>`` signature: one word per 64 dims, Hamming =
-#: per-word XOR/POPCNT summed with ``aggregate``, MIH bands addressed
-#: as (word, byte). The corpus here is 64-dim, so the >64-dim input
-#: is a WIDENED FIXTURE: dims 64w+i (w >= 1) are deterministic
-#: rank-order features ``x[i] > x[(i + offset_w) mod 64]`` — pure
-#: float comparisons (no arithmetic), so both engines derive
-#: bit-identical words from the same parquet floats, and the whole
-#: family stays integer-exact end to end. Offsets are chosen so no
-#: bit is another bit's reversed comparison (2*off != 0 mod 64) and
-#: no two words share a dim pair — the extra words carry genuinely
-#: new rank-order structure, not copies of word 0.
-MW_OFFSETS = (0, 1, 17)
-MW_WORDS = len(MW_OFFSETS)
-MW_TOTAL_BANDS = MW_WORDS * MIH_BANDS  # 24 bands of 8 bits over 192
-
-
-def _mw_word(col_name: str, offset: int) -> Column:
-    """One 64-bit word of the multi-word signature. offset 0 is the
-    plain sign bit (== ``_sign_sig``); offset k compares dim i with
-    dim (i + k) mod 64. Same pure-JVM shiftleft/OR fold as
-    ``_sign_sig`` (bit 63 on the sign bit is fine — downstream math
-    is XOR/POPCNT)."""
-    if offset == 0:
-        pred = f"element_at({col_name}, i + 1) > 0"
-    else:
-        pred = (
-            f"element_at({col_name}, i + 1) > "
-            f"element_at({col_name}, pmod(i + {offset}, 64) + 1)"
-        )
-    return F.expr(
-        f"""aggregate(
-              transform(sequence(0, 63),
-                        i -> IF({pred}, shiftleft(1L, i), 0L)),
-              0L, (acc, b) -> acc | b)"""
-    )
-
-
-def _mw_sig(col_name: str) -> Column:
-    """Embedding → ``array<bigint>`` multi-word signature (the
-    general form of ``_sign_sig``; word w covers virtual dims
-    64w..64w+63 of the widened fixture)."""
-    return F.array(*[_mw_word(col_name, off) for off in MW_OFFSETS])
-
-
-def _mw_hamming(a: str, b: str) -> Column:
-    """Multi-word Hamming: per-word XOR/POPCNT summed via aggregate
-    — stays inside whole-stage codegen, one pass over the words."""
-    return F.expr(
-        f"""aggregate(zip_with({a}, {b}, (x, y) -> bit_count(x ^ y)),
-                      0, (acc, d) -> acc + d)"""
-    )
-
-
-def binary_multiword_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force multi-word binary ANN (r11): generalizes
-    ``binary_hamming_topk`` past 64 dims — signatures are
-    ``array<bigint>`` (192 bits here), distance is the summed
-    per-word POPCNT. Same 100 TB posture as the one-word form: the
-    signature build is a map-side shrink to 8 bytes/word BEFORE
-    anything moves, the bounded query side broadcasts, ties break on
-    neighbor_id. Integer-only, so the oracle is exact."""
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    sigs = emb.select("vec_id", _mw_sig("embedding").alias("sig"))
-    queries = sigs.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("sig").alias("qsig")
-    )
-    scored = sigs.join(
-        F.broadcast(queries), F.col("query_id") != F.col("vec_id")
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        _mw_hamming("qsig", "sig").cast("int").alias("hamming"),
-    )
-    w = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "hamming")
-    )
-
-
-def binary_multiword_mih_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-index Hamming over multi-word signatures (r11): bands
-    are addressed as (word, byte) — band b lives in word b DIV 8,
-    byte b MOD 8 — giving MW_TOTAL_BANDS = 24 bands over 192 bits,
-    so by pigeonhole any pair at Hamming <= 23 shares a band exactly
-    (pinned by pytest on constructed flips). Candidates come from the
-    same bucketed (band, key) EQUI-join as the one-word form — no
-    BNLJ at any size; random signs sit at expected distance 96, so
-    corpus candidates are band-collision-driven (~n*24/256 per
-    query), which the recall audit below prices."""
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    sigs = emb.select("vec_id", _mw_sig("embedding").alias("sig"))
-    # (word, byte) band key: arithmetic-vs-logical shift is
-    # irrelevant under the 8-bit mask, so both engines agree
-    bands = sigs.select(
-        "vec_id",
-        "sig",
-        F.explode(
-            F.sequence(F.lit(0), F.lit(MW_TOTAL_BANDS - 1))
-        ).alias("band"),
-    ).withColumn(
-        "bkey",
-        F.expr(
-            f"shiftright(element_at(sig, CAST(band DIV {MIH_BANDS} AS INT)"
-            f" + 1), (band % {MIH_BANDS}) * {MIH_BITS})"
-            f" & {(1 << MIH_BITS) - 1}"
-        ),
-    )
-    qb = bands.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("sig").alias("qsig"),
-        "band",
-        "bkey",
-    )
-    cand = (
-        qb.join(bands, ["band", "bkey"])
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id", "qsig", F.col("vec_id").alias("neighbor_id"), "sig"
-        )
-        .distinct()
-    )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        _mw_hamming("qsig", "sig").cast("int").alias("hamming"),
-    )
-    w = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "hamming")
-    )
-
-
-def binary_multiword_mih_recall_at10(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Recall@10 of multi-word MIH vs BRUTE multi-word Hamming — the
-    pure index loss of banding (not quantization loss: both sides
-    rank the same 192-bit signatures), measured per query."""
-    return _recall_vs_exact(
-        binary_multiword_topk(spark, sf_dir),
-        binary_multiword_mih_topk(spark, sf_dir),
-    )
-
-
-#: MIH multiprobe flips: probing each 8-bit band key at Hamming <= 1
-#: in KEY space (the exact key + its 8 one-bit flips) widens the
-#: pigeonhole guarantee from MIH_BANDS-1 = 7 to 2*MIH_BANDS-1 = 15:
-#: if the total distance is <= 15 over 8 bands, some band carries
-#: <= floor(15/8) = 1 of it — exactly what Norouzi et al.'s
-#: multi-index hashing probes for at radius r: each index is
-#: searched to radius floor(r/m). Candidate volume grows 9x, still
-#: bucketed (the probe set is per-query-band, the join stays a
-#: (band, key) equi-join).
-MIH_PROBE_FLIPS = (0,) + tuple(1 << i for i in range(MIH_BITS))
-
-
 def binary_mih_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multiprobe MIH (r11): ``binary_mih_topk`` with each query band
-    key probed at the exact key plus its 8 one-bit flips — the real
-    Norouzi search procedure (per-index radius floor(r/m)), giving a
-    provable radius-15 candidate guarantee (pinned by pytest) while
-    the corpus side is untouched: probes explode on the BOUNDED query
-    side only, and candidates still come from the bucketed
-    (band, key) equi-join."""
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    sigs = emb.select("vec_id", _sign_sig("embedding").alias("sig"))
-    bands = sigs.select(
-        "vec_id",
-        "sig",
-        F.explode(F.sequence(F.lit(0), F.lit(MIH_BANDS - 1))).alias("band"),
-    ).withColumn(
-        "bkey",
-        F.expr(f"shiftright(sig, band * {MIH_BITS}) & {(1 << MIH_BITS) - 1}"),
-    )
-    qb = (
-        bands.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("sig").alias("qsig"),
-            "band",
-            "bkey",
-        )
-        .withColumn(
-            "flip",
-            F.explode(F.array(*[F.lit(f) for f in MIH_PROBE_FLIPS])),
-        )
-        .select(
-            "query_id",
-            "qsig",
-            "band",
-            F.col("bkey").bitwiseXOR(F.col("flip")).alias("bkey"),
-        )
-    )
-    cand = (
-        qb.join(bands, ["band", "bkey"])
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id", "qsig", F.col("vec_id").alias("neighbor_id"), "sig"
-        )
-        .distinct()
-    )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.bit_count(F.col("qsig").bitwiseXOR(F.col("sig")))
-        .cast("int")
-        .alias("hamming"),
-    )
-    w = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "hamming")
-    )
+    """Multiprobe MIH: ``binary_mih_topk`` with each query band key
+    probed at the exact key plus its 8 one-bit flips, a provable
+    radius-15 candidate guarantee (pinned by pytest)."""
+    return _mih(spark, sf_dir, (0,), MIH_PROBE_FLIPS)
 
 
 def binary_mih_multiprobe_recall_at10(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Recall@10 of multiprobe MIH vs exact cosine — the lift the 9x
-    candidate expansion buys over plain ``binary_mih_recall_at10``
-    (probe supersets can only add candidates, so per-query hits
-    dominate the plain form; pinned by pytest)."""
+    """Recall@10 of multiprobe MIH vs exact cosine. Probe supersets
+    can only add candidates; total hits beat plain
+    ``binary_mih_recall_at10`` (pinned by pytest)."""
     return _recall_vs_exact(
         cosine_topk(spark, sf_dir),
         binary_mih_multiprobe_topk(spark, sf_dir),
     )
 
 
+def binary_multiword_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Brute-force multi-word binary ANN: ``binary_hamming_topk`` over
+    ``MW_OFFSETS`` signatures (192 bits here); distance is the summed
+    per-word POPCNT."""
+    return _hamming_top_k(
+        _all_pairs(_signatures(spark, sf_dir, MW_OFFSETS)), MW_WORDS
+    )
+
+
+def binary_multiword_mih_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multi-index Hamming over multi-word signatures: MW_TOTAL_BANDS
+    = 24 bands over 192 bits, so by pigeonhole any pair at Hamming <=
+    23 shares a band exactly (pinned by pytest on constructed flips).
+    Random signs sit at expected distance 96, so corpus candidates
+    are band-collision-driven (~n*24/256 per query)."""
+    return _mih(spark, sf_dir, MW_OFFSETS, (0,))
+
+
+def binary_multiword_mih_recall_at10(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Recall@10 of multi-word MIH vs BRUTE multi-word Hamming — the
+    pure index loss of banding (both sides rank the same 192-bit
+    signatures)."""
+    return _recall_vs_exact(
+        binary_multiword_topk(spark, sf_dir),
+        binary_multiword_mih_topk(spark, sf_dir),
+    )
+
+
 def binary_multiword_mih_multiprobe_topk(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Multiprobe MIH over MULTI-WORD signatures (r12): composes the
-    two r11 generalizations — (word, byte) band addressing for
-    ``array<bigint>`` signatures (``binary_multiword_mih_topk``) and
-    per-band one-bit key probes (``binary_mih_multiprobe_topk``).
-    Each of the MW_TOTAL_BANDS = 24 query band keys is probed at the
-    exact key plus its 8 one-bit flips, so by pigeonhole any pair
-    within Hamming 2*24 - 1 = 47 over the 192 bits shares a probed
-    band (per-band radius floor(47/24) = 1; pinned by pytest on
-    constructed flips) — up from 23 for plain multi-word MIH.
-    Probes explode only on the BOUNDED query side (9x); candidates
-    still come from the bucketed (band, key) EQUI-join, corpus side
-    untouched — no BNLJ at any scale."""
-    emb = spread(load_table(spark, sf_dir, "embeddings"))
-    sigs = emb.select("vec_id", _mw_sig("embedding").alias("sig"))
-    bands = sigs.select(
-        "vec_id",
-        "sig",
-        F.explode(
-            F.sequence(F.lit(0), F.lit(MW_TOTAL_BANDS - 1))
-        ).alias("band"),
-    ).withColumn(
-        "bkey",
-        F.expr(
-            f"shiftright(element_at(sig, CAST(band DIV {MIH_BANDS} AS INT)"
-            f" + 1), (band % {MIH_BANDS}) * {MIH_BITS})"
-            f" & {(1 << MIH_BITS) - 1}"
-        ),
-    )
-    qb = (
-        bands.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("sig").alias("qsig"),
-            "band",
-            "bkey",
-        )
-        .withColumn(
-            "flip",
-            F.explode(F.array(*[F.lit(f) for f in MIH_PROBE_FLIPS])),
-        )
-        .select(
-            "query_id",
-            "qsig",
-            "band",
-            F.col("bkey").bitwiseXOR(F.col("flip")).alias("bkey"),
-        )
-    )
-    cand = (
-        qb.join(bands, ["band", "bkey"])
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id", "qsig", F.col("vec_id").alias("neighbor_id"), "sig"
-        )
-        .distinct()
-    )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        _mw_hamming("qsig", "sig").cast("int").alias("hamming"),
-    )
-    w = Window.partitionBy("query_id").orderBy("hamming", "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "hamming")
-    )
+    """Multiprobe MIH over multi-word signatures: each of the 24
+    query band keys probed at the exact key plus its 8 one-bit flips,
+    so by pigeonhole any pair within Hamming 2*24 - 1 = 47 shares a
+    probed band (pinned by pytest on constructed flips)."""
+    return _mih(spark, sf_dir, MW_OFFSETS, MIH_PROBE_FLIPS)
 
 
 def binary_multiword_mih_multiprobe_recall_at10(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Recall@10 of multiprobe multi-word MIH vs BRUTE multi-word
-    Hamming — directly comparable to
-    ``binary_multiword_mih_recall_at10`` (same exact side), so the
-    delta is exactly what the 9x probe expansion buys at 192 bits
-    (probe supersets can only add candidates; pinned by pytest).
-    Measured mean: 0.432 -> 0.984 at sf0.01, 0.534 -> 0.994 at sf0.1
-    — at 192 bits random pairs sit near distance 96, so the widened
-    radius-47 guarantee covers almost the entire true top-10 shell."""
+    Hamming — same exact side as ``binary_multiword_mih_recall_at10``,
+    so the delta is what the probe expansion buys at 192 bits (probe
+    supersets can only add candidates; pinned by pytest)."""
     return _recall_vs_exact(
         binary_multiword_topk(spark, sf_dir),
         binary_multiword_mih_multiprobe_topk(spark, sf_dir),
     )
 
 
-_SQL_MIH_FLIPS = ", ".join(str(f) for f in MIH_PROBE_FLIPS)
-
-#: Multiprobe replay: the query side's band keys expand by XOR with
-#: the 9 probe flips, the corpus side is the plain band table.
-_SQL_MIH_MP = f"""
-bands AS (
-    SELECT vec_id, sig, b.band,
-           (sig >> (b.band * {MIH_BITS})) & {(1 << MIH_BITS) - 1} AS bkey
-    FROM sigs CROSS JOIN
-         (SELECT unnest(generate_series(0, {MIH_BANDS - 1})) AS band) b
-),
-qprobes AS (
-    SELECT vec_id, sig, band, xor(bkey, f.flip) AS bkey
-    FROM bands CROSS JOIN (SELECT unnest([{_SQL_MIH_FLIPS}]) AS flip) f
-    WHERE vec_id < {N_QUERIES}
-),
-mpcand AS (
-    SELECT DISTINCT q.vec_id AS query_id, q.sig AS qsig,
-                    n.vec_id AS neighbor_id, n.sig AS nsig
-    FROM qprobes q JOIN bands n ON q.band = n.band AND q.bkey = n.bkey
-    WHERE q.vec_id <> n.vec_id
-),
-mpscored AS (
-    SELECT query_id, neighbor_id,
-           bit_count(xor(qsig, nsig)) AS hamming
-    FROM mpcand
-)"""
-
-BINARY_MIH_MULTIPROBE_TOPK_ORACLE = f"""
-WITH {_SQL_SIGS_CTE},
-{_SQL_MIH_MP.strip()}
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-       CAST(hamming AS INT) AS hamming
-FROM (SELECT query_id, neighbor_id, hamming,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY hamming, neighbor_id) AS rank
-      FROM mpscored)
-WHERE rank <= {TOP_K}
-"""
-
-BINARY_MIH_MULTIPROBE_RECALL_ORACLE = f"""
-WITH {_SQL_VN.strip()},
-{_SQL_SIGS_CTE},
-{_SQL_MIH_MP.strip()},
-ann_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY hamming, neighbor_id) AS rank
-        FROM mpscored)
-    WHERE rank <= {TOP_K}
-),
-{_SQL_EXACT_TOPK.strip()}
-{_SQL_RECALL_SELECT}
-"""
-
-
 #: Asymmetric-distance quantization scale: query components quantize
 #: to integer millionths (floor(x*1e6 + 0.5) — bit-identical per
-#: value in both engines, the repo's standard quantization; float32
-#: components are ~unit-scale so 64 terms stay far from BIGINT
-#: range), making the score integer-exact and order-independent.
+#: value in both engines; float32 components are ~unit-scale so 64
+#: terms stay far from BIGINT range), making the score integer-exact
+#: and order-independent.
 ASYM_SCALE = 1_000_000.0
 
 
 def binary_asymmetric_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric binary ANN (r11): the CORPUS stays sign-bit
-    quantized (8 bytes/vector — the 100 TB memory win) but the QUERY
-    keeps its float vector, scoring sum_i(sig_bit_i ? q_i : -q_i) —
-    the inner product against the un-normalized sign pattern. This is
-    the asymmetric-distance idea of Jégou et al.'s ADC / Gordo &
-    Perronnin's asymmetric binary distances: quantize only the stored
-    side and recover most of the accuracy lost to symmetric
-    Hamming (the recall audit below prices it against exact cosine —
-    compare ``binary_hamming_recall_at10``). Query components
+    """Asymmetric binary ANN: the CORPUS stays sign-bit quantized (8
+    bytes/vector) but the QUERY keeps its float vector, scoring
+    sum_i(sig_bit_i ? q_i : -q_i) — the inner product against the
+    un-normalized sign pattern (the asymmetric-distance idea of
+    Jégou et al.'s ADC / Gordo & Perronnin). Query components
     quantize to integer millionths so the score is integer-exact
     cross-engine; ranking is DESC score, neighbor_id ties."""
     emb = spread(load_table(spark, sf_dir, "embeddings"))
-    sigs = emb.select("vec_id", _sign_sig("embedding").alias("sig"))
+    sigs = emb.select(
+        F.col("vec_id").alias("neighbor_id"),
+        sign_words("embedding", (0,))[0].alias("sig"),
+    )
     queries = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         # scale/half literals CAST to DOUBLE explicitly: bare decimal
         # literals parse as DECIMAL in both engines and the decimal
         # intermediate rounds differently at half boundaries
-        # (observed: 95/500 rows off by one quantum without the cast)
         F.expr(
             f"transform(slice(embedding, 1, 64),"
             f" x -> CAST(floor(x * CAST({int(ASYM_SCALE)} AS DOUBLE)"
@@ -2125,24 +1608,17 @@ def binary_asymmetric_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("ql"),
     )
     scored = sigs.join(
-        F.broadcast(queries), F.col("query_id") != F.col("vec_id")
+        F.broadcast(queries), F.col("query_id") != F.col("neighbor_id")
     ).select(
         "query_id",
-        F.col("vec_id").alias("neighbor_id"),
+        "neighbor_id",
         F.expr(
             "aggregate(zip_with(ql, sequence(0, 63),"
             " (q, i) -> IF((shiftright(sig, i) & 1) = 1, q, -q)),"
             " 0L, (acc, x) -> acc + x)"
         ).alias("asym_score"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("asym_score").desc(), "neighbor_id"
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "rank", "asym_score")
-    )
+    return _top_k(scored, F.col("asym_score").desc())
 
 
 def binary_asymmetric_recall_at10(
@@ -2157,10 +1633,99 @@ def binary_asymmetric_recall_at10(
     )
 
 
-#: The (sig >> (i-1)) & 1 bit probe is shift-convention-proof (the
+def _sql_sigs(offsets: tuple[int, ...]) -> str:
+    """:func:`sign_words`' twin: ``sigs`` (vec_id, w0, …), one BIGINT
+    per offset. An out-of-range list index is NULL, so a dim the
+    vector lacks gives a 0 bit. DuckDB cannot shift 1::BIGINT by 63
+    (overflow check), so bit 63 packs as the min-long literal;
+    disjoint bits make the arithmetic sum equal bitwise OR, sign bit
+    included."""
+
+    def word(off: int) -> str:
+        other = "0" if off == 0 else f"embedding[((i - 1 + {off}) % 64) + 1]"
+        return f"""CAST(list_aggregate(list_transform(range(1, 65),
+               i -> CASE WHEN embedding[i] > {other} THEN
+                           CASE WHEN i = 64
+                                THEN (-9223372036854775807)::BIGINT - 1
+                                ELSE 1::BIGINT << (i - 1) END
+                         ELSE 0::BIGINT END), 'sum') AS BIGINT)"""
+
+    words = ",\n           ".join(
+        f"{word(off)} AS w{i}" for i, off in enumerate(offsets)
+    )
+    return f"""sigs AS (
+    SELECT vec_id,
+           {words}
+    FROM embeddings
+)"""
+
+
+def _sql_hamming(name: str, cand: str, n_words: int) -> str:
+    """``_hamming_top_k``'s scorer over ``sigs``. DuckDB's bit_count
+    returns TINYINT and three words can sum past 127, so each term
+    widens to INT before the addition."""
+    ham = " + ".join(
+        f"bit_count(xor(q.w{i}, n.w{i}))::INT" for i in range(n_words)
+    )
+    return _sql_scored(name, cand, "sigs", f"{ham} AS hamming")
+
+
+def _sql_brute(offsets: tuple[int, ...]) -> str:
+    """CTE prefix through ``ann_scored``: the Hamming of all pairs."""
+    return f"""{_SQL_VN},
+{_sql_sigs(offsets)},
+{_sql_hamming("ann_scored", "all_pairs", len(offsets))}"""
+
+
+def _sql_mih(offsets: tuple[int, ...], masks: tuple[int, ...]) -> str:
+    """``_mih``'s twin: CTE prefix through ``ann_scored``."""
+    return f"""{_SQL_VN},
+{_sql_sigs(offsets)},
+{_sql_probe(len(offsets) * MIH_BANDS, MIH_BITS, masks)},
+{_sql_hamming("ann_scored", "cand", len(offsets))}"""
+
+
+def _sql_hamming_topk(ctes: str) -> str:
+    return f"""WITH {ctes}
+SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
+       CAST(hamming AS INT) AS hamming
+FROM ({_sql_topk("ann_scored", "hamming")})"""
+
+
+def _sql_mw_recall(masks: tuple[int, ...]) -> str:
+    """Multi-word MIH recall: the exact side is brute multi-word
+    Hamming over the same signatures."""
+    return f"""WITH {_sql_mih(MW_OFFSETS, masks)},
+{_sql_hamming("exact_scored", "all_pairs", MW_WORDS)},
+{_sql_recall("hamming", "hamming")}"""
+
+
+BINARY_HAMMING_TOPK_ORACLE = _sql_hamming_topk(_sql_brute((0,)))
+BINARY_HAMMING_RECALL_ORACLE = (
+    f"WITH {_sql_brute((0,))},\n{_sql_cosine_recall('hamming')}"
+)
+BINARY_MIH_TOPK_ORACLE = _sql_hamming_topk(_sql_mih((0,), (0,)))
+BINARY_MIH_RECALL_ORACLE = (
+    f"WITH {_sql_mih((0,), (0,))},\n{_sql_cosine_recall('hamming')}"
+)
+BINARY_MIH_MULTIPROBE_TOPK_ORACLE = _sql_hamming_topk(
+    _sql_mih((0,), MIH_PROBE_FLIPS)
+)
+BINARY_MIH_MULTIPROBE_RECALL_ORACLE = (
+    f"WITH {_sql_mih((0,), MIH_PROBE_FLIPS)},\n{_sql_cosine_recall('hamming')}"
+)
+BINARY_MULTIWORD_TOPK_ORACLE = _sql_hamming_topk(_sql_brute(MW_OFFSETS))
+BINARY_MULTIWORD_MIH_TOPK_ORACLE = _sql_hamming_topk(_sql_mih(MW_OFFSETS, (0,)))
+BINARY_MULTIWORD_MIH_RECALL_ORACLE = _sql_mw_recall((0,))
+BINARY_MULTIWORD_MIH_MULTIPROBE_TOPK_ORACLE = _sql_hamming_topk(
+    _sql_mih(MW_OFFSETS, MIH_PROBE_FLIPS)
+)
+BINARY_MULTIWORD_MIH_MULTIPROBE_RECALL_ORACLE = _sql_mw_recall(MIH_PROBE_FLIPS)
+
+#: The (w0 >> (i-1)) & 1 bit probe is shift-convention-proof (the
 #: & 1 masks away arithmetic-shift sign fill, including bit 63).
-_SQL_ASYM = f"""
-{_SQL_SIGS_CTE},
+_SQL_ASYM = f"""{_SQL_VN},
+{_sql_sigs((0,))},
 ql AS (
     SELECT vec_id,
            list_transform(embedding,
@@ -2168,221 +1733,22 @@ ql AS (
                           + 0.5::DOUBLE) AS BIGINT)) AS q
     FROM embeddings WHERE vec_id < {N_QUERIES}
 ),
-ascored AS (
-    SELECT ql.vec_id AS query_id, s.vec_id AS neighbor_id,
+ann_scored AS (
+    SELECT c.query_id, c.neighbor_id,
            CAST(list_aggregate(list_transform(range(1, 65),
-               i -> CASE WHEN (s.sig >> (i - 1)) & 1 = 1
-                         THEN ql.q[i] ELSE -ql.q[i] END), 'sum')
+               i -> CASE WHEN (n.w0 >> (i - 1)) & 1 = 1
+                         THEN q.q[i] ELSE -q.q[i] END), 'sum')
                 AS BIGINT) AS asym_score
-    FROM ql JOIN sigs s ON ql.vec_id <> s.vec_id
+    FROM all_pairs c JOIN ql q ON q.vec_id = c.query_id
+    JOIN sigs n ON n.vec_id = c.neighbor_id
 )"""
 
-BINARY_ASYMMETRIC_TOPK_ORACLE = f"""
-WITH {_SQL_ASYM.strip()}
+BINARY_ASYMMETRIC_TOPK_ORACLE = f"""WITH {_SQL_ASYM}
 SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, asym_score
-FROM (SELECT query_id, neighbor_id, asym_score,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY asym_score DESC, neighbor_id)
-               AS rank
-      FROM ascored)
-WHERE rank <= {TOP_K}
-"""
-
-BINARY_ASYMMETRIC_RECALL_ORACLE = f"""
-WITH {_SQL_VN.strip()},
-{_SQL_ASYM.strip()},
-ann_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY asym_score DESC, neighbor_id)
-                 AS rank
-        FROM ascored)
-    WHERE rank <= {TOP_K}
-),
-{_SQL_EXACT_TOPK.strip()}
-{_SQL_RECALL_SELECT}
-"""
-
-
-def _sql_mw_word(off: int) -> str:
-    """DuckDB packing of one signature word (same min-long literal
-    trick for bit 63 as ``_SQL_SIGS_CTE``; disjoint bits make the
-    arithmetic sum equal bitwise OR)."""
-    pred = (
-        "embedding[i] > 0"
-        if off == 0
-        else f"embedding[i] > embedding[((i - 1 + {off}) % 64) + 1]"
-    )
-    return f"""CAST(list_aggregate(list_transform(range(1, 65),
-               i -> CASE WHEN {pred} THEN
-                           CASE WHEN i = 64
-                                THEN (-9223372036854775807)::BIGINT - 1
-                                ELSE 1::BIGINT << (i - 1) END
-                         ELSE 0::BIGINT END), 'sum') AS BIGINT)"""
-
-
-_SQL_MW_SIGS_CTE = f"""msigs AS (
-    SELECT vec_id,
-           {_sql_mw_word(MW_OFFSETS[0])} AS w0,
-           {_sql_mw_word(MW_OFFSETS[1])} AS w1,
-           {_sql_mw_word(MW_OFFSETS[2])} AS w2
-    FROM embeddings
-)"""
-
-#: DuckDB's bit_count returns TINYINT — three words can sum past 127,
-#: so each term widens to INT before the addition.
-_SQL_MW_HAMMING = (
-    "bit_count(xor(q.w0, b.w0))::INT + bit_count(xor(q.w1, b.w1))::INT"
-    " + bit_count(xor(q.w2, b.w2))::INT"
+FROM ({_sql_topk("ann_scored", "asym_score DESC")})"""
+BINARY_ASYMMETRIC_RECALL_ORACLE = (
+    f"WITH {_SQL_ASYM},\n{_sql_cosine_recall('asym_score DESC')}"
 )
-
-_SQL_MW_BRUTE = f"""
-{_SQL_MW_SIGS_CTE},
-mwscored AS (
-    SELECT q.vec_id AS query_id, b.vec_id AS neighbor_id,
-           {_SQL_MW_HAMMING} AS hamming
-    FROM msigs q JOIN msigs b
-      ON q.vec_id < {N_QUERIES} AND q.vec_id <> b.vec_id
-)"""
-
-BINARY_MULTIWORD_TOPK_ORACLE = f"""
-WITH {_SQL_MW_BRUTE.strip()}
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-       CAST(hamming AS INT) AS hamming
-FROM (SELECT query_id, neighbor_id, hamming,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY hamming, neighbor_id) AS rank
-      FROM mwscored)
-WHERE rank <= {TOP_K}
-"""
-
-#: (word, byte) band keys replayed exactly (band b → word b // 8,
-#: byte b % 8; shift convention irrelevant under the 8-bit mask).
-_SQL_MW_MIH = f"""
-mbands AS (
-    SELECT vec_id, w0, w1, w2, b.band,
-           ((CASE b.band // {MIH_BANDS} WHEN 0 THEN w0
-                  WHEN 1 THEN w1 ELSE w2 END)
-            >> ((b.band % {MIH_BANDS}) * {MIH_BITS}))
-           & {(1 << MIH_BITS) - 1} AS bkey
-    FROM msigs CROSS JOIN
-         (SELECT unnest(generate_series(0, {MW_TOTAL_BANDS - 1})) AS band) b
-),
-mcand AS (
-    SELECT DISTINCT q.vec_id AS query_id,
-                    q.w0 AS qw0, q.w1 AS qw1, q.w2 AS qw2,
-                    n.vec_id AS neighbor_id,
-                    n.w0 AS nw0, n.w1 AS nw1, n.w2 AS nw2
-    FROM mbands q JOIN mbands n ON q.band = n.band AND q.bkey = n.bkey
-    WHERE q.vec_id < {N_QUERIES} AND q.vec_id <> n.vec_id
-),
-mwmihscored AS (
-    SELECT query_id, neighbor_id,
-           bit_count(xor(qw0, nw0))::INT + bit_count(xor(qw1, nw1))::INT
-           + bit_count(xor(qw2, nw2))::INT AS hamming
-    FROM mcand
-)"""
-
-BINARY_MULTIWORD_MIH_TOPK_ORACLE = f"""
-WITH {_SQL_MW_SIGS_CTE.strip()},
-{_SQL_MW_MIH.strip()}
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-       CAST(hamming AS INT) AS hamming
-FROM (SELECT query_id, neighbor_id, hamming,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY hamming, neighbor_id) AS rank
-      FROM mwmihscored)
-WHERE rank <= {TOP_K}
-"""
-
-#: Multiprobe composition (r12): the multi-word band table expands
-#: on the query side by XOR with the 9 probe flips — same mbands
-#: corpus side, same equi-join.
-_SQL_MW_MIH_MP = f"""
-mqprobes AS (
-    SELECT vec_id, w0, w1, w2, band, xor(bkey, f.flip) AS bkey
-    FROM mbands CROSS JOIN
-         (SELECT unnest([{_SQL_MIH_FLIPS}]) AS flip) f
-    WHERE vec_id < {N_QUERIES}
-),
-mmpcand AS (
-    SELECT DISTINCT q.vec_id AS query_id,
-                    q.w0 AS qw0, q.w1 AS qw1, q.w2 AS qw2,
-                    n.vec_id AS neighbor_id,
-                    n.w0 AS nw0, n.w1 AS nw1, n.w2 AS nw2
-    FROM mqprobes q JOIN mbands n ON q.band = n.band AND q.bkey = n.bkey
-    WHERE q.vec_id <> n.vec_id
-),
-mmpscored AS (
-    SELECT query_id, neighbor_id,
-           bit_count(xor(qw0, nw0))::INT + bit_count(xor(qw1, nw1))::INT
-           + bit_count(xor(qw2, nw2))::INT AS hamming
-    FROM mmpcand
-)"""
-
-#: mbands comes from _SQL_MW_MIH; only its band CTE is reused (the
-#: mcand/mwmihscored tails are dead weight the optimizer prunes —
-#: unreferenced CTEs are not executed by DuckDB).
-BINARY_MULTIWORD_MIH_MULTIPROBE_TOPK_ORACLE = f"""
-WITH {_SQL_MW_SIGS_CTE.strip()},
-{_SQL_MW_MIH.strip()},
-{_SQL_MW_MIH_MP.strip()}
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank,
-       CAST(hamming AS INT) AS hamming
-FROM (SELECT query_id, neighbor_id, hamming,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY hamming, neighbor_id) AS rank
-      FROM mmpscored)
-WHERE rank <= {TOP_K}
-"""
-
-BINARY_MULTIWORD_MIH_MULTIPROBE_RECALL_ORACLE = f"""
-WITH {_SQL_MW_BRUTE.strip()},
-{_SQL_MW_MIH.strip()},
-{_SQL_MW_MIH_MP.strip()},
-exact_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY hamming, neighbor_id) AS rank
-        FROM mwscored)
-    WHERE rank <= {TOP_K}
-),
-ann_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY hamming, neighbor_id) AS rank
-        FROM mmpscored)
-    WHERE rank <= {TOP_K}
-)
-{_SQL_RECALL_SELECT}
-"""
-
-#: Recall twin: exact side = brute multi-word top-k, ann side = MIH
-#: multi-word top-k, joined per query like ``_recall_vs_exact``.
-BINARY_MULTIWORD_MIH_RECALL_ORACLE = f"""
-WITH {_SQL_MW_BRUTE.strip()},
-{_SQL_MW_MIH.strip()},
-exact_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY hamming, neighbor_id) AS rank
-        FROM mwscored)
-    WHERE rank <= {TOP_K}
-),
-ann_topk AS (
-    SELECT query_id, neighbor_id FROM (
-        SELECT query_id, neighbor_id,
-               row_number() OVER (PARTITION BY query_id
-                                  ORDER BY hamming, neighbor_id) AS rank
-        FROM mwmihscored)
-    WHERE rank <= {TOP_K}
-)
-{_SQL_RECALL_SELECT}
-"""
 
 
 def _register() -> None:

@@ -170,14 +170,14 @@ def test_binary_hamming_signature_and_topk(spark, sf_dir):
     from bigdata_pipelines_aws_glue_spark.operators.similarity import (
         N_QUERIES,
         TOP_K,
-        _sign_sig,
         binary_hamming_topk,
+        sign_words,
     )
     from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     rows = emb.select(
-        "vec_id", "embedding", _sign_sig("embedding").alias("sig")
+        "vec_id", "embedding", sign_words("embedding", (0,))[0].alias("sig")
     ).collect()
     sigs = {}
     for r in rows:
@@ -219,8 +219,8 @@ def test_binary_mih_pigeonhole_guarantee(spark, sf_dir):
         MIH_BANDS,
         MIH_BITS,
         N_QUERIES,
-        _sign_sig,
         binary_mih_topk,
+        sign_words,
     )
     from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
 
@@ -228,7 +228,7 @@ def test_binary_mih_pigeonhole_guarantee(spark, sf_dir):
     sigs = {
         r["vec_id"]: r["sig"] & ((1 << 64) - 1)
         for r in emb.select(
-            "vec_id", _sign_sig("embedding").alias("sig")
+            "vec_id", sign_words("embedding", (0,))[0].alias("sig")
         ).collect()
     }
     def shares_band(a, b):
@@ -295,9 +295,9 @@ def test_binary_mih_multiprobe_radius_and_dominance(spark, sf_dir):
         MIH_BITS,
         MIH_PROBE_FLIPS,
         N_QUERIES,
-        _sign_sig,
         binary_mih_multiprobe_recall_at10,
         binary_mih_recall_at10,
+        sign_words,
     )
     from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
 
@@ -326,7 +326,7 @@ def test_binary_mih_multiprobe_radius_and_dominance(spark, sf_dir):
     sigs = {
         r["vec_id"]: r["sig"] & ((1 << 64) - 1)
         for r in emb.select(
-            "vec_id", _sign_sig("embedding").alias("sig")
+            "vec_id", sign_words("embedding", (0,))[0].alias("sig")
         ).collect()
     }
 
@@ -380,16 +380,16 @@ def test_binary_asymmetric_score_replay_and_recall_gain(spark, sf_dir):
     from bigdata_pipelines_aws_glue_spark.operators.similarity import (
         ASYM_SCALE,
         N_QUERIES,
-        _sign_sig,
         binary_asymmetric_recall_at10,
         binary_asymmetric_topk,
         binary_hamming_recall_at10,
+        sign_words,
     )
     from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     rows = emb.select(
-        "vec_id", "embedding", _sign_sig("embedding").alias("sig")
+        "vec_id", "embedding", sign_words("embedding", (0,))[0].alias("sig")
     ).collect()
     sigs = {r["vec_id"]: r["sig"] & ((1 << 64) - 1) for r in rows}
     ql = {
@@ -431,8 +431,8 @@ def test_binary_asymmetric_score_replay_and_recall_gain(spark, sf_dir):
 
 def test_binary_multiword_pigeonhole_and_replay(spark, sf_dir):
     """Multi-word generalization (r11): 192-bit array<bigint>
-    signatures. (a) word 0 equals the one-word ``_sign_sig`` on the
-    same vectors; (b) the (word, byte) banding's pigeonhole radius is
+    signatures. (a) every word equals a numpy replay of its offset's
+    comparisons; (b) the (word, byte) banding's pigeonhole radius is
     MW_TOTAL_BANDS-1 = 23 on constructed flips; (c) the Spark MIH
     top-k equals a full numpy candidate/rank replay."""
     import numpy as np
@@ -444,9 +444,8 @@ def test_binary_multiword_pigeonhole_and_replay(spark, sf_dir):
         MW_TOTAL_BANDS,
         MW_WORDS,
         N_QUERIES,
-        _mw_sig,
-        _sign_sig,
         binary_multiword_mih_topk,
+        sign_words,
     )
     from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
 
@@ -454,8 +453,7 @@ def test_binary_multiword_pigeonhole_and_replay(spark, sf_dir):
     rows = emb.select(
         "vec_id",
         "embedding",
-        _mw_sig("embedding").alias("sig"),
-        _sign_sig("embedding").alias("w0"),
+        sign_words("embedding", MW_OFFSETS).alias("sig"),
     ).collect()
     sigs = {}
     for r in rows:
@@ -470,9 +468,6 @@ def test_binary_multiword_pigeonhole_and_replay(spark, sf_dir):
             words.append(w)
         got = [s & ((1 << 64) - 1) for s in r["sig"]]
         assert got == words, r["vec_id"]
-        assert (r["sig"][0] & ((1 << 64) - 1)) == (
-            r["w0"] & ((1 << 64) - 1)
-        ), "word 0 must equal the one-word sign signature"
         sigs[r["vec_id"]] = words
 
     mask = (1 << MIH_BITS) - 1
@@ -536,12 +531,13 @@ def test_binary_multiword_mih_multiprobe_radius_and_uplift(spark, sf_dir):
         MIH_BANDS,
         MIH_BITS,
         MIH_PROBE_FLIPS,
+        MW_OFFSETS,
         MW_TOTAL_BANDS,
         MW_WORDS,
         N_QUERIES,
-        _mw_sig,
         binary_multiword_mih_multiprobe_recall_at10,
         binary_multiword_mih_recall_at10,
+        sign_words,
     )
     from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
 
@@ -577,7 +573,7 @@ def test_binary_multiword_mih_multiprobe_radius_and_uplift(spark, sf_dir):
     sigs = {
         r["vec_id"]: [w & ((1 << 64) - 1) for w in r["sig"]]
         for r in emb.select(
-            "vec_id", _mw_sig("embedding").alias("sig")
+            "vec_id", sign_words("embedding", MW_OFFSETS).alias("sig")
         ).collect()
     }
 

@@ -330,12 +330,12 @@ WHITELIST: dict[str, dict[str, str]] = {
         "ForcedBroadcastUnbounded": "anchor side is the fixed N_QUERIES (vec_id < 50) sample",
     },
     "binary_hamming_topk": {
-        "BroadcastNestedLoopJoin": "query side is a bounded broadcast (N_QUERIES 64-bit "
-        "signatures) against the corpus signatures — the cosine_topk "
+        "BroadcastNestedLoopJoin": "query side is a bounded broadcast (N_QUERIES one-word "
+        "array<bigint> signatures) against the corpus signatures — the cosine_topk "
         "shape, but each probe is one XOR+POPCNT on a 32x-compressed "
         "signature instead of a 64-dim float fold",
         "ForcedBroadcastUnbounded": "query side is the fixed N_QUERIES (vec_id < 50) sample of "
-        "8-byte signatures — bounded by the query set, not the corpus",
+        "one-word array<bigint> signatures — bounded by the query set, not the corpus",
     },
     "binary_hamming_recall_at10": {
         "BroadcastNestedLoopJoin": "the exact-baseline side is cosine_topk over the bounded "
