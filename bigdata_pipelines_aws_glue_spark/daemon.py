@@ -12,8 +12,23 @@ archive's ``(st_size, st_mtime_ns)`` differs from when that importer
 last read it, so a changed archive is still seen by the next task.
 Python 3.12 made the reload lazy itself (gh-103200); there the module
 patches nothing.
+
+A reused worker also runs a full ``gc.collect()`` after every task
+(``pyspark/daemon.py``), which walks every tracked object: about 73k
+once pandas and pyarrow are imported, some 20 ms a collect. So before
+it forks any worker the daemon imports pandas and pyarrow (importing
+``pyspark.daemon`` already brings in ``pyspark.worker`` and the Arrow
+serializers), the stack every ``mapInPandas``/``pandas_udf`` worker
+uses, and moves everything it holds to the permanent generation with
+``gc.freeze()``: the per-task collect then walks only what the worker
+allocated since it was forked, and still frees all of it. The frozen
+objects are the daemon's import-time state, which lives as long as the
+process anyway, and freezing before ``fork()`` also keeps the
+collector from touching, and so copying, the pages shared with the
+daemon.
 """
 
+import gc
 import os
 import sys
 import zipimport
@@ -44,6 +59,9 @@ def lazy_zip_reloads() -> None:
 
 if __name__ == "__main__":
     lazy_zip_reloads()
+    import pandas  # noqa: F401  (frozen with the daemon)
+    import pyarrow  # noqa: F401
     from pyspark.daemon import manager
 
+    gc.freeze()
     manager()

@@ -205,25 +205,6 @@ N_BANDS = 4
 ROWS_PER_BAND = N_HASHES // N_BANDS
 
 
-def minhash_signature(shingles: Column) -> Column:
-    """N2 (expression form): MinHash signature as an array of 16 mins
-    of seeded ``xxhash64`` values — no Python anywhere. JVM-only
-    fallback: NOT the cross-engine-reproducible family the registered
-    queries use (ANSI mode forbids the wrap-multiply the affine mix
-    needs in expressions; the Arrow kernel wraps natively in numpy).
-
-    NOTE: nested array HOFs are interpreted per-element (not
-    whole-stage-codegen'd); measured ~9ms/doc. Kept as the pure-JVM
-    fallback; the hot path is :func:`minhash_signatures_pandas`
-    (vectorized Arrow kernel, ~100x per-doc)."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(N_HASHES - 1)),
-        lambda seed: F.array_min(
-            F.transform(shingles, lambda s: F.xxhash64(s, seed))
-        ),
-    )
-
-
 #: Odd multipliers/offsets deriving the 16 hash family members from one
 #: base hash: h_i = (a_i * h + b_i) mod 2^64 mod 2^61-1 (Carter-Wegman
 #: style; the mod-2^64 step is numpy's native uint64 wrap, replicated
@@ -291,9 +272,7 @@ def minhash_signatures_pandas(docs: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def minhash_lsh_candidates(
-    docs: DataFrame, use_pandas_kernel: bool = True
-) -> DataFrame:
+def minhash_lsh_candidates(docs: DataFrame) -> DataFrame:
     """Banded-LSH candidate pairs: explode signatures into band keys,
     self-join per bucket. The join key is (band_idx, band_hash) — at
     100 TB this shuffles only (doc_id, 16×8B signature), and buckets
@@ -301,20 +280,11 @@ def minhash_lsh_candidates(
     minhashes."""
     from bigdata_pipelines_aws_glue_spark.operators.skew import spread
 
-    if use_pandas_kernel:
-        sig = minhash_signatures_pandas(spread(docs)).filter(F.size("sig") > 0)
-    else:
-        sig = spread(docs).select(
-            "doc_id",
-            minhash_signature(_shingles(_tokens(F.col("text")))).alias("sig"),
-        ).filter(F.size("sig") > 0)
-    # r15: the banded SELF-join below consumes the signature frame on
-    # both sides, and Spark executed the whole signature pipeline
-    # (scan -> spread exchange -> Arrow-batched Python kernel) TWICE —
-    # two MapInPandas subtrees in the plan. One eager localCheckpoint
-    # materializes the (doc_id, 16-long sig) frame so both join sides
-    # read it (plan: 2 MapInPandas -> 1; measured 0.98 s -> ~0.7 s at
-    # sf0.1, pairs identical).
+    sig = minhash_signatures_pandas(spread(docs)).filter(F.size("sig") > 0)
+    # Both sides of the banded self-join below read one signature
+    # frame: one eager checkpoint, so the scan, the spread exchange and
+    # the Arrow kernel run once (one MapInPandas in the plan), not once
+    # per join side.
     sig = sig.localCheckpoint(eager=True)
 
     bands = sig.select(
@@ -925,14 +895,10 @@ def lsh_candidate_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB operator whether the banding wastes verification work
     (low precision) or silently drops near-dups (low recall)."""
     docs = load_table(spark, sf_dir, "documents")
-    # r16 measurement note (guide §1.1): eagerly checkpointing cands
-    # and true_pairs (each has two consumers — its own count and the
-    # hits join) was tried and measured a WASH (old 3.34 s vs
-    # checkpointed 3.35 s at sf0.01, warm floor, same session): the
-    # r15 signature checkpoint inside minhash_lsh_candidates already
-    # materializes the expensive kernel once, and the remaining
-    # duplicate subtrees share their shuffles via ReusedExchange.
-    # Kept the lazy form (fewer blocking jobs).
+    # cands and true_pairs each have two consumers (a count and the
+    # hits join) and stay lazy: the signature checkpoint inside
+    # minhash_lsh_candidates runs the kernel once, and the duplicate
+    # subtrees share their shuffles through ReusedExchange.
     cands = minhash_lsh_candidates(docs).select("doc_a", "doc_b")
     true_pairs = ngram_jaccard_pairs(docs, threshold=0.8).select(
         "doc_a", "doc_b"

@@ -845,19 +845,14 @@ def encode_wav(samples: np.ndarray, sample_rate: int = AUDIO_SAMPLE_RATE) -> byt
     )
 
 
-def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
-    """(samples array, sample_rate) from a RIFF/WAVE payload — walks
-    the chunk list (fmt may be followed by LIST/fact before data).
-    Since r9, all four uncompressed layouts in the wild decode, each
-    returned in its NATIVE representation (callers branch on dtype):
-    PCM 16-bit -> int16, PCM 8-bit (unsigned per spec) -> uint8,
-    PCM 24-bit -> sign-extended int32, IEEE float 32-bit -> float32;
-    WAVE_FORMAT_EXTENSIBLE (0xFFFE) unwraps to its SubFormat first
-    two GUID bytes. Since r10, compressed formats decode too: G.711
-    (tag 7 mu-law / tag 6 A-law, javax-pinned expansion -> int16) and
-    IMA ADPCM (tag 0x11, audioop-pinned, block-framed, mono ->
-    int16); MS ADPCM (tag 2) and MP3 still raise at the
-    ffmpeg/soundfile seam."""
+def wav_chunks(
+    payload: bytes,
+) -> tuple[tuple[int, int, int, int, int], bytes, int | None]:
+    """Walk a RIFF/WAVE payload's chunk list (fmt may be followed by
+    LIST/fact before data): ``((format tag, channels, sample rate,
+    block align, bits per sample), data chunk, fact sample count or
+    None)``. WAVE_FORMAT_EXTENSIBLE (0xFFFE) unwraps to its SubFormat
+    tag."""
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a WAV")
     pos, fmt, fmt_body, data, fact = 12, None, b"", None, None
@@ -879,6 +874,25 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
         # extensible: the real format is the SubFormat GUID's first
         # two bytes (offset 24 of the fmt body)
         (audio_fmt,) = struct.unpack("<H", fmt_body[24:26])
+    return (audio_fmt, channels, rate, block_align, bits), data, fact
+
+
+def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
+    """(samples array, sample_rate) from a RIFF/WAVE payload (chunk
+    list walked by ``wav_chunks``).
+    Since r9, all four uncompressed layouts in the wild decode, each
+    returned in its NATIVE representation (callers branch on dtype):
+    PCM 16-bit -> int16, PCM 8-bit (unsigned per spec) -> uint8,
+    PCM 24-bit -> sign-extended int32, IEEE float 32-bit -> float32;
+    WAVE_FORMAT_EXTENSIBLE (0xFFFE) unwraps to its SubFormat first
+    two GUID bytes. Since r10, compressed formats decode too: G.711
+    (tag 7 mu-law / tag 6 A-law, javax-pinned expansion -> int16) and
+    IMA ADPCM (tag 0x11, audioop-pinned, block-framed, mono ->
+    int16); MS ADPCM (tag 2) and MP3 still raise at the
+    ffmpeg/soundfile seam."""
+    (audio_fmt, channels, rate, block_align, bits), data, fact = wav_chunks(
+        payload
+    )
     if channels not in (1, 2):
         raise NotImplementedError(f"WAV with {channels} channels")
     if audio_fmt == 1 and bits == 16:
@@ -900,19 +914,12 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
         from bigdata_pipelines_aws_glue_spark.operators.adpcm import (
             ima_decode,
             ima_decode_stereo,
+            ima_length,
         )
 
-        if channels == 2:
-            spb = block_align - 7
-            n = (
-                fact
-                if fact is not None
-                else (len(data) // block_align) * spb
-            )
-            return ima_decode_stereo(data, block_align, n), rate
-        spb = (block_align - 4) * 2 + 1
-        n = fact if fact is not None else (len(data) // block_align) * spb
-        return ima_decode(data, block_align, n), rate
+        n = ima_length(data, block_align, channels, fact)
+        decode = ima_decode_stereo if channels == 2 else ima_decode
+        return decode(data, block_align, n), rate
     else:
         raise NotImplementedError(
             f"WAV variant fmt={audio_fmt} bits={bits} ch={channels} "

@@ -562,8 +562,12 @@ sigs AS (
 
 
 #: The LCG hyperplanes make even the "approximate" index exactly
-#: reproducible cross-engine, so ``ann_lsh_topk`` is hash-checked.
+#: reproducible cross-engine, so ``ann_lsh_topk`` and its multiprobe
+#: form are hash-checked.
 LSH_TOPK_ORACLE = f"WITH {_lsh_ann_ctes((0,))}\n{_sql_cosine_topk('ann_scored')}"
+LSH_MULTIPROBE_TOPK_ORACLE = (
+    f"WITH {_lsh_ann_ctes(PROBE_MASKS)}\n{_sql_cosine_topk('ann_scored')}"
+)
 LSH_RECALL_ORACLE = f"WITH {_lsh_ann_ctes((0,))},\n{_sql_cosine_recall('score DESC')}"
 MULTIPROBE_LSH_RECALL_ORACLE = (
     f"WITH {_lsh_ann_ctes(PROBE_MASKS)},\n{_sql_cosine_recall('score DESC')}"
@@ -1754,6 +1758,11 @@ BINARY_ASYMMETRIC_RECALL_ORACLE = (
 def _register() -> None:
     registry.register("cosine_topk", cosine_topk, COSINE_TOPK_ORACLE)
     registry.register("ann_lsh_topk", ann_lsh_topk, LSH_TOPK_ORACLE)
+    registry.register(
+        "ann_lsh_multiprobe_topk",
+        ann_lsh_multiprobe_topk,
+        LSH_MULTIPROBE_TOPK_ORACLE,
+    )
     registry.register("ivf_topk", ivf_topk, IVF_TOPK_ORACLE)
     registry.register(
         "ann_lsh_recall_at10", ann_lsh_recall_at10, LSH_RECALL_ORACLE

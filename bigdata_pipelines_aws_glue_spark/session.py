@@ -13,7 +13,10 @@ for correctness-at-scale:
   coalesces from a deliberately high initial number,
 - Python workers forked from ``daemon`` (``spark.python.daemon.module``),
   which stops each task from re-reading ``pyspark.zip`` and the other
-  archives on the worker's path,
+  archives on the worker's path, and which imports the Arrow stack
+  (pyarrow, pandas, the Arrow serializers) and freezes it out of the
+  collector's reach before forking, so the full ``gc.collect()`` a
+  reused worker runs after each task walks only that task's objects,
 - ``spark.executorEnv.PYTHONPATH`` set to the directory holding this
   package, so workers import the checkout the driver imported.
 

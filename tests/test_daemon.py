@@ -1,4 +1,5 @@
-"""The worker daemon's lazy zip-archive reloads (``daemon.py``).
+"""The worker daemon (``daemon.py``): lazy zip-archive reloads and the
+frozen import heap.
 
 The first four tests need no Spark: they drive a ``zipimporter`` on an
 archive in ``tmp_path`` and count directory reads with a spy on
@@ -136,6 +137,30 @@ def test_warm_task_rereads_no_archive(spark):
     )
     df.collect()  # warm the workers
     assert [r.reads for r in df.collect()] == [0, 0, 0, 0]
+
+
+def test_warm_task_collects_outside_the_frozen_import_heap(spark):
+    """The daemon freezes its imports before forking, so the full
+    collect a reused worker runs after each task skips them."""
+
+    def heap(batches):
+        import gc
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame(
+            {"frozen": [gc.get_freeze_count()], "tracked": [len(gc.get_objects())]}
+        )
+
+    df = spark.range(0, 4, numPartitions=4).mapInPandas(
+        heap, "frozen long, tracked long"
+    )
+    df.collect()  # warm the workers
+    rows = df.collect()
+    assert all(r.frozen > 0 for r in rows), rows
+    assert all(r.tracked < r.frozen for r in rows), rows
 
 
 def test_add_py_file_module_imports_in_next_task(spark, tmp_path):

@@ -37,7 +37,10 @@ Flags:
                                 when the arithmetic is decimal-carried.
 
 Whitelist entries document WHY a hit is intentional; anything else is
-an audit failure. Usage: python tools/plan_audit.py [sf_dir] [query ...]
+an audit failure. So is a STALE entry: one whose pattern the audited
+query no longer hits (or, in a full sweep, one naming no registered
+query), since it would let that pattern come back unnoticed.
+Usage: python tools/plan_audit.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
@@ -85,9 +88,6 @@ WHITELIST: dict[str, dict[str, str]] = {
         "ForcedBroadcastUnbounded": "actuals keyed by (nation, month): 25 x |months| rows — grows with "
         "calendar span, not volume; the spine side of the left join cannot "
         "broadcast anyway",
-    },
-    "q15_top_supplier": {
-        "BroadcastNestedLoopJoin": "global-max subquery: 1-row broadcast",
     },
     "mixture_interleave_schedule": {
         "BroadcastNestedLoopJoin": "water-filling scalar totals + the "
@@ -297,8 +297,6 @@ WHITELIST: dict[str, dict[str, str]] = {
         "BroadcastNestedLoopJoin": "per-water-filling-round 1-row surplus/weight totals "
         "crossJoined onto the bounded domain list — scalar joins "
         "(the mixture shape, unrolled WF_ROUNDS times)",
-        "SinglePartition": "largest-remainder rank windows over the bounded domain "
-        "list — one row per language regardless of corpus size",
     },
     "crawl_rounds_audit": {
         "BroadcastNestedLoopJoin": "per-round 1-row fetched/links/blocked/new/queue/"
@@ -430,9 +428,6 @@ WHITELIST: dict[str, dict[str, str]] = {
         "the IVF side is a cell equi-join",
         "ForcedBroadcastUnbounded": "centroid index + N_QUERIES exact-baseline sample",
     },
-    "ann_lsh_topk": {
-        "BroadcastNestedLoopJoin": "bounded query-side broadcast",
-    },
     "ivf_topk": {
         "BroadcastNestedLoopJoin": "bounded query-side broadcast",
         "ForcedBroadcastUnbounded": "k-row label-centroid index",
@@ -448,8 +443,6 @@ WHITELIST: dict[str, dict[str, str]] = {
         "count x 1-row sum crossJoin for the certificate row",
     },
     "pq_topk_sampled": {
-        "BroadcastNestedLoopJoin": "bounded query-side broadcast (same "
-        "shape as pq_topk)",
         "ForcedBroadcastUnbounded": "m*k-row codebooks (trained on the "
         "fixed-size PQ_TRAIN_TARGET sample) — fixed size at any scale",
     },
@@ -509,9 +502,6 @@ WHITELIST: dict[str, dict[str, str]] = {
         "on cell — verified",
         "ForcedBroadcastUnbounded": "label-centroid index (k rows) + per-cell member counts (|cells| "
         "rows) — both label-bounded",
-    },
-    "global_sorted_sample": {
-        "SinglePartition": "deliberately global total order (sampled)",
     },
     "approx_quantiles_accuracy": {
         "ForcedBroadcastUnbounded": "3 GK probe rows per returnflag group (9 rows total) joined back to "
@@ -739,7 +729,8 @@ def main() -> int:
         if dec_cols:
             hits.append("RawDecimalOutput")
         bad = [p for p in hits if p not in allowed]
-        status = "ok" if not bad else "FLAG"
+        stale = [p for p in allowed if p not in hits]
+        status = "ok" if not bad and not stale else "FLAG"
         detail = {
             "ForcedBroadcastUnbounded": f"({','.join(forced)})",
             "RawDecimalOutput": f"({','.join(dec_cols)})",
@@ -751,10 +742,18 @@ def main() -> int:
                 if p in allowed
             ]
             + [f"{p}{detail.get(p, '')} <-- NOT WHITELISTED" for p in bad]
+            + [f"{p} <-- STALE (whitelisted, not hit)" for p in stale]
         )
         print(f"  {name}: {status}" + (f"  {notes}" if notes else ""))
         if bad:
             failures.append((name, ", ".join(bad)))
+        if stale:
+            failures.append((name, "STALE " + ", ".join(stale)))
+
+    if not only:
+        for name in sorted(set(WHITELIST) - set(registry.queries())):
+            print(f"  {name}: FLAG  STALE (whitelisted, not registered)")
+            failures.append((name, "STALE whitelist entry, not registered"))
 
     if not only:
         print("  -- streaming builders (logical sweep) --")
