@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from bigdata_pipelines_aws_glue_spark import registry
 from bigdata_pipelines_aws_glue_spark.functions.rounding import stable_round
 from bigdata_pipelines_aws_glue_spark.operators.dedup import (
+    SHINGLES_CTE,
     _shingles,
     _tokens,
 )
@@ -305,7 +306,10 @@ def curation_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _curation_funnel_oracle() -> str:
-    from bigdata_pipelines_aws_glue_spark.operators.dedup import _minhash_ctes
+    from bigdata_pipelines_aws_glue_spark.operators.dedup import (
+        _minhash_ctes,
+        _verified_sql,
+    )
     from bigdata_pipelines_aws_glue_spark.operators.sampling import (
         _SPLIT_SEED,
         _TRAIN_HI,
@@ -330,13 +334,7 @@ s2 AS (
     WHERE rn = 1
 ),
 verified AS (
-    SELECT doc_a, doc_b
-    FROM cand
-    JOIN d da ON da.doc_id = doc_a
-    JOIN d db ON db.doc_id = doc_b
-    WHERE len(list_intersect(da.sh, db.sh))::DOUBLE
-            / (len(da.sh) + len(db.sh)
-               - len(list_intersect(da.sh, db.sh)))::DOUBLE >= 0.8
+{_verified_sql("cand", "doc_a", "doc_b")}
 ),
 dropn AS (
     SELECT DISTINCT doc_b AS doc_id
@@ -510,151 +508,64 @@ LIMIT 20
 # Greedy max-coverage selection (submodular corpus subset selection)
 # ---------------------------------------------------------------------------
 
-#: greedy rounds — the selection budget. The driver loop runs this
-#: many metadata-sized (1-row) collects; everything volume-shaped
-#: stays distributed.
+#: greedy budget of ``greedy_coverage_select``: this many one-pick
+#: rounds.
 _COVER_K = 8
 
-#: Hard ceiling on greedy rounds. Wall-clock is LINEAR in k — each
-#: round is one serialized driver job (anti-join + groupBy + 1-row
-#: collect over the materialized postings), so k=500 means 500
-#: back-to-back Spark jobs no matter how many executors exist. The
-#: guard turns a misconfigured k into a loud error instead of an
-#: hours-long serialized driver loop; callers needing k > 64 should
-#: switch to ``greedy_coverage_batched`` (top-m picks per round,
-#: weaker approximation bound) rather than raise the cap.
+#: Hard ceiling on greedy rounds. Each round is one serialized driver
+#: job (anti-join + groupBy + an m-row collect over the checkpointed
+#: postings), so wall-clock is linear in the rounds and no number of
+#: executors parallelizes it away. The guard turns a misconfigured
+#: budget into a loud error instead of an hours-long driver loop; a
+#: larger budget grows m, the picks per round, at fixed rounds.
 _COVER_K_MAX = 64
 
-
-def greedy_coverage_select(
-    spark: SparkSession, sf_dir: str, k: int = _COVER_K
-) -> DataFrame:
-    """Greedy maximum-coverage subset selection: pick ``_COVER_K``
-    documents that together cover the most distinct word trigrams —
-    the classic (1 - 1/e)-approximate greedy for submodular coverage
-    (Nemhauser, Wolsey & Fisher 1978), the shape behind
-    facility-location data-subset selection.
-
-    Iterative-by-nature (each pick changes every remaining gain), so
-    the round loop lives on the driver — k metadata-sized collects of
-    ONE (doc_id, gain) row each; the per-round gain computation is a
-    distributed anti-join + groupBy over the (doc, shingle) pair set,
-    which is localCheckpoint-materialized ONCE and re-scanned per
-    round (the `allpairs_prefix_join` postings precedent). The covered
-    set is bounded by the union of <= k selected documents' shingles —
-    k-bounded, never corpus-bounded.
-
-    Rounds stop early when no remaining document covers anything new
-    (gain >= 1 is required to emit); the DuckDB twin unrolls the same
-    eight rounds as MATERIALIZED CTEs with the identical
-    (gain DESC, doc_id) tie-break, so saturated rounds are empty in
-    both engines.
-
-    ``k`` is guarded by ``_COVER_K_MAX``: each round is a serialized
-    driver job, so wall-clock grows linearly in k and no cluster size
-    can parallelize it away (see the constant's note)."""
-    if not 1 <= k <= _COVER_K_MAX:
-        raise ValueError(
-            f"greedy_coverage_select k={k} outside [1, {_COVER_K_MAX}]: "
-            "each round is one serialized driver job (wall-clock is "
-            "linear in k); use greedy_coverage_batched for larger budgets"
-        )
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = docs.select(
-        "doc_id",
-        F.explode(_shingles(_tokens(F.col("text")), 3)).alias("sh"),
-    ).localCheckpoint()
-    total = pairs.select("sh").distinct().count()
-    selected: list[int] = []
-    rows: list[tuple[int, int, int, int, float]] = []
-    cum = 0
-    for rnd in range(1, k + 1):
-        if selected:
-            covered = (
-                pairs.filter(F.col("doc_id").isin(selected))
-                .select("sh")
-                .distinct()
-            )
-            rem = pairs.join(covered, "sh", "left_anti")
-        else:
-            rem = pairs
-        best = (
-            rem.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("gain"))
-            .orderBy(F.col("gain").desc(), "doc_id")
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        b = best[0]
-        cum += b["gain"]
-        # IEEE double ops in one pinned order — matches the twin's
-        # floor(x * 1e6 + 0.5) / 1e6 exactly.
-        frac = math.floor(cum / total * 1e6 + 0.5) / 1e6
-        rows.append((rnd, b["doc_id"], b["gain"], cum, frac))
-        selected.append(b["doc_id"])
-    return local_frame(
-        spark,
-        rows,
-        "sel_round int, doc_id long, gain long, cum_covered long, "
-        "coverage_frac double",
-    )
-
-
-#: batched greedy shape: rounds x picks-per-round. Total budget
-#: K = _BATCH_R * _BATCH_M documents at _BATCH_R serialized driver
-#: jobs — the escape hatch the k-guard on ``greedy_coverage_select``
-#: points large budgets at.
+#: ``greedy_coverage_batched``'s shape: rounds x picks per round.
 _BATCH_R, _BATCH_M = 4, 4
 
 
-def greedy_coverage_batched(
-    spark: SparkSession,
-    sf_dir: str,
-    rounds: int = _BATCH_R,
-    m: int = _BATCH_M,
-) -> DataFrame:
-    """Batched-pick greedy max-coverage: each round selects the TOP-m
-    documents by marginal gain against the coverage frozen at the
-    round start (the distributed-greedy relaxation — Mirzasoleiman et
-    al., "Distributed Submodular Maximization", NeurIPS'13 class).
-    Wall-clock is linear in ``rounds``, NOT in the total budget
-    rounds*m, because the serialized driver loop runs once per ROUND
-    — this is how budgets past ``greedy_coverage_select``'s k-guard
-    scale: grow m at fixed rounds and accept the weaker approximation
-    (in-batch picks can overlap each other, so a round's coverage
-    advance is <= the sum of its reported pre-round gains; the
-    ``cum_covered`` column reports the ACTUAL covered count after
-    each round, making the overlap loss measurable).
+def _greedy_cover(
+    spark: SparkSession, sf_dir: str, rounds: int, m: int
+) -> list[tuple[int, int, int, int, int, float]]:
+    """Greedy max-coverage over the documents' word-trigram sets:
+    each round picks the top-``m`` documents by marginal gain against
+    the coverage frozen at the round's start, in (gain DESC, doc_id)
+    order, and the loop stops early when no document covers anything
+    new. At m = 1 this is the classic sequential greedy.
 
-    Determinism: per-round pick set and order are (gain DESC, doc_id)
-    — the DuckDB twin unrolls the same rounds with the same LIMIT m
-    and tie-break."""
+    Returns rows ``(sel_round, pick_rank, doc_id, gain, cum_covered,
+    coverage_frac)``. ``gain`` is the pre-round marginal gain;
+    ``cum_covered`` is the number of shingles the picks through that
+    round actually cover. In-batch picks can overlap, so at m > 1 a
+    round's advance can fall short of the sum of its gains.
+
+    The (doc, shingle) postings are checkpointed once and re-scanned
+    per round; the covered set is bounded by the picked documents'
+    shingles, never by the corpus. The per-round coverage counts and
+    the shingle total come from one pass after the loop: the picks
+    become a literal doc_id -> round map, each shingle takes the first
+    round that covers it, and one global aggregate counts them."""
     if not 1 <= rounds <= _COVER_K_MAX:
         raise ValueError(
-            f"greedy_coverage_batched rounds={rounds} outside "
-            f"[1, {_COVER_K_MAX}]: each round is one serialized driver "
-            "job; scale the budget via m, not rounds"
+            f"greedy coverage rounds={rounds} outside [1, {_COVER_K_MAX}]: "
+            "each round is one serialized driver job (wall-clock is "
+            "linear in rounds); grow the budget through m, "
+            "greedy_coverage_batched's picks per round"
         )
     docs = load_table(spark, sf_dir, "documents")
     pairs = docs.select(
-        "doc_id",
-        F.explode(_shingles(_tokens(F.col("text")), 3)).alias("sh"),
+        "doc_id", F.explode(_shingles(_tokens(F.col("text")))).alias("sh")
     ).localCheckpoint()
-    total = pairs.select("sh").distinct().count()
-    selected: list[int] = []
-    rows: list[tuple[int, int, int, int, int, float]] = []
+    picks: list[tuple[int, int, int, int]] = []
     for rnd in range(1, rounds + 1):
-        if selected:
+        rem = pairs
+        if picks:
             covered = (
-                pairs.filter(F.col("doc_id").isin(selected))
+                pairs.filter(F.col("doc_id").isin([p[2] for p in picks]))
                 .select("sh")
                 .distinct()
             )
             rem = pairs.join(covered, "sh", "left_anti")
-        else:
-            rem = pairs
         best = (
             rem.groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("gain"))
@@ -664,33 +575,83 @@ def greedy_coverage_batched(
         )
         if not best:
             break
-        selected.extend(b["doc_id"] for b in best)
-        cum = (
-            pairs.filter(F.col("doc_id").isin(selected))
-            .select("sh")
-            .distinct()
-            .count()
-        )
-        frac = math.floor(cum / total * 1e6 + 0.5) / 1e6
-        for rank, b in enumerate(best, 1):
-            rows.append((rnd, rank, b["doc_id"], b["gain"], cum, frac))
+        picks += [
+            (rnd, rank, b["doc_id"], b["gain"]) for rank, b in enumerate(best, 1)
+        ]
+    if not picks:
+        return []
+    pick_round = F.create_map(
+        *[F.lit(v) for rnd, _, doc, _ in picks for v in (doc, rnd)]
+    )
+    first = pairs.groupBy("sh").agg(
+        F.min(F.try_element_at(pick_round, F.col("doc_id"))).alias("r")
+    )
+    n_rounds = picks[-1][0]
+    agg = first.agg(
+        F.count(F.lit(1)).alias("total"),
+        *[
+            F.count(F.when(F.col("r") <= rnd, 1)).alias(f"c{rnd}")
+            for rnd in range(1, n_rounds + 1)
+        ],
+    ).first()
+    rows = []
+    for rnd, rank, doc, gain in picks:
+        cum = agg[f"c{rnd}"]
+        # IEEE double ops in one pinned order — matches the twin's
+        # floor(x * 1e6 + 0.5) / 1e6 exactly.
+        frac = math.floor(cum / agg["total"] * 1e6 + 0.5) / 1e6
+        rows.append((rnd, rank, doc, gain, cum, frac))
+    return rows
+
+
+def greedy_coverage_select(
+    spark: SparkSession, sf_dir: str, k: int = _COVER_K
+) -> DataFrame:
+    """Greedy maximum-coverage subset selection: pick ``k`` documents
+    that together cover the most distinct word trigrams — the classic
+    (1 - 1/e)-approximate greedy for submodular coverage (Nemhauser,
+    Wolsey & Fisher 1978), the shape behind facility-location
+    data-subset selection. It is :func:`_greedy_cover` with one pick
+    per round, so ``gain`` is each pick's exact marginal gain; ``k``
+    is guarded by ``_COVER_K_MAX``."""
+    rows = _greedy_cover(spark, sf_dir, k, 1)
     return local_frame(
         spark,
-        rows,
+        [(rnd, doc, gain, cum, frac) for rnd, _, doc, gain, cum, frac in rows],
+        "sel_round int, doc_id long, gain long, cum_covered long, "
+        "coverage_frac double",
+    )
+
+
+def greedy_coverage_batched(
+    spark: SparkSession,
+    sf_dir: str,
+    rounds: int = _BATCH_R,
+    m: int = _BATCH_M,
+) -> DataFrame:
+    """Batched-pick greedy max-coverage: :func:`_greedy_cover` with
+    the TOP-m documents per round (the distributed-greedy relaxation —
+    Mirzasoleiman et al., "Distributed Submodular Maximization",
+    NeurIPS'13 class). Wall-clock is linear in ``rounds``, not in the
+    budget rounds*m, at a weaker approximation bound; ``cum_covered``
+    makes the in-batch overlap loss measurable."""
+    return local_frame(
+        spark,
+        _greedy_cover(spark, sf_dir, rounds, m),
         "sel_round int, pick_rank int, doc_id long, gain long, "
         "cum_covered long, coverage_frac double",
     )
 
 
-def _batched_oracle() -> str:
+def _cover_oracle(rounds: int, m: int) -> str:
+    """DuckDB twin of :func:`_greedy_cover`: the rounds unrolled as
+    MATERIALIZED CTEs with the same LIMIT m and (gain DESC, doc_id)
+    tie-break, so a saturated round is empty in both engines."""
     nl = "\n"
     parts = []
-    for r in range(1, _BATCH_R + 1):
-        if r == 1:
-            gain_src = (
-                "SELECT doc_id, count(*) AS gain FROM pairs GROUP BY 1"
-            )
-        else:
+    for r in range(1, rounds + 1):
+        gain_src = "SELECT doc_id, count(*) AS gain FROM pairs GROUP BY 1"
+        if r > 1:
             prev = " UNION ALL ".join(
                 f"SELECT doc_id FROM b{i}" for i in range(1, r)
             )
@@ -710,7 +671,7 @@ def _batched_oracle() -> str:
             f"           row_number() OVER (ORDER BY gain DESC, doc_id){nl}"
             f"               AS pick_rank{nl}"
             f"    FROM ({gain_src}){nl}"
-            f"    ORDER BY gain DESC, doc_id LIMIT {_BATCH_M}{nl})"
+            f"    ORDER BY gain DESC, doc_id LIMIT {m}{nl})"
         )
         sofar = " UNION ALL ".join(
             f"SELECT doc_id FROM b{i}" for i in range(1, r + 1)
@@ -723,19 +684,12 @@ def _batched_oracle() -> str:
     sel = f"{nl}    UNION ALL ".join(
         f"SELECT {r} AS sel_round, pick_rank, doc_id, gain,"
         f" (SELECT c FROM cum{r}) AS cum FROM b{r}"
-        for r in range(1, _BATCH_R + 1)
+        for r in range(1, rounds + 1)
     )
     cte_block = ("," + nl).join(parts)
     return f"""
-WITH t AS (
-    SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents
-),
-pairs AS MATERIALIZED (
-    SELECT doc_id,
-           unnest(list_distinct(list_transform(range(1, len(toks)-1),
-               i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS sh
-    FROM t WHERE len(toks) >= 3
-),
+WITH {SHINGLES_CTE},
+pairs AS MATERIALIZED (SELECT doc_id, unnest(sh) AS sh FROM d),
 tot AS (SELECT count(DISTINCT sh) AS n FROM pairs),
 {cte_block},
 sel AS (
@@ -752,61 +706,7 @@ FROM sel CROSS JOIN tot
 """
 
 
-def _cover_oracle() -> str:
-    nl = "\n"
-    rounds = []
-    for r in range(1, _COVER_K + 1):
-        if r == 1:
-            gain_src = "SELECT doc_id, count(*) AS gain FROM pairs GROUP BY 1"
-        else:
-            prev = " UNION ALL ".join(
-                f"SELECT doc_id FROM s{i}" for i in range(1, r)
-            )
-            rounds.append(
-                f"c{r} AS MATERIALIZED ({nl}"
-                f"    SELECT DISTINCT sh FROM pairs{nl}"
-                f"    WHERE doc_id IN ({prev}){nl})"
-            )
-            gain_src = (
-                f"SELECT p.doc_id, count(*) AS gain{nl}"
-                f"    FROM pairs p LEFT JOIN c{r} ON p.sh = c{r}.sh{nl}"
-                f"    WHERE c{r}.sh IS NULL GROUP BY 1"
-            )
-        rounds.append(
-            f"s{r} AS MATERIALIZED ({nl}    {gain_src}{nl}"
-            f"    ORDER BY gain DESC, doc_id LIMIT 1{nl})"
-        )
-    sel = f"{nl}    UNION ALL ".join(
-        f"SELECT {r} AS sel_round, doc_id, gain FROM s{r}"
-        for r in range(1, _COVER_K + 1)
-    )
-    cte_block = ("," + nl).join(rounds)
-    return f"""
-WITH t AS (
-    SELECT doc_id, string_split(trim(text), ' ') AS toks FROM documents
-),
-pairs AS MATERIALIZED (
-    SELECT doc_id,
-           unnest(list_distinct(list_transform(range(1, len(toks)-1),
-               i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS sh
-    FROM t WHERE len(toks) >= 3
-),
-tot AS (SELECT count(DISTINCT sh) AS n FROM pairs),
-{cte_block},
-sel AS (
-    {sel}
-)
-SELECT CAST(sel_round AS INTEGER) AS sel_round,
-       doc_id,
-       CAST(gain AS BIGINT) AS gain,
-       CAST(sum(gain) OVER (ORDER BY sel_round) AS BIGINT) AS cum_covered,
-       floor(CAST(sum(gain) OVER (ORDER BY sel_round) AS DOUBLE)
-             / CAST(n AS DOUBLE) * 1e6 + 0.5) / 1e6 AS coverage_frac
-FROM sel CROSS JOIN tot
-"""
-
-
-# ---------------------------------------------------------------- r12
+# ---------------------- per-source quality quantile normalization
 #: global raw-score keep threshold and the normalized (per-source
 #: percentile) keep threshold it is compared against.
 QN_RAW_THRESHOLD = 0.5
@@ -897,16 +797,15 @@ def domain_mixture_temperature(
     ``MIX_BUDGET`` document draws by LARGEST-REMAINDER (Hamilton)
     rounding so the allocations sum to the budget EXACTLY.
 
-    Relationship to the r12 mixing pair (documented adjacency, not
-    duplication): ``corpus_stats.corpus_mix_weights`` /
+    Relationship to the token-quota mixing pair (adjacent, not a
+    duplicate): ``corpus_stats.corpus_mix_weights`` /
     ``token_budget_allocation`` attest the alpha=0.7 ``pow`` form
     with 9-decimal-quantized doubles over TOKEN quotas; this pair
     attests a float-free kernel — sqrt weights quantized to integer
     micro-units, every share/quota integer ``DIV``/``%`` — over DOC
     draws, and is the base the data-constrained CAPPED water-filling
-    (:func:`domain_mixture_capped`, the genuinely new operation)
-    iterates on. The
-    temperature flattens the mixture: low-resource domains are
+    (:func:`domain_mixture_capped`) iterates on. The temperature
+    flattens the mixture: low-resource domains are
     oversampled relative to their raw share (``oversample_ppm`` >
     ``1e6`` exactly for the below-average domains), the knob a
     training-data pipeline turns to keep small languages represented.
@@ -1524,8 +1423,12 @@ def _register() -> None:
         "dsir_domain_weights", dsir_domain_weights, DSIR_ORACLE
     )
     registry.register(
-        "greedy_coverage_select", greedy_coverage_select, _cover_oracle()
+        "greedy_coverage_select",
+        greedy_coverage_select,
+        f"SELECT * EXCLUDE (pick_rank) FROM ({_cover_oracle(_COVER_K, 1)})",
     )
     registry.register(
-        "greedy_coverage_batched", greedy_coverage_batched, _batched_oracle()
+        "greedy_coverage_batched",
+        greedy_coverage_batched,
+        _cover_oracle(_BATCH_R, _BATCH_M),
     )

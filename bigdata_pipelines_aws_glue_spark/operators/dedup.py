@@ -45,6 +45,20 @@ def _shingles(tokens: Column, n: int = 3) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
+#: DuckDB twin of ``_shingles(_tokens(text), 3)``: ``d(doc_id, sh)``,
+#: each document's distinct word trigrams. A document with fewer than
+#: three tokens has no row, as the Spark side's ``size(sh) > 0`` filter
+#: (or the ``explode`` of its empty array) drops it. Every oracle over
+#: shingle sets reads this one CTE.
+SHINGLES_CTE = """d AS MATERIALIZED (
+    SELECT doc_id,
+           list_distinct(list_transform(range(1, len(t) - 1),
+               i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
+    FROM (SELECT doc_id, string_split(trim(text), ' ') AS t FROM documents)
+    WHERE len(t) >= 3
+)"""
+
+
 def exact_dedup(df: DataFrame, content_col: str, id_col: str) -> DataFrame:
     """N1: one surviving row per distinct content value (min id wins),
     with multiplicity. GroupBy on the *content hash* so the shuffle key
@@ -119,13 +133,12 @@ def ngram_jaccard_pairs(
     BroadcastNestedLoopJoin / cartesian anywhere, so it scales with
     the number of *co-occurring* shingles instead of n².
 
-    ``max_df`` is the 100 TB guard the round-2 judge demanded: a
-    shingle with document frequency df yields O(df²) join pairs, so
-    one boilerplate stop-shingle ("all rights reserved …") is a
-    quadratic hot key. Postings for shingles with ``df > max_df`` are
-    dropped *before* the self-join (the filter sits on the
-    shuffle-by-shingle side, so the blowup never materializes —
-    bounded-candidates property asserted in
+    ``max_df`` is the 100 TB guard: a shingle with document frequency
+    df yields O(df²) join pairs, so one boilerplate stop-shingle
+    ("all rights reserved …") is a quadratic hot key. Postings for
+    shingles with ``df > max_df`` are dropped *before* the self-join
+    (the filter sits on the shuffle-by-shingle side, so the blowup
+    never materializes — bounded-candidates property asserted in
     tests/test_range_neardup.py). Denominators keep the FULL shingle
     set sizes, so for pairs untouched by a capped shingle the jaccard
     is exact; pairs sharing a capped shingle are slightly
@@ -182,14 +195,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(docs, threshold=0.8)
 
 
-NGRAM_JACCARD_ORACLE = """
-WITH d AS (
-    SELECT doc_id,
-           list_distinct(list_transform(range(1, len(t) - 1),
-               i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
-    FROM (SELECT doc_id, string_split(trim(text), ' ') AS t FROM documents)
-    WHERE len(t) >= 3
-)
+NGRAM_JACCARD_ORACLE = f"""
+WITH {SHINGLES_CTE}
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        len(list_intersect(a.sh, b.sh))::DOUBLE
          / len(list_distinct(list_concat(a.sh, b.sh)))::DOUBLE AS jaccard
@@ -272,6 +279,91 @@ def minhash_signatures_pandas(docs: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
+def _bands(sigs: DataFrame, *cols: str) -> DataFrame:
+    """One row per (document, band) of a frame with a ``sig`` column:
+    ``cols``, then ``band`` and ``bucket``, the 60-bit md5 prefix of
+    the band's comma-joined signature slice (replayed by the ``bands``
+    CTE of :func:`_minhash_ctes`). Two documents are LSH candidates
+    when they share a (band, bucket)."""
+    bucket = lambda b: F.conv(  # noqa: E731
+        F.substring(
+            F.md5(
+                F.concat_ws(
+                    ",",
+                    F.transform(
+                        F.slice(
+                            F.col("sig"), b * ROWS_PER_BAND + 1, ROWS_PER_BAND
+                        ),
+                        lambda x: x.cast("string"),
+                    ),
+                )
+            ),
+            1,
+            15,
+        ),
+        16,
+        10,
+    ).cast("long")
+    bk = F.explode(
+        F.transform(
+            F.sequence(F.lit(0), F.lit(N_BANDS - 1)),
+            lambda b: F.struct(b.alias("band"), bucket(b).alias("bucket")),
+        )
+    ).alias("bk")
+    return sigs.select(*cols, bk).select(*cols, "bk.band", "bk.bucket")
+
+
+def _verify(
+    cands: DataFrame,
+    a: str,
+    b: str,
+    docs_a: DataFrame,
+    docs_b: DataFrame,
+    threshold: float,
+    n: int = 3,
+) -> DataFrame:
+    """Exact n-gram Jaccard of the candidate pairs ``(a, b)`` only:
+    each side's shingle set (``a`` ids from ``docs_a``, ``b`` ids from
+    ``docs_b``) equi-joins on its id, and ``array_intersect`` counts
+    the shared shingles. Returns ``(a, b, jaccard)`` for pairs at or
+    above ``threshold``; the SQL twin is :func:`_verified_sql`."""
+
+    def sets(docs: DataFrame, col: str) -> DataFrame:
+        return docs.select(
+            F.col("doc_id").alias(col),
+            _shingles(_tokens(F.col("text")), n).alias(f"sh_{col}"),
+        ).filter(F.size(f"sh_{col}") > 0)
+
+    inter = F.size(F.array_intersect(F.col(f"sh_{a}"), F.col(f"sh_{b}")))
+    union = F.size(F.col(f"sh_{a}")) + F.size(F.col(f"sh_{b}")) - inter
+    return (
+        cands.join(sets(docs_a, a), a)
+        .join(sets(docs_b, b), b)
+        .select(
+            a,
+            b,
+            (inter.cast("double") / union.cast("double")).alias("jaccard"),
+        )
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def _verified_sql(cands: str, a: str, b: str) -> str:
+    """DuckDB twin of :func:`_verify` at the registered queries'
+    threshold 0.8: ``(a, b, jaccard)`` for the pairs of the relation
+    ``cands`` whose shingle sets (CTE ``d``) reach it."""
+    j = (
+        "len(list_intersect(x.sh, y.sh))::DOUBLE\n"
+        "         / (len(x.sh) + len(y.sh)"
+        " - len(list_intersect(x.sh, y.sh)))::DOUBLE"
+    )
+    return f"""SELECT {a}, {b}, {j} AS jaccard
+FROM {cands}
+JOIN d x ON x.doc_id = {a}
+JOIN d y ON y.doc_id = {b}
+WHERE {j} >= 0.8"""
+
+
 def minhash_lsh_candidates(docs: DataFrame) -> DataFrame:
     """Banded-LSH candidate pairs: explode signatures into band keys,
     self-join per bucket. The join key is (band_idx, band_hash) — at
@@ -287,40 +379,7 @@ def minhash_lsh_candidates(docs: DataFrame) -> DataFrame:
     # per join side.
     sig = sig.localCheckpoint(eager=True)
 
-    bands = sig.select(
-        "doc_id",
-        "sig",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(N_BANDS - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat_ws(
-                                    ",",
-                                    F.transform(
-                                        F.slice(
-                                            F.col("sig"),
-                                            b * ROWS_PER_BAND + 1,
-                                            ROWS_PER_BAND,
-                                        ),
-                                        lambda x: x.cast("string"),
-                                    ),
-                                )
-                            ),
-                            1,
-                            15,
-                        ),
-                        16,
-                        10,
-                    ).cast("long").alias("bucket"),
-                ),
-            )
-        ).alias("bk"),
-    ).select("doc_id", "sig", "bk.band", "bk.bucket")
-
+    bands = _bands(sig, "doc_id", "sig")
     a, b = bands.alias("a"), bands.alias("b")
     est = (
         F.size(
@@ -375,13 +434,7 @@ def _minhash_ctes() -> str:
     ).format(r=ROWS_PER_BAND)
     return f"""
 consts(i, a, b) AS (VALUES {consts}),
-d AS (
-    SELECT doc_id,
-           list_distinct(list_transform(range(1, len(t) - 1),
-               i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
-    FROM (SELECT doc_id, string_split(trim(text), ' ') AS t FROM documents)
-    WHERE len(t) >= 3
-),
+{SHINGLES_CTE},
 base AS (
     SELECT doc_id,
            (('0x' || substring(md5(g), 1, 15))::BIGINT)::HUGEINT AS h
@@ -436,29 +489,7 @@ def neardup_verified_pairs(
     banding, asserted in tests/test_northstar.py). Nothing in the
     plan enumerates all pairs."""
     cands = minhash_lsh_candidates(docs).select("doc_a", "doc_b")
-    d = docs.select(
-        "doc_id", _shingles(_tokens(F.col("text")), n).alias("sh")
-    ).filter(F.size("sh") > 0)
-    withsh = (
-        cands.join(
-            d.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")),
-            "doc_a",
-        )
-        .join(
-            d.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")),
-            "doc_b",
-        )
-    )
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - inter
-    return (
-        withsh.select(
-            "doc_a",
-            "doc_b",
-            (inter.cast("double") / union.cast("double")).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _verify(cands, "doc_a", "doc_b", docs, docs, threshold, n)
 
 
 def dedup_neardup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -472,16 +503,7 @@ def dedup_neardup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 NEARDUP_PIPELINE_ORACLE = f"""
 WITH {_minhash_ctes()}
-SELECT doc_a, doc_b,
-       len(list_intersect(da.sh, db.sh))::DOUBLE
-         / (len(da.sh) + len(db.sh) - len(list_intersect(da.sh, db.sh)))::DOUBLE
-         AS jaccard
-FROM cand
-JOIN d da ON da.doc_id = doc_a
-JOIN d db ON db.doc_id = doc_b
-WHERE len(list_intersect(da.sh, db.sh))::DOUBLE
-        / (len(da.sh) + len(db.sh) - len(list_intersect(da.sh, db.sh)))::DOUBLE
-        >= 0.8
+{_verified_sql("cand", "doc_a", "doc_b")}
 """
 
 
@@ -498,63 +520,17 @@ def incremental_neardup_pairs(
     frozen test corpus ships none; the join shape is identical.
     Output: (new_id, corpus_id, jaccard >= threshold)."""
 
-    def _bands(docs: DataFrame, id_alias: str) -> DataFrame:
+    def bands(docs: DataFrame, col: str) -> DataFrame:
         sig = minhash_signatures_pandas(docs).filter(F.size("sig") > 0)
-        return sig.select(
-            F.col("doc_id").alias(id_alias),
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(N_BANDS - 1)),
-                    lambda b: F.struct(
-                        b.alias("band"),
-                        F.conv(
-                            F.substring(
-                                F.md5(
-                                    F.concat_ws(
-                                        ",",
-                                        F.transform(
-                                            F.slice(
-                                                F.col("sig"),
-                                                b * ROWS_PER_BAND + 1,
-                                                ROWS_PER_BAND,
-                                            ),
-                                            lambda x: x.cast("string"),
-                                        ),
-                                    )
-                                ),
-                                1,
-                                15,
-                            ),
-                            16,
-                            10,
-                        ).cast("long").alias("bucket"),
-                    ),
-                )
-            ).alias("bk"),
-        ).select(id_alias, "bk.band", "bk.bucket")
+        return _bands(sig.withColumnRenamed("doc_id", col), col)
 
     cand = (
-        _bands(new_docs, "new_id")
-        .join(_bands(corpus, "corpus_id"), ["band", "bucket"])
+        bands(new_docs, "new_id")
+        .join(bands(corpus, "corpus_id"), ["band", "bucket"])
         .select("new_id", "corpus_id")
         .distinct()
     )
-    shing = lambda d, ida: d.select(  # noqa: E731
-        F.col("doc_id").alias(ida),
-        _shingles(_tokens(F.col("text"))).alias(f"sh_{ida}"),
-    ).filter(F.size(f"sh_{ida}") > 0)
-    withsh = cand.join(shing(new_docs, "new_id"), "new_id").join(
-        shing(corpus, "corpus_id"), "corpus_id"
-    )
-    inter = F.size(F.array_intersect(F.col("sh_new_id"), F.col("sh_corpus_id")))
-    union = (
-        F.size(F.col("sh_new_id")) + F.size(F.col("sh_corpus_id")) - inter
-    )
-    return withsh.select(
-        "new_id",
-        "corpus_id",
-        (inter.cast("double") / union.cast("double")).alias("jaccard"),
-    ).filter(F.col("jaccard") >= threshold)
+    return _verify(cand, "new_id", "corpus_id", new_docs, corpus, threshold)
 
 
 def dedup_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -579,16 +555,7 @@ inc AS (
       ON n.band = c.band AND n.bucket = c.bucket
     WHERE n.doc_id % 5 = 0 AND c.doc_id % 5 <> 0
 )
-SELECT new_id, corpus_id,
-       len(list_intersect(dn.sh, dc.sh))::DOUBLE
-         / (len(dn.sh) + len(dc.sh) - len(list_intersect(dn.sh, dc.sh)))::DOUBLE
-         AS jaccard
-FROM inc
-JOIN d dn ON dn.doc_id = new_id
-JOIN d dc ON dc.doc_id = corpus_id
-WHERE len(list_intersect(dn.sh, dc.sh))::DOUBLE
-        / (len(dn.sh) + len(dc.sh) - len(list_intersect(dn.sh, dc.sh)))::DOUBLE
-        >= 0.8
+{_verified_sql("inc", "new_id", "corpus_id")}
 """
 
 
@@ -602,14 +569,11 @@ def simhash_signature(tokens: Column, bits: int = 60) -> Column:
     bit-identical in any engine and ``dedup_simhash`` is hash-checked
     against a full SQL replay instead of rows-only.
 
-    SINGLE-PASS fold (r11): one ``aggregate`` carries all 60 vote
-    counters as an ``array<bigint>`` accumulator (zip_with per token)
-    and a second pass packs the signs. The original form unrolled 60
-    separate aggregates — 60 traversals of the token-hash array per
-    document — and was the dominant cost of the whole simhash family;
-    the fold produces BIT-IDENTICAL signatures (verified over the
-    full sf0.1 corpus before the swap) at ~5x less wall time
-    (1.17 -> 0.23 s warm at sf0.1)."""
+    One ``aggregate`` walks the token hashes once, carrying all vote
+    counters as an ``array<bigint>`` accumulator (``zip_with`` per
+    token); a second pass packs the signs. Keep it a single fold: one
+    aggregate per bit walks the token-hash array ``bits`` times per
+    document."""
     if bits > 60:
         raise ValueError("md5-prefix hash carries 60 bits")
     hashes = F.transform(
@@ -659,8 +623,9 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SIMHASH_ORACLE = """
-WITH toks AS (
+#: DuckDB twin of ``simhash_signature(_tokens(text))``: ``sigs(doc_id,
+#: sig)`` for every document.
+SIMHASH_SIGS_CTE = """toks AS (
     SELECT doc_id, unnest(string_split(trim(text), ' ')) AS tok
     FROM documents
 ),
@@ -673,11 +638,17 @@ votes AS (
            sum(CASE WHEN (hv >> b.b) & 1 = 1 THEN 1 ELSE -1 END) AS v
     FROM h CROSS JOIN (SELECT unnest(generate_series(0, 59)) AS b) b
     GROUP BY doc_id, b.b
-)
-SELECT doc_id,
-       CAST(sum(CASE WHEN v > 0 THEN (1::BIGINT << b) ELSE 0::BIGINT END)
-            AS BIGINT) AS simhash
-FROM votes GROUP BY doc_id
+),
+sigs AS (
+    SELECT doc_id,
+           CAST(sum(CASE WHEN v > 0 THEN (1::BIGINT << b)
+                         ELSE 0::BIGINT END) AS BIGINT) AS sig
+    FROM votes GROUP BY doc_id
+)"""
+
+SIMHASH_ORACLE = f"""
+WITH {SIMHASH_SIGS_CTE}
+SELECT doc_id, sig AS simhash FROM sigs
 """
 
 
@@ -704,7 +675,7 @@ SIMHASH_BLOCK_DF_CAP = 64
 
 
 def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-scale binary near-dup SELF-join (r11): all document
+    """Corpus-scale binary near-dup SELF-join: all document
     pairs within SimHash Hamming distance <= 3 — the integer-exact
     complement to ``dedup_minhash_lsh`` (no Jaccard threshold float
     anywhere; the signature, blocks, and distance are all integer
@@ -771,30 +742,11 @@ def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Replays the whole pipeline: signature (same CTEs as
-#: SIMHASH_ORACLE), block keys, df-cap, block equi-join, radius
-#: filter, distinct (a pair sharing several blocks emits once).
+#: Replays the whole pipeline: signature, block keys, df-cap, block
+#: equi-join, radius filter, distinct (a pair sharing several blocks
+#: emits once).
 SIMHASH_HAMMING_ORACLE = f"""
-WITH toks AS (
-    SELECT doc_id, unnest(string_split(trim(text), ' ')) AS tok
-    FROM documents
-),
-h AS (
-    SELECT doc_id, ('0x' || substring(md5(tok), 1, 15))::BIGINT AS hv
-    FROM toks
-),
-votes AS (
-    SELECT doc_id, b.b AS b,
-           sum(CASE WHEN (hv >> b.b) & 1 = 1 THEN 1 ELSE -1 END) AS v
-    FROM h CROSS JOIN (SELECT unnest(generate_series(0, 59)) AS b) b
-    GROUP BY doc_id, b.b
-),
-sigs AS (
-    SELECT doc_id,
-           CAST(sum(CASE WHEN v > 0 THEN (1::BIGINT << b)
-                         ELSE 0::BIGINT END) AS BIGINT) AS sig
-    FROM votes GROUP BY doc_id
-),
+WITH {SIMHASH_SIGS_CTE},
 blocks0 AS (
     SELECT doc_id, sig, b.blk,
            (sig >> (b.blk * {SIMHASH_BLOCK_BITS}))
@@ -836,7 +788,7 @@ def decontaminate_against_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingled = docs.select(
         "doc_id",
         "source",
-        F.explode(F.array_distinct(_shingles(_tokens(F.col("text"))))).alias("sh"),
+        F.explode(_shingles(_tokens(F.col("text")))).alias("sh"),
     )
     bench = (
         shingled.filter(F.col("source") == "src0").select("sh").distinct()
@@ -861,14 +813,11 @@ def decontaminate_against_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DECONTAMINATE_ORACLE = """
-WITH t AS (
-  SELECT doc_id, source, string_split(trim(text), ' ') AS toks FROM documents
-),
+DECONTAMINATE_ORACLE = f"""
+WITH {SHINGLES_CTE},
 g AS (
-  SELECT doc_id, source, unnest(list_distinct(list_transform(range(1, len(toks)-1),
-         i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))) AS sh
-  FROM t WHERE len(toks) >= 3
+  SELECT d.doc_id, x.source, unnest(d.sh) AS sh
+  FROM d JOIN documents x ON x.doc_id = d.doc_id
 ),
 bench AS (SELECT DISTINCT sh FROM g WHERE source = 'src0'),
 per_doc AS (
@@ -886,7 +835,7 @@ FROM per_doc
 
 
 def lsh_candidate_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Retrieval-quality audit of the MinHash-LSH banding (round 6):
+    """Retrieval-quality audit of the MinHash-LSH banding:
     candidate-set PRECISION and RECALL against the exact
     Jaccard>=0.8 ground truth — the S-curve of the chosen 16/4
     banding measured on real data rather than quoted from theory.
@@ -930,17 +879,11 @@ def lsh_candidate_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: ground-truth pairs via the inverted shingle index (exact — a pair
 #: at Jaccard >= 0.8 must share a shingle; same construction as the
-#: Spark side and the sf0.1 scale twins), df-capped identically.
+#: Spark side and the sf0.1 scale twins), df-capped identically. Reads
+#: the shingle sets ``d`` that :func:`_minhash_ctes` defines.
 _TRUE_PAIRS_CTE = """
-dt AS MATERIALIZED (
-    SELECT doc_id,
-           list_distinct(list_transform(range(1, len(t) - 1),
-               i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
-    FROM (SELECT doc_id, string_split(trim(text), ' ') AS t FROM documents)
-    WHERE len(t) >= 3
-),
 inv AS MATERIALIZED (
-    SELECT doc_id, s FROM (SELECT doc_id, unnest(sh) AS s FROM dt)
+    SELECT doc_id, s FROM (SELECT doc_id, unnest(sh) AS s FROM d)
     QUALIFY count(*) OVER (PARTITION BY s) <= 500
 ),
 tcand AS (
@@ -951,8 +894,8 @@ tcand AS (
 true_pairs AS (
     SELECT c.doc_a, c.doc_b
     FROM tcand c
-    JOIN dt da ON da.doc_id = c.doc_a
-    JOIN dt db ON db.doc_id = c.doc_b
+    JOIN d da ON da.doc_id = c.doc_a
+    JOIN d db ON db.doc_id = c.doc_b
     WHERE c.n_shared::DOUBLE
             / (len(da.sh) + len(db.sh) - c.n_shared)::DOUBLE >= 0.8
 )"""

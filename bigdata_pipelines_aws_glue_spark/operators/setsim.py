@@ -38,7 +38,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata_pipelines_aws_glue_spark import registry
-from bigdata_pipelines_aws_glue_spark.operators.dedup import _shingles, _tokens
+from bigdata_pipelines_aws_glue_spark.operators.dedup import (
+    SHINGLES_CTE,
+    _shingles,
+    _tokens,
+)
 from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
 
 #: Jaccard threshold as an exact rational NUM/DEN (0.8) so every
@@ -146,17 +150,9 @@ def allpairs_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return allpairs_similarity_join(sets)
 
 
-ALLPAIRS_ORACLE = """
-WITH t AS (
-    SELECT doc_id, string_split(trim(text), ' ') AS tk FROM documents
-),
-s AS (
-    SELECT doc_id,
-           list_distinct(list_transform(range(1, len(tk) - 1),
-               i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS sh
-    FROM t WHERE len(tk) >= 3
-),
-u AS (SELECT doc_id, unnest(sh) AS g FROM s WHERE len(sh) > 0),
+ALLPAIRS_ORACLE = f"""
+WITH {SHINGLES_CTE},
+u AS (SELECT doc_id, unnest(sh) AS g FROM d),
 df AS (SELECT g, count(*) AS df FROM u GROUP BY g),
 tr AS (SELECT doc_id, g, df FROM u JOIN df USING (g)),
 sized AS (

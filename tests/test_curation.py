@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import math
+
+import pytest
 from pyspark.sql import functions as F
 
 from bigdata_pipelines_aws_glue_spark.operators.curation import (
@@ -180,9 +183,18 @@ def test_dsir_weights_match_python_replay(spark, sf_dir):
     assert langs.count(_DSIR_TARGET_LANG) / 20 > base_rate
 
 
-def test_greedy_coverage_matches_python_replay(spark, sf_dir):
+@pytest.mark.parametrize(
+    "rounds, m", [(8, 1), (4, 4)], ids=["select", "batched"]
+)
+def test_greedy_coverage_matches_python_replay(spark, sf_dir, rounds, m):
+    """Exact rows of both coverage queries against a Python replay: m
+    picks per round by (gain DESC, doc_id), gains frozen at the
+    round's start, cum_covered the coverage after the round."""
     from bigdata_pipelines_aws_glue_spark.operators.curation import (
+        _BATCH_M,
+        _BATCH_R,
         _COVER_K,
+        greedy_coverage_batched,
         greedy_coverage_select,
     )
 
@@ -196,34 +208,40 @@ def test_greedy_coverage_matches_python_replay(spark, sf_dir):
             shingles[row["doc_id"]] = {
                 " ".join(toks[i : i + 3]) for i in range(len(toks) - 2)
             }
+    total = len(set().union(*shingles.values()))
     covered: set = set()
     expect = []
-    for rnd in range(1, _COVER_K + 1):
+    for rnd in range(1, rounds + 1):
         gains = {
             d: len(s - covered) for d, s in shingles.items() if s - covered
         }
         if not gains:
             break
-        best = min(gains, key=lambda d: (-gains[d], d))
-        covered |= shingles[best]
-        expect.append((rnd, best, gains[best], len(covered)))
+        best = sorted(gains, key=lambda d: (-gains[d], d))[:m]
+        for d in best:
+            covered |= shingles[d]
+        cum = len(covered)
+        frac = math.floor(cum / total * 1e6 + 0.5) / 1e6
+        expect += [
+            (rnd, rank, d, gains[d], cum, frac)
+            for rank, d in enumerate(best, 1)
+        ]
 
-    got = sorted(
-        greedy_coverage_select(spark, sf_dir).collect(),
-        key=lambda r: r["sel_round"],
-    )
-    assert [
-        (r["sel_round"], r["doc_id"], r["gain"], r["cum_covered"])
-        for r in got
-    ] == expect
-    # submodularity: marginal gains are nonincreasing
-    gains = [r["gain"] for r in got]
-    assert all(a >= b for a, b in zip(gains, gains[1:]))
-    # coverage fraction is consistent and within (0, 1]
-    total = len(set().union(*shingles.values()))
-    for r in got:
-        assert abs(r["coverage_frac"] - r["cum_covered"] / total) < 2e-6
-        assert 0.0 < r["coverage_frac"] <= 1.0
+    if m == 1:
+        assert rounds == _COVER_K
+        got = [
+            (r["sel_round"], 1, *tuple(r)[1:])
+            for r in greedy_coverage_select(spark, sf_dir).collect()
+        ]
+    else:
+        assert (rounds, m) == (_BATCH_R, _BATCH_M)
+        got = [tuple(r) for r in greedy_coverage_batched(spark, sf_dir).collect()]
+    assert sorted(got) == expect
+    assert len(expect) == rounds * m
+    # submodularity: marginal gains are nonincreasing across rounds
+    gains = [row[3] for row in expect]
+    assert all(a >= b for a, b in zip(gains[::m], gains[m::m]))
+    assert 0.0 < expect[-1][5] <= 1.0
 
 
 def test_greedy_coverage_k_guard(spark, sf_dir):

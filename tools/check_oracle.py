@@ -9,6 +9,9 @@ values, so we keep all emitted floats stable well past that).
 Usage:  python tools/check_oracle.py [sf_dir] [query ...]
         python tools/check_oracle.py [sf_dir] --stalest N
 
+A named query that is not registered fails the run (exit 2) before
+any Spark session starts.
+
 ``--stalest N`` (VERDICT_r9 item 7, age-sweep insurance): reads every
 CORRECTNESS_r*.json, computes each registered query's latest GREEN
 driver attestation round, and checks the N oldest-attested queries
@@ -28,6 +31,10 @@ import duckdb
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from bigdata_pipelines_aws_glue_spark.operators.dedup import (  # noqa: E402
+    SHINGLES_CTE,
+)
+
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
@@ -38,14 +45,8 @@ TABLES = (
 #: but candidates come from a shingle equi-join instead of the
 #: all-pairs cross join: 4 s at sf0.1 where the primary runs >15 min.
 #: tests/test_oracle_twins.py asserts primary == twin at sf0.01.
-_FAST_JACCARD_PAIRS = """
-d AS MATERIALIZED (
-    SELECT doc_id,
-           list_distinct(list_transform(range(1, len(t) - 1),
-               i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS sh
-    FROM (SELECT doc_id, string_split(trim(text), ' ') AS t FROM documents)
-    WHERE len(t) >= 3
-),
+_FAST_JACCARD_PAIRS = f"""
+{SHINGLES_CTE},
 inv AS MATERIALIZED (SELECT doc_id, unnest(sh) AS s FROM d),
 cand AS (
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_shared
@@ -198,6 +199,13 @@ def main() -> int:
 
     import __spark_entry__ as entry_mod
 
+    queries = entry_mod.queries()
+    oracles = entry_mod.oracle_sql()
+    unknown = sorted(only - set(queries))
+    if unknown:
+        print(f"unknown query names: {', '.join(unknown)}", file=sys.stderr)
+        return 2
+
     if os.environ.get("PLAIN_SESSION"):
         # mimic an unknown driver session: default timezone/configs
         from pyspark.sql import SparkSession
@@ -218,8 +226,6 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
 
-    queries = entry_mod.queries()
-    oracles = entry_mod.oracle_sql()
     if stalest_n:
         only = set(stalest_names(queries, stalest_n))
     failures = []

@@ -41,6 +41,8 @@ an audit failure. So is a STALE entry: one whose pattern the audited
 query no longer hits (or, in a full sweep, one naming no registered
 query), since it would let that pattern come back unnoticed.
 Usage: python tools/plan_audit.py [sf_dir] [query ...]
+A named query that is not registered fails the run (exit 2) before
+any Spark session starts.
 """
 
 from __future__ import annotations
@@ -703,6 +705,11 @@ def main() -> int:
 
     from bigdata_pipelines_aws_glue_spark import registry
     from bigdata_pipelines_aws_glue_spark.session import get_spark
+
+    unknown = sorted(only - set(registry.queries()))
+    if unknown:
+        print(f"unknown query names: {', '.join(unknown)}", file=sys.stderr)
+        return 2
 
     spark = get_spark("plan-audit")
     failures: list[tuple[str, str]] = []
