@@ -29,7 +29,7 @@ aggregates map-side to 7 longs per partition. Scoring
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata_pipelines_aws_glue_spark import registry
@@ -93,8 +93,10 @@ def _feature_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _train(spark: SparkSession, sf_dir: str) -> tuple[list[float], list[tuple]]:
-    f = _feature_frame(spark, sf_dir).localCheckpoint(eager=True)
-    n = f.count()
+    size = Observation()
+    f = _feature_frame(spark, sf_dir).observe(size, F.count("*").alias("n"))
+    f = f.localCheckpoint(eager=True)
+    n = size.get["n"]
     w = [0.0] * len(FEATURES)
     hist: list[tuple] = []
     for rnd in range(1, GD_ROUNDS + 1):

@@ -25,7 +25,7 @@ identical pair list (:func:`_closure_oracle`).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_pipelines_aws_glue_spark import registry
@@ -130,15 +130,19 @@ def connected_components_star(
             .distinct()
         )
 
-    base = e.distinct().localCheckpoint(eager=True)
-    cur = base
-    n_cur = cur.count()
+    # each edge set's size rides its checkpoint as an observed metric
+    n = F.count("*").alias("n")
+    size = Observation()
+    base = e.distinct().observe(size, n).localCheckpoint(eager=True)
+    cur, n_cur = base, size.get["n"]
     converged = n_cur == 0
     for _ in range(max_iter):
         if converged:
             break
-        nxt = small_star(large_star(cur)).localCheckpoint(eager=True)
-        n_nxt = nxt.count()
+        size = Observation()
+        nxt = small_star(large_star(cur)).observe(size, n)
+        nxt = nxt.localCheckpoint(eager=True)
+        n_nxt = size.get["n"]
         # both sides are checkpointed and distinct, so the sets are
         # equal iff the counts are equal AND one contains the other;
         # the count gate keeps the exceptAll co-group to the last round

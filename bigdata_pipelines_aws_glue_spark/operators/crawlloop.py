@@ -51,9 +51,8 @@ hash-partitioned by URL, refreshed per round via co-located joins.
 from __future__ import annotations
 
 import datetime
-from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata_pipelines_aws_glue_spark import registry
@@ -70,6 +69,7 @@ from bigdata_pipelines_aws_glue_spark.operators.sitemap import (
     crawl_queue_combined,
     sitemap_seeds,
 )
+from bigdata_pipelines_aws_glue_spark.sources.local import local_frame
 from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
 
 # ------------------------------------------------- fetch_schedule
@@ -94,11 +94,8 @@ def fetch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     crawl loop's ``q0`` (``_initial_state`` applies the identical
     gate). Per-row expressions + one re-rank window over the
     attested input."""
-    # r15: the gate is the per-host join form (robots parsed once per
-    # host, not once per queue row) over the checkpointed queue — the
-    # checkpoint lets the gate's host-distinct and join both read the
-    # queue without re-deriving its chain. Verdicts and the delay are
-    # identical to the per-row form (same expressions per host).
+    # the gate parses robots.txt once per host and joins it back, so
+    # the queue it reads twice (host-distinct and join) is materialized
     cq = crawl_queue_combined(spark, sf_dir).localCheckpoint(eager=True)
     q = robots_gate(cq, keep_delay=True)
     sched_rank = F.row_number().over(
@@ -283,73 +280,78 @@ def _fetched_links(fetched: DataFrame) -> DataFrame:
     )
 
 
+#: one audit row per round, the schema of ``crawl_rounds_audit``.
+AUDIT_SCHEMA = (
+    "round int NOT NULL, n_fetched bigint NOT NULL, n_links bigint NOT NULL, "
+    "n_blocked bigint NOT NULL, n_new bigint NOT NULL, "
+    "queue_size bigint NOT NULL, visited_size bigint NOT NULL, "
+    "fetched_md5 string NOT NULL"
+)
+
+
 def _crawl_round(
-    k: int, q: DataFrame, v: DataFrame
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """One crawl round over state ``(q, v)`` -> the new state plus
-    the round's 1-row audit frame. Factored out of
+    k: int, q: DataFrame, v: DataFrame, n_visited: int
+) -> tuple[DataFrame, DataFrame, tuple]:
+    """One crawl round over state ``(q, v)``, where ``v`` holds
+    ``n_visited`` rows -> the new state plus the round's audit row, a
+    tuple in :data:`AUDIT_SCHEMA`'s column order. Factored out of
     :func:`crawl_rounds_audit` so pytest can drive the loop to
     frontier exhaustion on a small closed fixture.
 
     PRECONDITION: ``q`` and ``v`` are URL-disjoint (true by
     construction from ``_initial_state`` and preserved by every
     round — candidates anti-join ``v``). The visited union below is
-    deliberately multiset (UNION ALL on both engines), so a caller
-    passing overlapping state would double-count ``visited_size``;
-    the seeded-replay pytest pins this contract."""
-    # checkpoint discipline: multiply-consumed frames whose RECOMPUTE
-    # is expensive cut lineage eagerly. Measured at sf0.1 (r15 build):
-    # checkpointing only the round-crossing state read 20-75 s — the
-    # robots expression tree and its joins re-ran as separate job
-    # DAGs per consumer — vs ~11 s with checkpoints on every reused
-    # frame. r15 trimmed the per-round blocking jobs to 3 (fetched,
-    # disc, q). Optimization r16 (guide §2.4) keeps 3 blocking jobs
-    # but removes duplicated work around them:
-    #
-    # - the politeness RANK window now runs ONCE per round: the
-    #   checkpointed frame is ``ranked`` itself, so ``fetched`` and
-    #   ``rem`` are plain filters over the materialized rows (before,
-    #   checkpointing post-filter ``fetched`` re-ran the window
-    #   shuffle a second time for ``rem``);
-    # - the round-crossing state checkpoint is the MERGED full-outer
-    #   frame carrying an ``is_new`` marker (rem-side NULL — exactly
-    #   the rows the old ``cand anti-join rem`` counted), so the
-    #   audit's ``n_new``/``queue_size`` become ONE aggregation over
-    #   it and the separate anti-join evaluation of ``cand`` is gone
-    #   (``cand`` now has a single consumer);
-    # - the two ``disc`` audit scans (n_links, n_blocked) fuse into
-    #   one conditional aggregation — identical values by definition
-    #   (sum over the allowed+blocked partition == unconditional sum;
-    #   count of NOT allowed == count after the ~allowed filter).
-    #
-    # Audit crossJoins drop 6 -> 4; per-round window shuffles 2 -> 1.
-    ranked = q.withColumn(
-        "rk",
-        F.row_number().over(
-            Window.partitionBy("host").orderBy(
-                F.col("refs").desc(), F.col("url").asc()
-            )
-        ),
-    ).localCheckpoint(eager=True)
-    fetched = ranked.filter(F.col("rk") <= FETCH_BUDGET).select(
-        "host", "url"
+    deliberately multiset (UNION ALL on both engines), so
+    ``visited_size`` is exactly ``n_visited + n_fetched``; a caller
+    passing overlapping state would double-count it. The
+    seeded-replay pytest pins this contract.
+
+    The round's three eager checkpoints (``ranked``, ``disc`` and
+    ``merged``) are the frames that more than one consumer reads; its
+    counts ride them as observed metrics, so no other job runs. The
+    fetched URLs reach the driver inside ``fetched_md5``'s
+    ``collect_list``: at most ``FETCH_BUDGET`` x hosts URLs, the rows
+    the round fetches."""
+    fetch = f"rk <= {FETCH_BUDGET}"
+    fetch_obs, disc_obs, merged_obs = (Observation() for _ in range(3))
+    ranked = (
+        q.withColumn(
+            "rk",
+            F.row_number().over(
+                Window.partitionBy("host").orderBy(
+                    F.col("refs").desc(), F.col("url").asc()
+                )
+            ),
+        )
+        .observe(
+            fetch_obs,
+            F.expr(f"count_if({fetch}) AS n"),
+            F.expr(
+                "md5(concat_ws('|', array_sort(collect_list("
+                f"CASE WHEN {fetch} THEN url END)))) AS md5"
+            ),
+        )
+        .localCheckpoint(eager=True)
     )
-    rem = ranked.filter(F.col("rk") > FETCH_BUDGET).select(
-        "host", "url", "refs"
-    )
-    links = _fetched_links(fetched)
+    fetched = ranked.filter(fetch).select("host", "url")
+    rem = ranked.filter(f"NOT {fetch}").select("host", "url", "refs")
     disc = (
-        links.groupBy("host", "url")
+        _fetched_links(fetched)
+        .groupBy("host", "url")
         .agg(F.count(F.lit(1)).cast("long").alias("refs2"))
         .withColumn(
             "allowed", robots_allowed(F.col("host"), F.col("url"))
         )
+        .observe(
+            disc_obs,
+            F.coalesce(F.sum("refs2"), F.lit(0)).alias("n_links"),
+            F.count_if(~F.col("allowed")).alias("n_blocked"),
+        )
         .localCheckpoint(eager=True)
     )
     v = v.unionByName(fetched.select("url"))
-    # cand stays lazy (r15): its single consumer (the merge) re-runs
-    # only a filter + broadcast anti join over the checkpointed disc
-    # and the materialized-union v — cheaper than its own blocking job.
+    # cand stays lazy: its one consumer, the merge, re-runs only a
+    # filter and a broadcast anti join over checkpointed frames
     cand = (
         disc.filter(F.col("allowed"))
         .select("host", "url", "refs2")
@@ -371,65 +373,34 @@ def _crawl_round(
             .alias("refs"),
             F.col("refs").isNull().alias("is_new"),
         )
+        .observe(
+            merged_obs,
+            F.count(F.lit(1)).alias("queue_size"),
+            F.count_if("is_new").alias("n_new"),
+        )
         .localCheckpoint(eager=True)
     )
-    q = merged.select("host", "url", "refs")
-    # one audit row: chained 1-row scalar crossJoins (the
-    # corpus_funnel_stats / packing_stats shape)
+    fetched_n, disc_n, merged_n = fetch_obs.get, disc_obs.get, merged_obs.get
     audit = (
-        fetched.agg(
-            F.count(F.lit(1)).cast("long").alias("n_fetched"),
-            F.md5(
-                F.concat_ws("|", F.array_sort(F.collect_list("url")))
-            ).alias("fetched_md5"),
-        )
-        .crossJoin(
-            disc.agg(
-                F.coalesce(F.sum("refs2"), F.lit(0))
-                .cast("long")
-                .alias("n_links"),
-                F.coalesce(
-                    F.sum((~F.col("allowed")).cast("long")), F.lit(0)
-                )
-                .cast("long")
-                .alias("n_blocked"),
-            )
-        )
-        .crossJoin(
-            merged.agg(
-                F.count(F.lit(1)).cast("long").alias("queue_size"),
-                F.coalesce(
-                    F.sum(F.col("is_new").cast("long")), F.lit(0)
-                )
-                .cast("long")
-                .alias("n_new"),
-            )
-        )
-        .crossJoin(
-            v.agg(F.count(F.lit(1)).cast("long").alias("visited_size"))
-        )
-        .select(
-            F.lit(k).cast("int").alias("round"),
-            "n_fetched",
-            "n_links",
-            "n_blocked",
-            "n_new",
-            "queue_size",
-            "visited_size",
-            "fetched_md5",
-        )
+        k,
+        fetched_n["n"],
+        disc_n["n_links"],
+        disc_n["n_blocked"],
+        merged_n["n_new"],
+        merged_n["queue_size"],
+        n_visited + fetched_n["n"],
+        fetched_n["md5"],
     )
-    return q, v, audit
+    return merged.select("host", "url", "refs"), v, audit
 
 
 def _initial_state(
     spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """(q0, v0): the robots-allowed combined queue with ref counts,
-    and the corpus's own URLs as the seed visited set."""
+) -> tuple[DataFrame, DataFrame, int]:
+    """(q0, v0, |v0|): the robots-allowed combined queue with ref
+    counts, the corpus's own URLs as the seed visited set, and that
+    set's size, observed on its checkpoint."""
     docs = load_table(spark, sf_dir, "documents")
-    # r15: per-host join gate over the checkpointed queue (see
-    # fetch_schedule) instead of re-parsing robots.txt per queue row.
     cq = (
         crawl_queue_combined(spark, sf_dir)
         .select(
@@ -441,11 +412,9 @@ def _initial_state(
         )
         .localCheckpoint(eager=True)
     )
-    # q0 keeps its eager checkpoint: round 1 consumes it three times
-    # (fetched, rem in the merge, rem in the audit), and the lazy
-    # form re-runs the gate's host-distinct shuffle in each — A/B'd
-    # r15, no measurable win, kept the predictable single job.
+    # round 1 reads q0 twice (fetched and rem), so it is materialized
     q = robots_gate(cq).localCheckpoint(eager=True)
+    size = Observation()
     v = (
         docs.select(
             F.concat(
@@ -456,9 +425,10 @@ def _initial_state(
             ).alias("url")
         )
         .distinct()
+        .observe(size, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
-    return q, v
+    return q, v, size.get["n"]
 
 
 def crawl_rounds_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -470,7 +440,8 @@ def crawl_rounds_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     their outlinks, gates NEW URLs through robots + the visited
     check, folds surviving candidates into the remaining queue
     (ref counts summed — link demand accumulates across rounds),
-    and re-ranks.
+    and re-ranks. The audit rows are the rounds' observed counts, as
+    one local relation.
 
     Invariant (both engines, by construction): queue and visited
     are disjoint — URLs enter the queue only via an anti join
@@ -478,12 +449,13 @@ def crawl_rounds_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     visited), so no URL is fetched twice. pytest pins monotone
     visited growth, the per-round count identities, queue/visited
     disjointness, and frontier exhaustion on a closed fixture."""
-    q, v = _initial_state(spark, sf_dir)
-    audits: list[DataFrame] = []
+    q, v, n_visited = _initial_state(spark, sf_dir)
+    audits = []
     for k in range(1, CRAWL_ROUNDS + 1):
-        q, v, audit = _crawl_round(k, q, v)
+        q, v, audit = _crawl_round(k, q, v, n_visited)
         audits.append(audit)
-    return reduce(DataFrame.unionByName, audits)
+        n_visited = audit[6]  # visited_size
+    return local_frame(spark, audits, AUDIT_SCHEMA)
 
 
 def _cr_round_sql(k: int) -> str:

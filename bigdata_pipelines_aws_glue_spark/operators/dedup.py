@@ -519,9 +519,10 @@ def incremental_neardup_pairs(
     sidecar index written at ingest — recomputed here because the
     frozen test corpus ships none; the join shape is identical.
     Output: (new_id, corpus_id, jaccard >= threshold)."""
+    from bigdata_pipelines_aws_glue_spark.operators.skew import spread
 
     def bands(docs: DataFrame, col: str) -> DataFrame:
-        sig = minhash_signatures_pandas(docs).filter(F.size("sig") > 0)
+        sig = minhash_signatures_pandas(spread(docs)).filter(F.size("sig") > 0)
         return _bands(sig.withColumnRenamed("doc_id", col), col)
 
     cand = (

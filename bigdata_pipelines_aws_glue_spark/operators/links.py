@@ -24,7 +24,7 @@ Python workers anywhere.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata_pipelines_aws_glue_spark import registry
@@ -50,6 +50,7 @@ from bigdata_pipelines_aws_glue_spark.operators.urls import (
     resolve_ref,
 )
 from bigdata_pipelines_aws_glue_spark.operators.skew import spread
+from bigdata_pipelines_aws_glue_spark.sources.local import local_frame
 from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
 
 _HREF_RE = r'href="([^"]*)"'
@@ -996,17 +997,13 @@ def lpa_labels(edges: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
     per-node window, one label join — all shuffles on node keys,
     nothing all-pairs; state is one (node, label) row per node.
 
-    r15 (optimization): ``pick`` IS the next label frame. Every lab
-    node is a ``ue`` src (lab is built from distinct src, and the
-    undirected frame mirrors every edge), every neighbour is itself
-    a lab node, so ``cnt`` produces at least one row — and ``pick``
-    exactly one row — for EVERY node, for ANY input graph: the old
-    left-join-back-to-lab with a coalesce was a structural no-op
-    (seeded random-graph replay pytest re-verified). With the state
-    consumed once per round the rounds chain LAZILY (one job instead
-    of four blocking checkpoints); only the final frame checkpoints
-    for multi-consuming callers. Measured 1.46 s -> ~1.1 s at sf0.1,
-    labels identical."""
+    ``pick`` has exactly one row per node, for any input graph:
+    every lab node is a ``ue`` src (lab is built from distinct src,
+    and the undirected frame mirrors every edge) and every neighbour
+    is itself a lab node, so ``cnt`` has at least one row per node.
+    ``pick`` is therefore the next label frame, each round reads the
+    state once, and the rounds chain lazily; only the final frame is
+    checkpointed, for callers that read it more than once."""
     ue = _undirected(edges)
     lab = (
         ue.select(F.col("src").alias("node"))
@@ -1121,59 +1118,59 @@ def kcore_peel_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Graph/state discipline shared with LPA: ``_undirected``'s
     checkpointed edge frame, per-round eager checkpoints, each
     round = one degree aggregation + two node-keyed semi-joins —
-    edge-linear per round, nothing all-pairs. The per-round 1-row
-    count aggregates crossJoin into the audit row (whitelisted, the
-    ``crawl_rounds_audit`` shape). A node that keeps degree >= k
-    but loses all neighbours leaves the edge frame and counts as
-    dropped the SAME round — both engines share this convention by
-    construction (node set = edge endpoints)."""
-    return kcore_peel(_undirected(_doc_edges(spark, sf_dir)))
+    edge-linear per round, nothing all-pairs. The audit rows are
+    counts observed on those checkpoints, as one local relation. A
+    node that keeps degree >= k but loses all neighbours leaves the
+    edge frame and counts as dropped the SAME round — both engines
+    share this convention by construction (node set = edge
+    endpoints)."""
+    return local_frame(
+        spark,
+        kcore_peel(_undirected(_doc_edges(spark, sf_dir))),
+        "round int NOT NULL, n_nodes bigint NOT NULL, n_edges bigint, "
+        "n_dropped bigint NOT NULL, converged boolean NOT NULL",
+    )
 
 
-def kcore_peel(e: DataFrame) -> DataFrame:
+def kcore_peel(e: DataFrame) -> list[tuple]:
     """The peel kernel over an arbitrary checkpointed undirected
-    edge frame — factored (the ``capped_waterfill`` discipline) so
-    pytest can replay it against a pure-Python reference on seeded
-    random graphs."""
-    audits: list[DataFrame] = []
-    for r in range(1, KCORE_ROUNDS + 1):
-        before = e.agg(
-            F.countDistinct("src").cast("long").alias("nodes_before")
-        )
-        deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    edge frame -> the audit rows ``(round, n_nodes, n_edges,
+    n_dropped, converged)`` — factored (the ``capped_waterfill``
+    discipline) so pytest can replay it against a pure-Python
+    reference on seeded random graphs.
+
+    Observed metrics reject DISTINCT, so node counts come from the
+    degree table, which has one row per node of ``e``: its row count
+    is observed below the ``KCORE_K`` filter, inside ``keep``'s
+    checkpoint, and round r's surviving nodes are round r+1's
+    degree rows. The final edge frame's node count is one scalar
+    count after the loop."""
+    nodes: list[int] = []
+    edges: list[int] = []
+    for _ in range(KCORE_ROUNDS):
+        n_deg, n_e = Observation(), Observation()
         keep = (
-            deg.filter(F.col("deg") >= KCORE_K)
+            e.groupBy("src")
+            .agg(F.count(F.lit(1)).alias("deg"))
+            .observe(n_deg, F.count(F.lit(1)).alias("n"))
+            .filter(F.col("deg") >= KCORE_K)
             .select(F.col("src").alias("node"))
             .localCheckpoint(eager=True)
         )
         e = (
-            e.join(keep.select(F.col("node").alias("src")), "src")
-            .join(keep.select(F.col("node").alias("dst")), "dst")
-            .select("src", "dst")
+            e.join(keep.withColumnRenamed("node", "src"), "src", "left_semi")
+            .join(keep.withColumnRenamed("node", "dst"), "dst", "left_semi")
+            .observe(n_e, F.count(F.lit(1)).alias("n"))
             .localCheckpoint(eager=True)
         )
-        after = e.agg(
-            F.countDistinct("src").cast("long").alias("n_nodes"),
-            F.expr("CAST(count(1) DIV 2 AS BIGINT)").alias("n_edges"),
-        )
-        audit = (
-            before.crossJoin(F.broadcast(after))
-            .select(
-                F.lit(r).cast("int").alias("round"),
-                "n_nodes",
-                "n_edges",
-                (F.col("nodes_before") - F.col("n_nodes"))
-                .cast("long")
-                .alias("n_dropped"),
-            )
-            .withColumn(
-                "converged", F.col("n_dropped") == F.lit(0)
-            )
-        )
-        audits.append(audit)
-    from functools import reduce
-
-    return reduce(DataFrame.unionByName, audits)
+        nodes.append(n_deg.get["n"])
+        edges.append(n_e.get["n"] // 2)
+    nodes.append(e.select("src").distinct().count())
+    rows = []
+    for r in range(1, KCORE_ROUNDS + 1):
+        dropped = nodes[r - 1] - nodes[r]
+        rows.append((r, nodes[r], edges[r - 1], dropped, dropped == 0))
+    return rows
 
 
 def _kcore_round_sql(r: int) -> str:

@@ -7,8 +7,10 @@ from __future__ import annotations
 import hashlib
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from bigdata_pipelines_aws_glue_spark.operators.crawlloop import (
+    AUDIT_SCHEMA,
     CRAWL_ROUNDS,
     FETCH_BUDGET,
     WAVE_S,
@@ -18,6 +20,10 @@ from bigdata_pipelines_aws_glue_spark.operators.crawlloop import (
     fetch_schedule,
     sitemap_recrawl,
 )
+
+
+def _row(audit: tuple) -> dict:
+    return dict(zip(StructType.fromDDL(AUDIT_SCHEMA).names, audit))
 
 
 def test_fetch_schedule_arithmetic(spark, sf_dir):
@@ -84,8 +90,9 @@ def test_recrawl_policy_branches(spark, sf_dir):
 
 
 def test_crawl_rounds_count_identities(spark, sf_dir):
-    q0, v0 = _initial_state(spark, sf_dir)
+    q0, v0, n_v0 = _initial_state(spark, sf_dir)
     q0_size, v0_size = q0.count(), v0.count()
+    assert n_v0 == v0_size  # the observed seed size
     rows = sorted(
         crawl_rounds_audit(spark, sf_dir).collect(),
         key=lambda r: r["round"],
@@ -109,11 +116,12 @@ def test_crawl_rounds_count_identities(spark, sf_dir):
 
 
 def test_crawl_queue_visited_disjoint(spark, sf_dir):
-    q, v = _initial_state(spark, sf_dir)
+    q, v, n_visited = _initial_state(spark, sf_dir)
     fetched_all: set[str] = set()
     for k in (1, 2):
         q_urls_before = {r["url"] for r in q.select("url").collect()}
-        q, v, _ = _crawl_round(k, q, v)
+        q, v, audit = _crawl_round(k, q, v, n_visited)
+        n_visited = _row(audit)["visited_size"]
         q_urls = {r["url"] for r in q.select("url").collect()}
         v_urls = {r["url"] for r in v.select("url").collect()}
         assert not q_urls & v_urls  # disjointness invariant
@@ -135,19 +143,19 @@ def test_frontier_exhaustion_closed_fixture(spark):
         "host string, url string, refs long",
     )
     v = spark.createDataFrame([], "url string")
-    sizes, fetches = [], []
+    sizes, fetches, n_visited = [], [], 0
     for k in (1, 2, 3):
-        q, v, audit = _crawl_round(k, q, v)
-        row = audit.collect()[0]
+        q, v, audit = _crawl_round(k, q, v, n_visited)
+        row = _row(audit)
         assert row["n_links"] == 0  # assets host: leaves only
         sizes.append(row["queue_size"])
         fetches.append(row["n_fetched"])
+        n_visited = row["visited_size"]
     assert fetches == [FETCH_BUDGET, n - FETCH_BUDGET, 0]
     assert sizes == [n - FETCH_BUDGET, 0, 0]
-    assert v.count() == n
+    assert v.count() == n == n_visited
     # an empty fetch round still emits a stable attestation hash
-    final = audit.collect()[0]
-    assert final["fetched_md5"] == hashlib.md5(b"").hexdigest()
+    assert row["fetched_md5"] == hashlib.md5(b"").hexdigest()
 
 
 def _py_robots_allowed(host: str, url: str) -> bool:
@@ -262,9 +270,9 @@ def test_crawl_round_matches_python_replay_random(spark):
         )
         pq, pv = dict(queue), set(visited)
         for k in (1, 2):
-            q, v, audit_df = _crawl_round(k, q, v)
+            q, v, audit = _crawl_round(k, q, v, len(pv))
             pq, pv, want = _py_crawl_round(pq, pv)
-            row = audit_df.collect()[0]
+            row = _row(audit)
             got = {kk: row[kk] for kk in want}
             assert got == want, f"seed {seed} round {k}: {got} != {want}"
             got_q = {
@@ -273,3 +281,5 @@ def test_crawl_round_matches_python_replay_random(spark):
             }
             assert got_q == pq, f"seed {seed} round {k} queue"
             assert {r["url"] for r in v.collect()} == pv
+            # the running visited_size is the multiset union's size
+            assert v.count() == row["visited_size"]

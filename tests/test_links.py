@@ -379,9 +379,7 @@ def test_kcore_matches_python_replay_random(spark):
             (rng.randrange(n), rng.randrange(n)) for _ in range(m)
         ]
         df = spark.createDataFrame(edges, "src long, dst long")
-        got = sorted(
-            tuple(r) for r in kcore_peel(_undirected(df)).collect()
-        )
+        got = sorted(kcore_peel(_undirected(df)))
         want = _py_kcore_rounds(edges, KCORE_K, KCORE_ROUNDS)
         assert got == want, f"seed {seed}: {got} != {want}"
 

@@ -97,12 +97,6 @@ WHITELIST: dict[str, dict[str, str]] = {
         "bounded domain list; candidates are <= SCHED_SLOTS x |languages| "
         "rows so the global stride rank window is metadata-sized",
     },
-    "kcore_peel_audit": {
-        "BroadcastNestedLoopJoin": "per-round audit row: the 1-row "
-        "nodes-before aggregate crossJoined with the 1-row after "
-        "aggregate (the crawl_rounds_audit shape); the peel itself is "
-        "node-keyed semi joins",
-    },
     "mixture_sample_manifest": {
         "BroadcastNestedLoopJoin": "the interleave schedule's own scalar "
         "totals (see mixture_interleave_schedule) upstream of the "
@@ -299,12 +293,6 @@ WHITELIST: dict[str, dict[str, str]] = {
         "BroadcastNestedLoopJoin": "per-water-filling-round 1-row surplus/weight totals "
         "crossJoined onto the bounded domain list — scalar joins "
         "(the mixture shape, unrolled WF_ROUNDS times)",
-    },
-    "crawl_rounds_audit": {
-        "BroadcastNestedLoopJoin": "per-round 1-row fetched/links/blocked/new/queue/"
-        "visited aggregates chained by scalar crossJoins into the "
-        "round's single audit row — metadata-sized by construction "
-        "(the corpus_funnel_stats shape)",
     },
     "hll_vocab_rollup": {
         "BroadcastNestedLoopJoin": "1-row global-exact x 1-row union-estimate crossJoin for the ALL "
