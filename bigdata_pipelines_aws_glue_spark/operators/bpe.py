@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigdata_pipelines_aws_glue_spark import registry
+from bigdata_pipelines_aws_glue_spark.hints import maybe_broadcast
 from bigdata_pipelines_aws_glue_spark.operators.dedup import _tokens
 from bigdata_pipelines_aws_glue_spark.sources.local import local_frame
 from bigdata_pipelines_aws_glue_spark.sources.readers import load_table
@@ -289,6 +290,34 @@ _BPE_UNIONS = "\nUNION ALL\n".join(
 BPE_ORACLE = "WITH " + ",\n".join(_bpe_ctes()) + "\n" + _BPE_UNIONS
 
 
+def _vocab_words(
+    docs: DataFrame, text: str, vocab: DataFrame, how: str = "inner"
+) -> DataFrame:
+    """The apply step every learned-BPE consumer shares: the non-empty
+    whitespace words of ``docs``' ``text`` column, one row per
+    (doc_id, word) occurrence, joined on ``word`` to the trained
+    ``vocab`` (bounded by ``MAX_VOCAB_WORDS``, so broadcast). ``how``
+    is the caller's: ``inner`` drops words the vocabulary never saw,
+    ``left`` keeps them with NULL vocab columns."""
+    words = docs.select(
+        "doc_id", F.explode(_tokens(F.col(text))).alias("word")
+    ).filter(F.length("word") > 0)
+    return words.join(maybe_broadcast(vocab), "word", how)
+
+
+def _vocab_words_sql(src: str, text: str, join: str = "JOIN") -> str:
+    """DuckDB twin of :func:`_vocab_words`: the FROM/WHERE clause over
+    ``{src}``'s words (alias ``w``) joined to the final vocab
+    ``v{NUM_MERGES + 1}`` (alias ``v``); the caller adds its SELECT
+    and GROUP BY."""
+    return f"""FROM (
+    SELECT doc_id, unnest(string_split(trim({text}), ' ')) AS word
+    FROM {src}
+) w
+{join} v{NUM_MERGES + 1} v ON w.word = v.word
+WHERE length(w.word) > 0"""
+
+
 def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Close the train->apply loop: ENCODE every document with the
     merges just learned from this corpus (``token_count_bpe`` applies
@@ -303,16 +332,11 @@ def bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     words started from (chars + one ``</w>`` terminal per word), the
     BPE token count after the learned merges, and the compression in
     exact integer ppm — all integers, hash-exact across engines."""
-    from bigdata_pipelines_aws_glue_spark.hints import maybe_broadcast
-
     vocab = train_bpe(spark, sf_dir)[1].select(
         "word", F.size("syms").alias("n_syms"), F.length("word").alias("wlen")
     )
     docs = load_table(spark, sf_dir, "documents")
-    words = docs.select(
-        "doc_id", F.explode(_tokens(F.col("text"))).alias("word")
-    ).filter(F.length("word") > 0)
-    enc = words.join(maybe_broadcast(vocab), "word")
+    enc = _vocab_words(docs, "text", vocab)
     return enc.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_words"),
         F.sum(F.col("wlen") + F.lit(1)).cast("long").alias("n_char_syms"),
@@ -342,12 +366,7 @@ SELECT doc_id,
        CAST(floor(sum(len(v.syms)) * 1000000.0
                   / sum(length(w.word) + 1) + 0.5) AS BIGINT)
            AS compression_ppm
-FROM (
-    SELECT doc_id, unnest(string_split(trim(text), ' ')) AS word
-    FROM documents
-) w
-JOIN v{NUM_MERGES + 1} v ON w.word = v.word
-WHERE length(w.word) > 0
+{_vocab_words_sql("documents", "text")}
 GROUP BY doc_id
 """
 )

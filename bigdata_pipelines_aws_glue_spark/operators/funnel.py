@@ -1,5 +1,5 @@
-"""End-to-end corpus funnel ([north-star], VERDICT_r13 item 1): ONE
-hash-attested composition of the individually attested families —
+"""End-to-end corpus funnel ([north-star]): ONE hash-attested
+composition of the individually attested families —
 
     warc.gz bytes  ->  per-member bounded inflate   (``warcgz.py``)
     -> Content-Length record parse                  (``warc.py``)
@@ -37,33 +37,34 @@ per-row JVM higher-order work (transform/filter/aggregate over the
 block array — NO explode, zero shuffle), URL dedup and the host cap
 are two windows over metadata-width rows, the vocab join is a
 bounded broadcast, and packing shuffles only (doc_id, tok) pairs
-into per-shard folds. ``corpus_funnel_stats`` branches several 1-row
-aggregates off two ``localCheckpoint``-ed frames (the
-``link_pagerank`` pattern) so the zlib chain runs ONCE, not once per
-stage count; the final combine is chained 1-row scalar crossJoins
-(the ``packing_stats`` shape).
+into per-shard folds (``packing.py``'s next-fit kernel, reused).
+``corpus_funnel_stats`` checkpoints the parsed, the URL-deduped and
+the token frames so the zlib chain runs ONCE, and every stage count
+it can rides, as an observed metric, the checkpoint that already
+scans those rows; only the host-cap count and the packing totals
+are aggregates, joined by one 1-row scalar crossJoin.
 
 The DuckDB twin replays the chain from ``documents`` without gzip
 (the ``warcgz.py`` oracle pattern: DuckDB cannot gunzip, so the hash
 match proves Spark's compress -> split -> inflate -> parse ->
 extract -> curate -> encode -> pack equals the direct replay), with
-every multiply-referenced CTE ``MATERIALIZED`` (the r13 CTE-inlining
-lesson).
+every multiply-referenced CTE ``MATERIALIZED`` (DuckDB inlines a
+plain CTE into each reference, so an unmaterialized one would replay
+the chain once per consumer).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata_pipelines_aws_glue_spark import registry
-from bigdata_pipelines_aws_glue_spark.hints import maybe_broadcast
 from bigdata_pipelines_aws_glue_spark.operators.bpe import (
-    NUM_MERGES,
     _bpe_ctes,
+    _vocab_words,
+    _vocab_words_sql,
     train_bpe,
 )
-from bigdata_pipelines_aws_glue_spark.operators.dedup import _tokens
 from bigdata_pipelines_aws_glue_spark.operators.markup import (
     _ANCHOR_TEXT_RE,
     _strip_sql,
@@ -71,10 +72,15 @@ from bigdata_pipelines_aws_glue_spark.operators.markup import (
     strip_markup,
 )
 from bigdata_pipelines_aws_glue_spark.operators.packing import (
-    DOCS_PER_SHARD,
-    SEQ_BUDGET,
-    _pack_step,
+    _fold_chain_sql,
+    _manifest,
+    _manifest_sql,
+    _next_fit,
+    _next_fit_sql,
     _packed,
+    _shard_list_sql,
+    _totals,
+    _totals_sql,
 )
 from bigdata_pipelines_aws_glue_spark.operators.text import (
     GOPHER_MAX_BULLET_RATIO,
@@ -214,10 +220,7 @@ def _survivor_tokens(
         "word", F.size("syms").alias("n_syms")
     )
     kept = curated.filter(gopher_keep(F.col("content")))
-    words = kept.select(
-        "doc_id", F.explode(_tokens(F.col("content"))).alias("word")
-    ).filter(F.length("word") > 0)
-    enc = words.join(maybe_broadcast(vocab), "word", "left")
+    enc = _vocab_words(kept, "content", vocab, "left")
     return enc.groupBy("doc_id").agg(
         F.sum(
             F.coalesce(F.col("n_syms"), F.length("word") + F.lit(1))
@@ -240,21 +243,7 @@ def corpus_funnel_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode. One linear plan, no branching."""
     curated = _host_cap(_dedup_urls(_base_frame(spark, sf_dir)))
     toks = _survivor_tokens(spark, sf_dir, curated)
-    return _packed(toks).select(
-        "shard",
-        F.col("q.seq_idx").alias("seq_idx"),
-        F.col("q.n_docs").alias("n_docs"),
-        F.col("q.n_tokens").alias("n_tokens"),
-        F.col("q.n_trunc").alias("n_trunc_tokens"),
-        F.floor(
-            F.col("q.n_tokens") * F.lit(1000000.0) / F.lit(SEQ_BUDGET)
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("fill_ppm"),
-        F.col("q.first_doc").alias("first_doc_id"),
-        F.col("q.last_doc").alias("last_doc_id"),
-    )
+    return _manifest(_packed(toks, _next_fit))
 
 
 def corpus_funnel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -262,32 +251,57 @@ def corpus_funnel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     unique URLs -> host cap -> quality), the OOV word count, and the
     packing totals with visible conservation (``n_packed_tokens +
     n_truncated_tokens == n_input_tokens``). The zlib chain runs once
-    (checkpointed), the counts branch off it."""
-    base = _base_frame(spark, sf_dir).localCheckpoint(eager=True)
-    deduped = _dedup_urls(base).localCheckpoint(eager=True)
+    (checkpointed); each stage count rides the checkpoint that scans
+    its rows as an observed metric (merged from per-task
+    accumulators, so independent of partitioning). The host-capped
+    frame is never checkpointed, so its count and the packing totals
+    stay 1-row aggregates."""
+    n = F.count(F.lit(1)).cast("long")
+    records, urls, kept = Observation(), Observation(), Observation()
+    base = (
+        _base_frame(spark, sf_dir)
+        .observe(records, n.alias("n_records"))
+        .localCheckpoint(eager=True)
+    )
+    deduped = (
+        _dedup_urls(base)
+        .observe(urls, n.alias("n_unique_urls"))
+        .localCheckpoint(eager=True)
+    )
     curated = _host_cap(deduped)
-    toks = _survivor_tokens(spark, sf_dir, curated).localCheckpoint(
-        eager=True
+    toks = (
+        _survivor_tokens(spark, sf_dir, curated)
+        .observe(
+            kept,
+            n.alias("n_quality_kept"),
+            F.sum("n_oov").cast("long").alias("n_oov_words"),
+            F.sum("tok").cast("long").alias("n_input_tokens"),
+        )
+        .localCheckpoint(eager=True)
     )
-    a = base.agg(F.count(F.lit(1)).cast("long").alias("n_records"))
-    b = deduped.agg(
-        F.count(F.lit(1)).cast("long").alias("n_unique_urls")
+    got = {**records.get, **urls.get, **kept.get}
+    host = curated.agg(n.alias("n_after_host_cap"))
+    pack = _totals(_packed(toks, _next_fit))
+
+    def lit(name: str) -> Column:
+        return F.lit(got[name]).cast("long").alias(name)
+
+    def total(name: str) -> Column:
+        # a SUM over no rows is NULL, so the column stays nullable
+        any_kept = F.lit(got["n_quality_kept"]) > 0
+        return F.when(any_kept, F.lit(got[name]).cast("long")).alias(name)
+
+    return host.crossJoin(pack).select(
+        lit("n_records"),
+        lit("n_unique_urls"),
+        "n_after_host_cap",
+        lit("n_quality_kept"),
+        total("n_oov_words"),
+        total("n_input_tokens"),
+        "n_sequences",
+        "n_packed_tokens",
+        "n_truncated_tokens",
     )
-    c = curated.agg(
-        F.count(F.lit(1)).cast("long").alias("n_after_host_cap")
-    )
-    d = toks.agg(
-        F.count(F.lit(1)).cast("long").alias("n_quality_kept"),
-        F.sum("n_oov").cast("long").alias("n_oov_words"),
-        F.sum("tok").cast("long").alias("n_input_tokens"),
-    )
-    e = _packed(toks).agg(
-        F.count(F.lit(1)).cast("long").alias("n_sequences"),
-        F.sum("q.n_tokens").cast("long").alias("n_packed_tokens"),
-        F.sum("q.n_trunc").cast("long").alias("n_truncated_tokens"),
-    )
-    # chained 1-row scalar crossJoins (the packing_stats shape).
-    return a.crossJoin(b).crossJoin(c).crossJoin(d).crossJoin(e)
 
 
 # ------------------------------------------------ DuckDB twins
@@ -385,55 +399,21 @@ fdt AS MATERIALIZED (
                 AS BIGINT) AS tok,
            CAST(sum(CASE WHEN v.word IS NULL THEN 1 ELSE 0 END)
                 AS BIGINT) AS n_oov
-    FROM (
-        SELECT doc_id, unnest(string_split(trim(content), ' ')) AS word
-        FROM gq
-    ) w
-    LEFT JOIN v{NUM_MERGES + 1} v ON w.word = v.word
-    WHERE length(w.word) > 0
+    {_vocab_words_sql("gq", "content", "LEFT JOIN")}
     GROUP BY w.doc_id
 ),
-fsh AS MATERIALIZED (
-    SELECT CAST(doc_id // {DOCS_PER_SHARD} AS BIGINT) AS shard,
-           list(struct_pack(doc_id := doc_id, tok := tok)
-                ORDER BY doc_id) AS lst
-    FROM fdt
-    GROUP BY 1
-),
-k0 AS MATERIALIZED (
-    SELECT shard, lst,
-           CAST([] AS STRUCT(seq_idx INT, n_docs INT, n_tokens INT,
-                             n_trunc INT, first_doc BIGINT,
-                             last_doc BIGINT)[]) AS seqs
-    FROM fsh
-),
+{_shard_list_sql("fsh", "fdt")},
+{_fold_chain_sql("k", "fsh", _next_fit_sql)}
 """
-    + ",\n".join(_pack_step(i) for i in range(1, DOCS_PER_SHARD + 1))
 )
 
 
-FUNNEL_MANIFEST_ORACLE = (
-    _FUNNEL_CTES
-    + f""",
-seq AS (SELECT shard, unnest(seqs) AS q FROM k{DOCS_PER_SHARD})
-SELECT shard,
-       struct_extract(q, 'seq_idx') AS seq_idx,
-       struct_extract(q, 'n_docs') AS n_docs,
-       struct_extract(q, 'n_tokens') AS n_tokens,
-       struct_extract(q, 'n_trunc') AS n_trunc_tokens,
-       CAST(floor(struct_extract(q, 'n_tokens') * 1000000.0
-                  / {SEQ_BUDGET} + 0.5) AS BIGINT) AS fill_ppm,
-       struct_extract(q, 'first_doc') AS first_doc_id,
-       struct_extract(q, 'last_doc') AS last_doc_id
-FROM seq
-"""
-)
+FUNNEL_MANIFEST_ORACLE = _FUNNEL_CTES + _manifest_sql("k")
 
 
 FUNNEL_STATS_ORACLE = (
     _FUNNEL_CTES
     + f""",
-seq AS (SELECT unnest(seqs) AS q FROM k{DOCS_PER_SHARD}),
 sa AS (SELECT CAST(count(*) AS BIGINT) AS n_records FROM cdoc),
 ua AS (SELECT CAST(count(*) AS BIGINT) AS n_unique_urls FROM dd),
 ha AS (SELECT CAST(count(*) AS BIGINT) AS n_after_host_cap FROM hc),
@@ -443,14 +423,7 @@ qa AS (
            CAST(sum(tok) AS BIGINT) AS n_input_tokens
     FROM fdt
 ),
-pa AS (
-    SELECT CAST(count(*) AS BIGINT) AS n_sequences,
-           CAST(sum(struct_extract(q, 'n_tokens')) AS BIGINT)
-               AS n_packed_tokens,
-           CAST(sum(struct_extract(q, 'n_trunc')) AS BIGINT)
-               AS n_truncated_tokens
-    FROM seq
-)
+pa AS ({_totals_sql("k")})
 SELECT sa.n_records, ua.n_unique_urls, ha.n_after_host_cap,
        qa.n_quality_kept, qa.n_oov_words, qa.n_input_tokens,
        pa.n_sequences, pa.n_packed_tokens, pa.n_truncated_tokens

@@ -127,7 +127,7 @@ def extract_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     internal/external split (internal = the doc's own language host),
     distinct-host count, and an md5 over the SORTED http link list
     (order-insensitive content attestation)."""
-    docs = spread(load_table(spark, sf_dir, "documents"))  # r16 §2.5
+    docs = spread(load_table(spark, sf_dir, "documents"))
     html = synth_linked_html(F.col("doc_id"), F.col("lang"), F.col("text"))
     hrefs = F.regexp_extract_all(html, F.lit(_HREF_RE), F.lit(1))
     http = _http_links(html)
@@ -191,7 +191,7 @@ def link_host_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     each target host, total inlinks, distinct linking documents, and
     distinct target paths. One explode + one hash aggregation — the
     domain-cap/source-mix input shape."""
-    docs = spread(load_table(spark, sf_dir, "documents"))  # r16 §2.5
+    docs = spread(load_table(spark, sf_dir, "documents"))
     html = synth_linked_html(F.col("doc_id"), F.col("lang"), F.col("text"))
     edges = docs.select(
         "doc_id", F.explode(_http_links(html)).alias("url")
@@ -250,10 +250,10 @@ def _doc_edges(
     t1 == t2 collapses under distinct; t == doc_id is a legal
     self-loop (doc 0).
 
-    ``refs`` (optimization r16, guide §2.4): a caller that ALSO needs
-    :func:`_http_refs` (frontier_authority_rank) passes its
-    checkpointed frame so the linked-HTML synthesis + href regex scan
-    runs once per invocation instead of once per consumer. Row-set
+    ``refs``: a caller that ALSO needs :func:`_http_refs`
+    (frontier_authority_rank) passes its checkpointed frame so the
+    linked-HTML synthesis + href regex scan runs once per invocation
+    instead of once per consumer. Row-set
     identical by construction: filtering the exploded refs on
     ``internal`` equals exploding the internal-filtered array, and
     ``dst = cast(t_raw)`` is the same ``_DOC_TARGET_RE`` extract."""
@@ -277,7 +277,7 @@ def _doc_edges(
             lambda x: F.regexp_extract(x, _HOST_RE, 1) == own_host,
         )
         edges = (
-            spread(docs).select(  # r16 §2.5
+            spread(docs).select(
                 F.col("doc_id").alias("src"),
                 F.explode(internal).alias("url"),
             )
@@ -427,10 +427,11 @@ def _http_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns — (doc_id, n_http, url, host, t_raw, internal). The
     expensive part of both frontier derivations: linked-HTML
     synthesis + href extraction + host/target regexes. Factored out
-    (r16) so ``frontier_authority_rank`` can checkpoint it ONCE per
+    so ``frontier_authority_rank`` can checkpoint it ONCE per
     invocation and feed both its PageRank edge set and its frontier
     membership from the same scan."""
-    # r16 (guide §2.5): parallelize the synthesis/regex map stage.
+    # spread: the synthesis/regex map stage is embarrassingly
+    # parallel; a single-split scan would run it in one task.
     docs = spread(load_table(spark, sf_dir, "documents"))
     html = synth_linked_html(F.col("doc_id"), F.col("lang"), F.col("text"))
     own_host = F.concat(F.col("lang"), F.lit(".example.test"))
@@ -680,8 +681,9 @@ _HREF_KIND_SQL = f"""CASE
 def _exploded_hrefs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lang, href_idx, href): every href in the rel-fixture
     HTML, in document order. One narrow explode, no shuffle."""
-    # r16 (guide §2.5): parallelize the synthesis + href-extract map
-    # stage over the single-split local scan; no-op at real scale.
+    # spread: parallelize the synthesis + href-extract map stage over
+    # a single-split scan; a no-op when the scan already has enough
+    # partitions.
     docs = spread(load_table(spark, sf_dir, "documents"))
     html = synth_rel_html(F.col("doc_id"), F.col("lang"), F.col("text"))
     return docs.select(
@@ -699,8 +701,8 @@ def resolve_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     query-only, fragment-only, empty, ``mailto:`` — resolved against
     the document's base URL per RFC 3986 §5 (``urls.resolve_ref``),
     with its taxonomy class. The layer between the HTML extractor
-    and the URL canonicalizer that VERDICT r13 called out: real
-    crawl hrefs are mostly relative. Map-only regex/string work."""
+    and the URL canonicalizer: real crawl hrefs are mostly
+    relative. Map-only regex/string work."""
     hrefs = _exploded_hrefs(spark, sf_dir)
     resolved = resolve_ref(
         F.lit("https"),
@@ -741,23 +743,16 @@ def crawl_frontier_resolved(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti join on the URL string + one hash agg + one per-host
     politeness window."""
     docs = load_table(spark, sf_dir, "documents")
-    # r15: the href explode is separated from the resolution
-    # projection. Fused, the whole-stage method for this stage
+    # The href explode is separated from the resolution projection by
+    # a hash exchange. Fused, the whole-stage method for this stage
     # (generate + resolve + filter + partial agg) exceeds janino's
-    # 64 KB per-method limit — "ERROR CodeGenerator: Failed to
-    # compile" on every execution, then interpreted fallback for the
-    # entire stage (resolve_links alone compiles; the extra agg/filter
-    # code pushes THIS query over). r16 (guide §2.4): the split is now
-    # a LAZY hash exchange instead of the r15 eager checkpoint — an
-    # Exchange ends the whole-stage-codegen span just as the
-    # materialization did (stderr-verified: zero compile failures),
-    # but costs one narrow 85 k-row shuffle inside the consumer's job
-    # rather than its own blocking pass over the synthesis chain.
-    # numPartitions is pinned to defaultParallelism (derived, not a
-    # local constant) because AQE would coalesce these few metadata
-    # bytes into one partition and serialize the 16-pass resolve
-    # chain that follows. Probe: 2.80-3.25 s -> 2.42-2.67 s same
-    # session, rows identical.
+    # 64 KB per-method limit ("ERROR CodeGenerator: Failed to
+    # compile", then interpreted fallback for the entire stage); an
+    # Exchange ends the whole-stage-codegen span at the cost of one
+    # narrow shuffle inside the consumer's job. numPartitions is
+    # pinned to defaultParallelism (derived, not a local constant)
+    # because AQE would coalesce these few metadata bytes into one
+    # partition and serialize the 16-pass resolve chain that follows.
     hrefs = _exploded_hrefs(spark, sf_dir).repartition(
         spark.sparkContext.defaultParallelism, F.col("doc_id")
     )
@@ -866,13 +861,11 @@ def frontier_authority_rank(
     the bounded rank vector + one hash agg + two per-host windows —
     the ``crawl_frontier`` plan plus a single extra join, nothing
     all-pairs, no Python."""
-    # r16 (guide §2.4): the PageRank edge set and the frontier
-    # membership both start from the same linked-HTML synthesis +
-    # href/host regex scan; before, that scan ran TWICE inside this
-    # one invocation (once under _doc_edges' checkpoint, once in the
-    # main plan via _frontier_refs). One eager checkpoint of the
-    # shared (doc_id, n_http, url, host, t_raw, internal) refs frame
-    # now feeds both consumers — within-query reuse only, nothing
+    # The PageRank edge set and the frontier membership both start
+    # from the same linked-HTML synthesis + href/host regex scan: one
+    # eager checkpoint of the shared (doc_id, n_http, url, host,
+    # t_raw, internal) refs frame feeds both consumers, so the scan
+    # runs once per invocation — within-query reuse only, nothing
     # crosses invocations.
     refs = _http_refs(spark, sf_dir).localCheckpoint(eager=True)
     ranks = _pagerank_ranks(

@@ -4,25 +4,29 @@ of the JVM fold against pure-python references."""
 
 from __future__ import annotations
 
+import duckdb
 import numpy as np
 from pyspark.sql import functions as F
 
 from bigdata_pipelines_aws_glue_spark.operators.packing import (
     DOCS_PER_SHARD,
     SEQ_BUDGET,
-    _pack_fold,
+    _first_fit,
+    _fold,
+    _next_fit,
     pack_training_sequences,
     packing_stats,
 )
 
 
-def _fold(spark, pairs):
-    """Run the JVM fold on one explicit (doc_id, tok) list."""
+def _run_fold(spark, pairs, pick):
+    """Run the JVM fold with slot picker ``pick`` on one explicit
+    (doc_id, tok) list."""
     df = spark.createDataFrame(
         [([{"doc_id": d, "tok": t} for d, t in pairs],)],
         "lst array<struct<doc_id:bigint,tok:bigint>>",
     )
-    row = df.select(_pack_fold(F.col("lst")).alias("q")).collect()[0]
+    row = df.select(_fold(F.col("lst"), pick).alias("q")).collect()[0]
     return [
         (
             s["seq_idx"],
@@ -52,24 +56,29 @@ def _py_greedy(pairs, budget):
 
 def test_fold_pinned_cases(spark):
     B = SEQ_BUDGET
+
+    def nf(pairs):
+        return _run_fold(spark, pairs, _next_fit)
+
     # exact fill, then spill to a new sequence
-    assert _fold(spark, [(0, B // 2), (1, B // 2), (2, 1)]) == [
+    assert nf([(0, B // 2), (1, B // 2), (2, 1)]) == [
         (1, 2, B, 0, 0, 1),
         (2, 1, 1, 0, 2, 2),
     ]
     # oversized doc: truncated to the budget, fills its own sequence
-    assert _fold(spark, [(0, B + 37), (1, 5)]) == [
+    assert nf([(0, B + 37), (1, 5)]) == [
         (1, 1, B, 37, 0, 0),
         (2, 1, 5, 0, 1, 1),
     ]
     # greedy (not best-fit): doc 2 fits seq 1's leftover but greedy
     # already moved on when doc 1 spilled
-    assert _fold(spark, [(0, B - 10), (1, 11), (2, 10)]) == [
+    assert nf([(0, B - 10), (1, 11), (2, 10)]) == [
         (1, 1, B - 10, 0, 0, 0),
         (2, 2, 21, 0, 1, 2),
     ]
-    # empty shard list folds to no sequences
-    assert _fold(spark, []) == []
+    # empty shard list folds to no sequences, with either picker
+    assert nf([]) == []
+    assert _run_fold(spark, [], _first_fit) == []
 
 
 def test_fold_matches_python_reference_random(spark):
@@ -84,7 +93,7 @@ def test_fold_matches_python_reference_random(spark):
         [([{"doc_id": d, "tok": t} for d, t in c],) for c in cases],
         "lst array<struct<doc_id:bigint,tok:bigint>>",
     )
-    rows = df.select(_pack_fold(F.col("lst")).alias("q")).collect()
+    rows = df.select(_fold(F.col("lst"), _next_fit).alias("q")).collect()
     for case, row in zip(cases, rows):
         got = [
             (
@@ -133,29 +142,6 @@ def test_corpus_conservation_and_bounds(spark, sf_dir):
             assert s["last_doc_id"] // DOCS_PER_SHARD == shard
 
 
-def _ff_fold(spark, pairs):
-    from bigdata_pipelines_aws_glue_spark.operators.packing import (
-        _firstfit_fold,
-    )
-
-    df = spark.createDataFrame(
-        [([{"doc_id": d, "tok": t} for d, t in pairs],)],
-        "lst array<struct<doc_id:bigint,tok:bigint>>",
-    )
-    row = df.select(_firstfit_fold(F.col("lst")).alias("q")).collect()[0]
-    return [
-        (
-            s["seq_idx"],
-            s["n_docs"],
-            s["n_tokens"],
-            s["n_trunc"],
-            s["first_doc"],
-            s["last_doc"],
-        )
-        for s in row["q"]
-    ]
-
-
 def _py_firstfit(pairs, budget):
     """Pure-python reference of greedy first-fit (all bins open)."""
     seqs = []
@@ -177,8 +163,8 @@ def test_firstfit_beats_nextfit_pinned(spark):
     # first-fit packs into 2 by reopening bin 1.
     a, b, c = (B * 3) // 5, (B * 2) // 5, B // 5
     pairs = [(0, a), (1, a), (2, b), (3, b)]
-    nf = _fold(spark, pairs)
-    ff = _ff_fold(spark, pairs)
+    nf = _run_fold(spark, pairs, _next_fit)
+    ff = _run_fold(spark, pairs, _first_fit)
     assert len(nf) == 3 and len(ff) == 2
     assert ff == _py_firstfit(pairs, B)
     # conservation identical across strategies
@@ -193,15 +179,11 @@ def test_firstfit_matches_python_reference_random(spark):
         toks = rng.randint(1, SEQ_BUDGET + 200, size=n)
         base = rng.randint(0, 10_000)
         cases.append([(base + i, int(t)) for i, t in enumerate(toks)])
-    from bigdata_pipelines_aws_glue_spark.operators.packing import (
-        _firstfit_fold,
-    )
-
     df = spark.createDataFrame(
         [([{"doc_id": d, "tok": t} for d, t in c],) for c in cases],
         "lst array<struct<doc_id:bigint,tok:bigint>>",
     )
-    rows = df.select(_firstfit_fold(F.col("lst")).alias("q")).collect()
+    rows = df.select(_fold(F.col("lst"), _first_fit).alias("q")).collect()
     for case, row in zip(cases, rows):
         got = [
             (
@@ -233,9 +215,9 @@ def test_ffd_beats_firstfit_pinned(spark):
     # (3 bins); decreasing order pairs each large with a small (2).
     s, l = (B * 3) // 10, (B * 7) // 10
     pairs = [(0, s), (1, s), (2, l), (3, l)]
-    ff = _ff_fold(spark, pairs)
+    ff = _run_fold(spark, pairs, _first_fit)
     ffd_pairs = sorted(pairs, key=lambda p: (-p[1], p[0]))
-    ffd = _ff_fold(spark, ffd_pairs)
+    ffd = _run_fold(spark, ffd_pairs, _first_fit)
     assert len(ff) == 3 and len(ffd) == 2
     assert ffd == _py_ffd(pairs, B)
     # conservation identical across strategies
@@ -245,10 +227,6 @@ def test_ffd_beats_firstfit_pinned(spark):
 def test_ffd_matches_python_reference_random(spark):
     """The decreasing visit order composed with the same fold equals
     the pure-python FFD on 40 seeded shards."""
-    from bigdata_pipelines_aws_glue_spark.operators.packing import (
-        _firstfit_fold,
-    )
-
     rng = np.random.RandomState(13)
     cases = []
     for _ in range(40):
@@ -263,7 +241,7 @@ def test_ffd_matches_python_reference_random(spark):
         [([{"doc_id": d, "tok": t} for d, t in c],) for c in sorted_cases],
         "lst array<struct<doc_id:bigint,tok:bigint>>",
     )
-    rows = df.select(_firstfit_fold(F.col("lst")).alias("q")).collect()
+    rows = df.select(_fold(F.col("lst"), _first_fit).alias("q")).collect()
     for case, row in zip(cases, rows):
         got = [
             (
@@ -334,3 +312,79 @@ def test_corpus_ffd_manifest(spark, sf_dir):
         assert all(
             a >= b for a, b in zip(opening_ctoks, opening_ctoks[1:])
         )
+
+
+def test_sql_chains_agree(sf_dir):
+    """DuckDB only: the fill-compare oracle's per-strategy sequence
+    counts equal the row counts of the three manifest oracles, and
+    the stats oracle conserves tokens — the unrolled SQL chains agree
+    with one another, not only each with its Spark twin."""
+    from bigdata_pipelines_aws_glue_spark.operators.packing import (
+        FILL_COMPARE_ORACLE,
+        PACK_FF_ORACLE,
+        PACK_FFD_ORACLE,
+        PACK_SEQUENCES_ORACLE,
+        PACKING_STATS_ORACLE,
+    )
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM "
+        f"'{sf_dir}/documents.parquet'"
+    )
+    rel = con.sql(FILL_COMPARE_ORACLE)
+    row = dict(zip(rel.columns, rel.fetchone()))
+    for col, sql in (
+        ("nf_sequences", PACK_SEQUENCES_ORACLE),
+        ("ff_sequences", PACK_FF_ORACLE),
+        ("ffd_sequences", PACK_FFD_ORACLE),
+    ):
+        n = con.sql(f"SELECT count(*) FROM ({sql})").fetchone()[0]
+        assert row[col] == n > 0, col
+    rel = con.sql(PACKING_STATS_ORACLE)
+    stats = dict(zip(rel.columns, rel.fetchone()))
+    assert (
+        stats["n_packed_tokens"] + stats["n_truncated_tokens"]
+        == stats["n_input_tokens"]
+    )
+    assert stats["n_sequences"] == row["nf_sequences"]
+
+
+def test_packing_consumers_partition_and_aqe_invariant(spark, sf_dir):
+    """Seventh partition-invariance slice: the packing consumers give
+    identical rows at shuffle partitions {1, 7} x AQE on/off. The
+    funnel row's stage counts are observed metrics, merged from
+    per-task accumulators."""
+    from bigdata_pipelines_aws_glue_spark.operators.funnel import (
+        corpus_funnel_stats,
+    )
+    from bigdata_pipelines_aws_glue_spark.operators.packing import (
+        pack_sequences_ffd,
+        packing_fill_compare,
+    )
+
+    consumers = [
+        pack_training_sequences,
+        pack_sequences_ffd,
+        packing_fill_compare,
+        corpus_funnel_stats,
+    ]
+    keys = ["spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled"]
+    saved = [spark.conf.get(k) for k in keys]
+    results = {}
+    try:
+        for parts in ("1", "7"):
+            for aqe in ("true", "false"):
+                spark.conf.set(keys[0], parts)
+                spark.conf.set(keys[1], aqe)
+                results[(parts, aqe)] = [
+                    sorted(tuple(r) for r in fn(spark, sf_dir).collect())
+                    for fn in consumers
+                ]
+    finally:
+        for k, v in zip(keys, saved):
+            spark.conf.set(k, v)
+    first, *rest = results.values()
+    assert all(len(rows) > 0 for rows in first)
+    for setting, rows in results.items():
+        assert rows == first, setting

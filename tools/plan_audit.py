@@ -279,9 +279,10 @@ WHITELIST: dict[str, dict[str, str]] = {
         "comparison row — scalar joins (the packing_stats shape)",
     },
     "corpus_funnel_stats": {
-        "BroadcastNestedLoopJoin": "five 1-row stage-count aggregates chained by scalar "
-        "crossJoins into the single funnel-audit row — metadata-sized "
-        "by construction (the packing_stats shape)",
+        "BroadcastNestedLoopJoin": "1-row host-cap count x 1-row packing totals scalar "
+        "crossJoin for the single funnel-audit row (the other stage "
+        "counts are observed metrics) — metadata-sized by construction "
+        "(the packing_stats shape)",
     },
     "domain_mixture_temperature": {
         "BroadcastNestedLoopJoin": "two 1-row totals crossJoins onto the bounded domain "
